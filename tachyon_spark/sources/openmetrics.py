@@ -27,19 +27,24 @@ multi-GB scrape dumps parses in parallel at scan speed:
            native integer units (`ns_clock=False`). Lines without a
            timestamp take `default_ts`.
 
-Series resolution (`ingest_openmetrics`) is metadata-altitude and
-DISTRIBUTED (sources/series_resolve.py, r14): the batch's distinct
+`ingest_openmetrics` hands the parse to the ingest pipeline all five
+wire formats share (sources/series_resolve.py): the batch's distinct
 canonical series keys JOIN the catalog parquet — only genuinely new
-series visit the driver (one create_streams fragment write, or the
-fully distributed register_streams_df past 50k new series) — and the
-samples join a mapping semi-joined down to the batch's own keys, so a
-10^7-stream catalog never collects or broadcasts whole.
+series visit the driver — and the samples join a mapping semi-joined
+down to the batch's own keys, so a 10^7-stream catalog never collects
+or broadcasts whole.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from tachyon_spark.sources.series_resolve import (
+    _ingest_parsed,
+    _read_lines,
+    escape_label_col,
+)
 
 # one exposition sample line: name, optional {labels}, value, optional ts
 _LINE_RE = r"^([a-zA-Z_:][a-zA-Z0-9_:]*)(\{.*\})?\s+(\S+)(?:\s+(\S+))?\s*$"
@@ -136,8 +141,6 @@ def parse_openmetrics(
     # sorted(labels.items()) catalog keys (r14: same fix the
     # line-protocol arm got in r13; also canonicalizes redundant
     # text-side escapes like \t that _unescape leaves literal)
-    from tachyon_spark.sources.series_resolve import escape_label_col
-
     kv = F.sort_array(
         F.transform(
             pairs,
@@ -193,82 +196,12 @@ def ingest_openmetrics(
     pass `literal=True` for a one-line blob), or a pre-read lines
     DataFrame. Streams that don't exist yet are registered (one catalog
     batch) with `value_type`. Returns the number of samples appended."""
-    if isinstance(source, DataFrame):
-        lines = source
-    elif literal or (literal is None and "\n" in source):
-        lines = conn.spark.createDataFrame(
-            [(l,) for l in source.split("\n")], "value string"
-        )
-    else:
-        try:
-            lines = conn.spark.read.text(source)
-        except Exception as e:
-            # a one-line exposition blob has no newline, so auto-detect
-            # routed it here as a path — same trap class as the r13
-            # line-protocol red; fail with guidance, not PATH_NOT_FOUND
-            import re
-
-            if re.match(
-                r"^[a-zA-Z_:][a-zA-Z0-9_:]*(\{.*\})?\s+\S+", source
-            ):
-                raise ValueError(
-                    "ingest_openmetrics: source does not exist as a "
-                    "path but looks like exposition text — pass "
-                    f"literal=True for literal blobs: {source[:120]!r}"
-                ) from e
-            raise
-    parsed = parse_openmetrics(lines, ns_clock, default_ts).cache()
-    try:
-        # series resolution is a JOIN against the catalog parquet, not
-        # a full driver-side catalog collect (r13 VERDICT item 4): the
-        # batch's distinct series left-anti join the catalog, only NEW
-        # series visit the driver (bounded by this batch's novelty —
-        # pre-existing streams keep their own declared type), and the
-        # mapping is semi-joined down to the batch's keys before the
-        # broadcast. The resolve is the first action, so the parser's
-        # in-expression FAILFAST fires here — translate it back to the
-        # documented ValueError.
-        from tachyon_spark.sources.series_resolve import (
-            resolve_series_mapping,
-        )
-
-        series_df = parsed.select(
-            "series_key", "name", "labels"
-        ).dropDuplicates(["series_key"])
-        # materialize the WHOLE parse before any catalog mutation: the
-        # resolve's bounded take() may not scan every partition, and a
-        # malformed line surfacing later (out.count()) would raise a raw
-        # Spark error AFTER stream registration — a partially-applied
-        # ingest with an undocumented error type (ADVICE r14 #4). The
-        # cached count is the same work out.count() would do anyway.
-        try:
-            parsed.count()
-            mapping = resolve_series_mapping(conn, series_df, value_type)
-        except Exception as e:
-            msg = str(e)
-            if "unparseable OpenMetrics line" in msg:
-                start = msg.index("unparseable OpenMetrics line")
-                raise ValueError(msg[start:].splitlines()[0]) from None
-            raise
-        joined = parsed.join(F.broadcast(mapping), "series_key")
-        # integer streams store in value_int (the typed layout every
-        # reader resolves through value_column); exposition text parses
-        # as float — exact for integer magnitudes < 2^53
-        out = joined.select(
-            "stream_id",
-            "ts",
-            F.when(F.col("__int"), F.lit(None).cast("double"))
-            .otherwise(F.col("value"))
-            .alias("value"),
-            F.when(F.col("__int"), F.col("value").cast("long"))
-            .otherwise(F.lit(None).cast("long"))
-            .alias("value_int"),
-        )
-        n = out.count()
-        conn.bulk_load(out)
-        return n
-    finally:
-        parsed.unpersist()
+    lines = _read_lines(
+        conn, source, literal, r"^[a-zA-Z_:][a-zA-Z0-9_:]*(\{.*\})?\s+\S+",
+        "ingest_openmetrics",
+    )
+    parsed = parse_openmetrics(lines, ns_clock, default_ts)
+    return _ingest_parsed(conn, parsed, value_type)
 
 
 # exemplar EXTRACTION (r15 second wave — the parse path above STRIPS
@@ -296,8 +229,6 @@ def parse_openmetrics_exemplars(
     (the traced observation). Pure JVM regex like the sample parser;
     lines without exemplars simply don't match and drop out — this
     pass never FAILFASTs (the sample parse is the syntax gate)."""
-    from tachyon_spark.sources.series_resolve import escape_label_col
-
     raw = F.col("value")
     m = lambda g: F.regexp_extract(raw, _EXEMPLAR_FULL_RE, g)  # noqa: E731
     rows = lines.where(

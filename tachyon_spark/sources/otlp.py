@@ -73,9 +73,8 @@ spec's data-model half):
 Scale shape: decode runs DISTRIBUTED — `parse_otlp_metrics` is an
 Arrow-batched `mapInPandas` over binary payload rows (one row per
 request blob; bytes never leave the batch). Series registration and
-the sample join ride the shared catalog-join machinery
-(sources/series_resolve.resolve_series_mapping) — no driver-side
-catalog collect, identical to the four sibling ingests.
+the sample join ride the ingest pipeline all five wire formats share
+(sources/series_resolve.py) — no driver-side catalog collect.
 
 Reference parity: beyond-reference ingest surface (the reference's
 HTTP shell, tachyon_web_backend/src/main.rs:10-88, serves queries
@@ -97,6 +96,7 @@ from tachyon_spark.sources.remote_write import (
     _UNIT_NS,
     _uvarint,
 )
+from tachyon_spark.sources.series_resolve import _ingest_parsed, _read_blobs
 
 # parse_remote_write's schema plus an EXACT int channel: OTLP number
 # points carry an as_double/as_int oneof, and bucket/observation counts
@@ -831,10 +831,16 @@ def parse_otlp_metrics(
                             ts * mult,
                         )
                     )
-            yield pd.DataFrame(
+            pdf = pd.DataFrame(
                 rows,
                 columns=[f.name for f in OTLP_PARSED_SCHEMA.fields],
-            ).astype({"value_int": "Int64"})
+            )
+            # straight from the Python ints: a column mixing None with
+            # ints infers float64 and would round past 2^53
+            pdf["value_int"] = pd.array(
+                [r[5] for r in rows], dtype="Int64"
+            )
+            yield pdf
 
     return (
         blobs.select(F.col(payload_col))
@@ -860,67 +866,16 @@ def ingest_otlp(
     """Ingest OTLP metrics payload(s) into `conn`. `source` is a single
     request body (bytes — the HTTP POST shape), a path/glob of blob
     files (binaryFile read), or a DataFrame with a binary `content`
-    column. Series resolution/registration and the sample join ride the
-    shared distributed machinery (series_resolve.resolve_series_mapping);
-    the whole parse materializes BEFORE the catalog mutates, so a
-    malformed blob fails the ingest atomically (same contract as the
-    four sibling ingests). Returns samples appended."""
-    if isinstance(source, DataFrame):
-        blobs = source
-    elif isinstance(source, (bytes, bytearray)):
-        blobs = conn.spark.createDataFrame(
-            [(bytes(source),)], "content binary"
-        )
-    else:
-        blobs = conn.spark.read.format("binaryFile").load(source).select(
-            "content"
-        )
-    from tachyon_spark.sources.series_resolve import (
-        resolve_series_mapping,
-    )
-
+    column. The decoded batch goes through the ingest pipeline all five
+    wire formats share (series_resolve._ingest_parsed): the whole parse
+    materializes BEFORE the catalog mutates, so a malformed blob fails
+    the ingest atomically, and integer-typed streams store the exact
+    wire int channel (as_int points, counts) past 2^53. Returns samples
+    appended."""
     parsed = parse_otlp_metrics(
-        blobs, ts_unit=ts_unit, encoding=encoding
-    ).cache()
-    try:
-        # ONE job materializes the distinct-series frame AND (because
-        # dropDuplicates scans every partition) the whole parse — decode
-        # errors still fire before the catalog mutates (the atomicity
-        # contract), without the separate count pass (r16, VERDICT #3)
-        series_df = (
-            parsed.select("series_key", "name", "labels")
-            .dropDuplicates(["series_key"])
-            .localCheckpoint(eager=True)
-        )
-        mapping = resolve_series_mapping(conn, series_df, value_type)
-        # int-typed streams prefer the exact wire int channel (as_int /
-        # counts) and only fall back to the double cast for as_double
-        # points — int64 exactness survives past 2^53 (the ADVICE r14
-        # graphite-exactness contract, upheld here natively)
-        out = parsed.join(F.broadcast(mapping), "series_key").select(
-            "stream_id",
-            "ts",
-            F.when(F.col("__int"), F.lit(None).cast("double"))
-            .otherwise(F.col("value"))
-            .alias("value"),
-            F.when(
-                F.col("__int"),
-                F.coalesce(
-                    F.col("value_int"), F.col("value").cast("long")
-                ),
-            )
-            .otherwise(F.lit(None).cast("long"))
-            .alias("value_int"),
-        )
-        # appended-row count observed on the write job, not a separate
-        # count action (guide §1.2)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        conn.bulk_load(out.observe(obs, F.count(F.lit(1)).alias("n")))
-        return obs.get["n"]
-    finally:
-        parsed.unpersist()
+        _read_blobs(conn, source), ts_unit=ts_unit, encoding=encoding
+    )
+    return _ingest_parsed(conn, parsed, value_type)
 
 
 def render_otlp_metrics(

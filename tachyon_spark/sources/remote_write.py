@@ -26,9 +26,8 @@ Scale shape: decode runs DISTRIBUTED — `parse_remote_write` is an
 Arrow-batched `mapInPandas` over binary payload rows (one row per
 WriteRequest blob; the bytes never leave the batch), the same kernel
 shape as functions/multimodal.py. Series registration and the sample
-join ride the shared catalog-join machinery
-(sources/series_resolve.py:resolve_series_mapping) — no driver-side
-catalog collect, identical to the three text-ingest siblings.
+join ride the ingest pipeline all five wire formats share
+(sources/series_resolve.py) — no driver-side catalog collect.
 
 Reference parity: the reference engine's HTTP shell
 (tachyon_web_backend/src/main.rs:10-88) serves queries only; this is
@@ -39,6 +38,8 @@ line_protocol.py and openmetrics.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
+
+from tachyon_spark.sources.series_resolve import _ingest_parsed, _read_blobs
 
 __all__ = [
     "decode_write_request",
@@ -994,12 +995,11 @@ def ingest_remote_write(
     """Ingest remote_write payload(s) into `conn`. `source` is a single
     request body (bytes — the HTTP POST shape), a path/glob of blob
     files (spark binaryFile read), or a DataFrame with a binary
-    `content` column. Series resolution/registration and the sample
-    join ride the shared distributed machinery
-    (series_resolve.resolve_series_mapping); the whole parse
-    materializes BEFORE the catalog mutates, so a malformed blob fails
-    the ingest atomically (same contract as the text ingests, ADVICE
-    r14 #4). Returns samples appended.
+    `content` column. The decoded batch goes through the ingest
+    pipeline all five wire formats share (series_resolve._ingest_parsed):
+    the whole parse materializes BEFORE the catalog mutates, so a
+    malformed blob fails the ingest atomically. Returns samples
+    appended.
 
     Values are wire doubles (the Sample message carries only f64), so
     integer-typed streams store the long cast of the double — exact for
@@ -1007,54 +1007,11 @@ def ingest_remote_write(
     "1" (prompb.WriteRequest) or "2" (io.prometheus.write.v2.Request,
     remote-write 2.0 — symbol-interned labels; the HTTP endpoint
     negotiates it from Content-Type)."""
-    if isinstance(source, DataFrame):
-        blobs = source
-    elif isinstance(source, (bytes, bytearray)):
-        blobs = conn.spark.createDataFrame(
-            [(bytes(source),)], "content binary"
-        )
-    else:
-        blobs = conn.spark.read.format("binaryFile").load(source).select(
-            "content"
-        )
-    from tachyon_spark.sources.series_resolve import (
-        resolve_series_mapping,
-    )
-
     parsed = parse_remote_write(
-        blobs, ts_unit=ts_unit, compressed=compressed, proto=proto,
-        stale_markers=stale_markers,
-    ).cache()
-    try:
-        # ONE job materializes the distinct-series frame AND (because
-        # dropDuplicates scans every partition) the whole parse — decode
-        # errors still fire before the catalog mutates (the atomicity
-        # contract), without the separate count pass (r16, VERDICT #3)
-        series_df = (
-            parsed.select("series_key", "name", "labels")
-            .dropDuplicates(["series_key"])
-            .localCheckpoint(eager=True)
-        )
-        mapping = resolve_series_mapping(conn, series_df, value_type)
-        out = parsed.join(F.broadcast(mapping), "series_key").select(
-            "stream_id",
-            "ts",
-            F.when(F.col("__int"), F.lit(None).cast("double"))
-            .otherwise(F.col("value"))
-            .alias("value"),
-            F.when(F.col("__int"), F.col("value").cast("long"))
-            .otherwise(F.lit(None).cast("long"))
-            .alias("value_int"),
-        )
-        # appended-row count observed on the write job, not a separate
-        # count action (guide §1.2)
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        conn.bulk_load(out.observe(obs, F.count(F.lit(1)).alias("n")))
-        return obs.get["n"]
-    finally:
-        parsed.unpersist()
+        _read_blobs(conn, source), ts_unit=ts_unit,
+        compressed=compressed, proto=proto, stale_markers=stale_markers,
+    )
+    return _ingest_parsed(conn, parsed, value_type)
 
 
 RENDERED_SCHEMA = T.StructType(

@@ -14,10 +14,59 @@ sink a partitioned table; only trigger/checkpoint configs change.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import DataFrame
 
 from tachyon_spark.connection import SAMPLES_SCHEMA
+
+
+_BLOB_SCHEMA = (
+    "path string, modificationTime timestamp, length long, content binary"
+)
+
+
+def _start_ingest(
+    conn,
+    name: str,
+    fmt: str,
+    source_dir: str,
+    checkpoint_dir: str | None,
+    trigger_once: bool,
+    max_files_per_trigger: int,
+    append,
+):
+    """Tail `source_dir` (spark `fmt` source: text lines, binaryFile
+    blobs as a `content` column, or SAMPLES_SCHEMA parquet) and hand
+    each micro-batch to `append`. The checkpoint defaults to
+    <db>/_checkpoints/<name>. Returns the StreamingQuery.
+
+    foreachBatch + the batch writers, NOT a direct parquet sink: the
+    sink's _spark_metadata log would make every later batch read of
+    samples/ use MetadataLogFileIndex and silently hide batch-written
+    files. Exactly-once degrades to at-least-once on batch retry;
+    downstream dedup is the documented contract for replays."""
+    reader = conn.spark.readStream.format(fmt).option(
+        "maxFilesPerTrigger", max_files_per_trigger
+    )
+    if fmt == "binaryFile":
+        src = reader.schema(_BLOB_SCHEMA).load(source_dir).select("content")
+    elif fmt == "parquet":
+        src = reader.schema(SAMPLES_SCHEMA).load(source_dir)
+    else:
+        src = reader.load(source_dir)
+    writer = (
+        src.writeStream.foreachBatch(lambda batch_df, _id: append(batch_df))
+        .option(
+            "checkpointLocation",
+            checkpoint_dir
+            or os.path.join(conn.db_dir, "_checkpoints", name),
+        )
+        .outputMode("append")
+    )
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def start_stream_ingest(
@@ -30,29 +79,10 @@ def start_stream_ingest(
     """Tail `source_dir` for new parquet drops of SAMPLES_SCHEMA rows and
     append them to the connection's samples table. Returns the StreamingQuery.
     """
-    checkpoint_dir = checkpoint_dir or os.path.join(conn.db_dir, "_checkpoints", "ingest")
-    src = (
-        conn.spark.readStream.schema(SAMPLES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    return _start_ingest(
+        conn, "ingest", "parquet", source_dir, checkpoint_dir,
+        trigger_once, max_files_per_trigger, conn._write_samples,
     )
-
-    # foreachBatch + the batch writer, NOT a direct parquet sink: the sink's
-    # _spark_metadata log would make every later batch read of samples/ use
-    # MetadataLogFileIndex and silently hide batch-written files. Exactly-once
-    # degrades to at-least-once on batch retry; downstream dedup is the
-    # documented contract for replays.
-    def _append(batch_df, _batch_id):
-        conn._write_samples(batch_df)
-
-    writer = (
-        src.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_source(conn, source_dir: str, schema=None) -> DataFrame:
@@ -71,37 +101,18 @@ def start_openmetrics_ingest(
 ):
     """LIVE scrape ingestion: tail `source_dir` for OpenMetrics text
     drops (the files a scrape loop or federation pull writes) and ingest
-    each micro-batch through sources/openmetrics.ingest_openmetrics —
-    the same JVM-regexp parse, metadata-altitude series resolution
+    each micro-batch through sources/openmetrics.ingest_openmetrics
     (new metrics appearing mid-stream register their streams in that
-    batch), and batch write path. Composition, not new machinery: the
-    foreachBatch contract (at-least-once on retry) and checkpointing
-    match start_stream_ingest. Returns the StreamingQuery."""
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        conn.db_dir, "_checkpoints", "openmetrics"
-    )
-    src = (
-        conn.spark.readStream.option(
-            "maxFilesPerTrigger", max_files_per_trigger
-        )
-        .text(source_dir)
-    )
+    batch). Returns the StreamingQuery."""
+    from tachyon_spark.sources import openmetrics
 
-    def _append(batch_df, _batch_id):
-        from tachyon_spark.sources.openmetrics import ingest_openmetrics
-
-        ingest_openmetrics(
-            conn, batch_df, ns_clock=ns_clock, value_type=value_type
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start_ingest(
+        conn, "openmetrics", "text", source_dir, checkpoint_dir,
+        trigger_once, max_files_per_trigger,
+        lambda df: openmetrics.ingest_openmetrics(
+            conn, df, ns_clock=ns_clock, value_type=value_type
+        ),
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_line_protocol_ingest(
@@ -113,44 +124,21 @@ def start_line_protocol_ingest(
     precision: str = "ns",
     value_type: str = "f64",
 ):
-    """LIVE line-protocol ingestion (r13): tail `source_dir` for
-    InfluxDB line-protocol text drops (Telegraf file output, `influx
-    write` dumps, IoT gateway batches) and ingest each micro-batch
-    through sources/line_protocol.ingest_line_protocol — the same
-    JVM-regexp parse, measurement_field{tags} fan-out,
-    metadata-altitude series resolution (new measurements appearing
-    mid-stream register their streams in that batch), and batch write
-    path. Composition, not new machinery: the foreachBatch contract
-    (at-least-once on retry) and checkpointing match
-    start_stream_ingest / start_openmetrics_ingest. Returns the
+    """LIVE line-protocol ingestion: tail `source_dir` for InfluxDB
+    line-protocol text drops (Telegraf file output, `influx write`
+    dumps, IoT gateway batches) and ingest each micro-batch through
+    sources/line_protocol.ingest_line_protocol (measurement_field{tags}
+    fan-out; new measurements register in that batch). Returns the
     StreamingQuery."""
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        conn.db_dir, "_checkpoints", "line_protocol"
-    )
-    src = (
-        conn.spark.readStream.option(
-            "maxFilesPerTrigger", max_files_per_trigger
-        )
-        .text(source_dir)
-    )
+    from tachyon_spark.sources import line_protocol
 
-    def _append(batch_df, _batch_id):
-        from tachyon_spark.sources.line_protocol import (
-            ingest_line_protocol,
-        )
-
-        ingest_line_protocol(
-            conn, batch_df, precision=precision, value_type=value_type
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start_ingest(
+        conn, "line_protocol", "text", source_dir, checkpoint_dir,
+        trigger_once, max_files_per_trigger,
+        lambda df: line_protocol.ingest_line_protocol(
+            conn, df, precision=precision, value_type=value_type
+        ),
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_graphite_ingest(
@@ -162,40 +150,20 @@ def start_graphite_ingest(
     ts_unit: str = "s",
     value_type: str = "f64",
 ):
-    """LIVE Graphite plaintext ingestion (r14): tail `source_dir` for
+    """LIVE Graphite plaintext ingestion: tail `source_dir` for
     carbon-style text drops and ingest each micro-batch through
-    sources/line_protocol.ingest_graphite — the same JVM-regexp parse,
-    name{tags} series identity, distributed catalog-join resolution
-    (sources/series_resolve.py — per-batch cost is bounded by the
-    batch's own series, never the catalog size), and batch write path.
-    Completes the wire-format symmetry: all three text formats now have
-    parse + batch ingest + streaming drop-dir arms. Returns the
-    StreamingQuery."""
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        conn.db_dir, "_checkpoints", "graphite"
-    )
-    src = (
-        conn.spark.readStream.option(
-            "maxFilesPerTrigger", max_files_per_trigger
-        )
-        .text(source_dir)
-    )
+    sources/line_protocol.ingest_graphite (name{tags} series identity;
+    per-batch cost is bounded by the batch's own series, never the
+    catalog size). Returns the StreamingQuery."""
+    from tachyon_spark.sources import line_protocol
 
-    def _append(batch_df, _batch_id):
-        from tachyon_spark.sources.line_protocol import ingest_graphite
-
-        ingest_graphite(
-            conn, batch_df, ts_unit=ts_unit, value_type=value_type
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start_ingest(
+        conn, "graphite", "text", source_dir, checkpoint_dir,
+        trigger_once, max_files_per_trigger,
+        lambda df: line_protocol.ingest_graphite(
+            conn, df, ts_unit=ts_unit, value_type=value_type
+        ),
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_remote_write_ingest(
@@ -210,65 +178,43 @@ def start_remote_write_ingest(
     proto: str = "1",
     store_exemplars: bool = False,
 ):
-    """LIVE remote_write ingestion (r15): tail `source_dir` for dropped
+    """LIVE remote_write ingestion: tail `source_dir` for dropped
     WriteRequest blobs (one snappy+protobuf body per file — the shape a
     dumb HTTP front or a replayed WAL produces) and ingest each
-    micro-batch through sources/remote_write.ingest_remote_write — the
-    same distributed mapInPandas decode, catalog-join series resolution
-    (new series appearing mid-stream register in that batch), and batch
-    write path as the HTTP endpoint. binaryFile streaming source +
-    the shared foreachBatch/checkpoint contract of the three text arms.
-    `proto` "2" tails remote-write 2.0 bodies; `store_exemplars`
-    retains exemplars per batch (tachyon_spark/exemplars.py — its own
-    failure domain, like the HTTP ?exemplars=1 opt-in). Returns the
-    StreamingQuery."""
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        conn.db_dir, "_checkpoints", "remote_write"
-    )
-    src = (
-        conn.spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(source_dir)
-    )
+    micro-batch through sources/remote_write.ingest_remote_write, the
+    same path as the HTTP endpoint. `proto` "2" tails remote-write 2.0
+    bodies; `store_exemplars` retains exemplars per batch
+    (tachyon_spark/exemplars.py — its own failure domain, like the HTTP
+    ?exemplars=1 opt-in: a failed exemplar pass warns and keeps the
+    batch's committed samples). Returns the StreamingQuery."""
+    from tachyon_spark import exemplars
+    from tachyon_spark.sources import remote_write
 
-    def _append(batch_df, _batch_id):
-        from tachyon_spark.sources.remote_write import ingest_remote_write
-
-        blobs = batch_df.select("content")
-        ingest_remote_write(
-            conn,
-            blobs,
-            ts_unit=ts_unit,
-            value_type=value_type,
-            compressed=compressed,
-            proto=proto,
+    def _append(blobs):
+        remote_write.ingest_remote_write(
+            conn, blobs, ts_unit=ts_unit, value_type=value_type,
+            compressed=compressed, proto=proto,
         )
-        if store_exemplars:
-            from tachyon_spark.exemplars import (
-                extract_remote_write_exemplars,
+        if not store_exemplars:
+            return
+        # samples are committed; a raise here would re-fire the whole
+        # batch through a foreachBatch retry and double-ingest it
+        try:
+            exemplars.extract_remote_write_exemplars(
+                conn, blobs, ts_unit=ts_unit, compressed=compressed,
+                proto=proto,
+            )
+        except Exception as e:
+            warnings.warn(
+                "start_remote_write_ingest: exemplar pass failed, the "
+                f"batch's samples are kept without exemplars: {e}",
+                RuntimeWarning,
             )
 
-            try:  # samples are committed; exemplars must not re-fire
-                # the batch via a foreachBatch retry
-                extract_remote_write_exemplars(
-                    conn, blobs, ts_unit=ts_unit,
-                    compressed=compressed, proto=proto,
-                )
-            except Exception:
-                pass
-
-    writer = (
-        src.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start_ingest(
+        conn, "remote_write", "binaryFile", source_dir, checkpoint_dir,
+        trigger_once, max_files_per_trigger, _append,
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_otlp_ingest(
@@ -281,45 +227,19 @@ def start_otlp_ingest(
     value_type: str = "f64",
     encoding: str = "auto",
 ):
-    """LIVE OTLP metrics ingestion (r15 second wave): tail `source_dir`
-    for dropped ExportMetricsServiceRequest blobs (one protobuf body
-    per file, gzip self-identifying under encoding="auto" — the shape
-    an OTel Collector file exporter or a replayed HTTP log produces)
-    and ingest each micro-batch through sources/otlp.ingest_otlp — the
-    same distributed mapInPandas decode + Prometheus translation,
-    catalog-join series resolution, and batch write path as the
-    /v1/metrics endpoint. binaryFile streaming source + the shared
-    foreachBatch/checkpoint contract of the four sibling arms. Returns
-    the StreamingQuery."""
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        conn.db_dir, "_checkpoints", "otlp"
-    )
-    src = (
-        conn.spark.readStream.format("binaryFile")
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(source_dir)
-    )
+    """LIVE OTLP metrics ingestion: tail `source_dir` for dropped
+    ExportMetricsServiceRequest blobs (one protobuf body per file, gzip
+    self-identifying under encoding="auto" — the shape an OTel Collector
+    file exporter or a replayed HTTP log produces) and ingest each
+    micro-batch through sources/otlp.ingest_otlp, the same path as the
+    /v1/metrics endpoint. Returns the StreamingQuery."""
+    from tachyon_spark.sources import otlp
 
-    def _append(batch_df, _batch_id):
-        from tachyon_spark.sources.otlp import ingest_otlp
-
-        ingest_otlp(
-            conn,
-            batch_df.select("content"),
-            ts_unit=ts_unit,
-            value_type=value_type,
+    return _start_ingest(
+        conn, "otlp", "binaryFile", source_dir, checkpoint_dir,
+        trigger_once, max_files_per_trigger,
+        lambda df: otlp.ingest_otlp(
+            conn, df, ts_unit=ts_unit, value_type=value_type,
             encoding=encoding,
-        )
-
-    writer = (
-        src.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+        ),
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

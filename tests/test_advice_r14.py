@@ -12,9 +12,10 @@
    TEXT (full 64-bit range), not through the double `value` column
    (silent truncation past 2^53); fractional values fall back to the
    same double cast ingest_line_protocol uses.
-4. ingest_openmetrics / ingest_graphite must fail ATOMICALLY on a
-   malformed line anywhere in the batch: the documented ValueError,
-   raised before any stream registration mutates the catalog.
+4. ingest_openmetrics / ingest_graphite / ingest_line_protocol must
+   fail ATOMICALLY on a malformed line anywhere in the batch: the
+   documented ValueError, raised before any stream registration
+   mutates the catalog.
 """
 
 import pytest
@@ -124,4 +125,18 @@ def test_ingest_graphite_malformed_line_atomic(db):
     text = "ok.metric 1 5\n!!bad line with no value\n"
     with pytest.raises(ValueError, match="unparseable graphite line"):
         ingest_graphite(db, text, ts_unit="ns")
+    assert _catalog_names(db) == before
+
+
+@pytest.mark.parametrize("text,error", [
+    ("cpu usage=1 5\nthis is not line protocol\n",
+     "unparseable line-protocol line"),
+    ("cpu usage=1 5\nm x=1,y= 5\n", "unparseable line-protocol fields"),
+], ids=["line", "fields"])
+def test_ingest_line_protocol_malformed_line_atomic(db, text, error):
+    from tachyon_spark.sources.line_protocol import ingest_line_protocol
+
+    before = _catalog_names(db)
+    with pytest.raises(ValueError, match=error):
+        ingest_line_protocol(db, text)
     assert _catalog_names(db) == before

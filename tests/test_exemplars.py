@@ -294,3 +294,30 @@ def test_streaming_remote_write_with_exemplars(spark, tmp_path):
     assert conn.query('up{job="api"}', 0, 100).rows() == [(10, 1.0)]
     rows = query_exemplars(conn, "up", 0, 100).collect()
     assert len(rows) == 1 and rows[0].ex_labels == {"trace_id": "abc"}
+
+
+def test_streaming_exemplar_failure_warns_and_keeps_samples(
+    spark, tmp_path, monkeypatch
+):
+    """A failed exemplar pass must not re-fire the committed batch
+    through a foreachBatch retry, and must not vanish silently either."""
+    import tachyon_spark.exemplars as ex
+    from tachyon_spark.connection import Connection
+    from tachyon_spark.streaming.ingest import start_remote_write_ingest
+
+    def broken(*_a, **_k):
+        raise RuntimeError("exemplar store down")
+
+    monkeypatch.setattr(ex, "extract_remote_write_exemplars", broken)
+    src = tmp_path / "exdrops"
+    src.mkdir()
+    (src / "d1.pb").write_bytes(snappy_compress(_v1_with_exemplar()))
+    conn = Connection(str(tmp_path / "exwdb"), spark)
+    with pytest.warns(RuntimeWarning, match="exemplar store down"):
+        q = start_remote_write_ingest(
+            conn, str(src), trigger_once=True, ts_unit="ns",
+            store_exemplars=True,
+        )
+        q.awaitTermination(180)
+    assert q.exception() is None
+    assert conn.query('up{job="api"}', 0, 100).rows() == [(10, 1.0)]

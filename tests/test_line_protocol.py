@@ -111,6 +111,20 @@ def test_ingest_end_to_end(spark, tmp_path):
     assert len(conn.get_all_streams()) == 3
 
 
+def test_ingest_line_without_timestamp_raises_atomically(db):
+    """A ts-less line with no default_ts raises the documented
+    ValueError before the catalog changes: its sample would be
+    invisible to every ts-range query."""
+    before = {s.name for s in db.catalog.all_streams()}
+    with pytest.raises(ValueError, match="without a timestamp"):
+        ingest_line_protocol(db, "cpu,host=a usage=1 1000\ncpu usage=2\n")
+    assert {s.name for s in db.catalog.all_streams()} == before
+    # the same line with a default_ts ingests
+    n, _ = ingest_line_protocol(db, "cpu usage=2", default_ts=7,
+                                literal=True)
+    assert n == 1
+
+
 def test_render_round_trips_through_parse(spark):
     from tachyon_spark.sources.line_protocol import render_line_protocol
 

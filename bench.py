@@ -530,13 +530,14 @@ def main():
     # Totals and metadata go LAST so the captured tail always contains
     # them; the complete payload is also written to BENCH_FULL.json in the
     # repo so every per-query number stays readable.
-    # noise self-diagnosis (r13 VERDICT item 7): our own local[32] JVM
+    # noise self-diagnosis (r13 VERDICT item 7): our own local[N] JVM
     # drives load too, so co-tenant pressure is read from (a) the
     # PRE-session ambient loadavg and (b) loadavg sustained well above
     # the core count during the run. A flagged run means the 2x
     # round-over-round criterion should be conditioned on a quieter
-    # re-run, not read as a code regression.
-    cpus = os.cpu_count() or 32
+    # re-run, not read as a code regression. The core count is the
+    # session's own (local[N] from $SPARK_GRAFT_CPUS), not the host's.
+    cpus = spark.sparkContext.defaultParallelism
     max_load = max(loads.values(), default=0.0)
     cpu_tot1, cpu_steal1 = _cpu_stat()
     steal_pct = round(

@@ -148,6 +148,7 @@ class Connection:
         self.prometheus_extrapolation = prometheus_extrapolation
         self.approx_aggregates = approx_aggregates
         self.isin_threshold = ISIN_THRESHOLD
+        self._samples_memo: tuple | None = None
         self._recover_partial_delete()
 
     def _load_or_store_config(
@@ -525,7 +526,10 @@ class Connection:
         read; re-call cache_samples() after bulk maintenance if the hot
         set should stay pinned. At 100 TB you cache a rollup or hot
         subset, not the raw tree: the budget is executor storage memory
-        and Spark spills/evicts per its MEMORY_AND_DISK policy."""
+        and Spark spills/evicts per its MEMORY_AND_DISK policy. Spark's
+        cache matches the relation by its root path, so a pin sees only
+        the mutations made through its own Connection: a write through
+        another Connection on the same db does not invalidate it."""
         self.uncache_samples()
         df = self.samples_df()
         self._samples_cache = df.cache()
@@ -587,11 +591,59 @@ class Connection:
             fields.append(T.StructField("ts_bucket", T.LongType(), True))
         return T.StructType(fields)
 
+    def _samples_state_key(self) -> tuple:
+        """Every file under samples/ as (path, size, mtime_ns) — the
+        on-disk state the samples relation was listed from. Dot files
+        (Hadoop's `.crc` checksums, half the tree) are skipped: Spark's
+        file index never reads them."""
+        out = []
+        for root, _, files in os.walk(self.samples_path):
+            for f in files:
+                if f.startswith("."):
+                    continue
+                path = os.path.join(root, f)
+                try:
+                    st = os.stat(path)
+                except FileNotFoundError:  # removed mid-walk by a writer
+                    continue
+                out.append((path, st.st_size, st.st_mtime_ns))
+        return tuple(sorted(out))
+
     def samples_df(self) -> DataFrame:
+        """The samples relation, reused while the samples tree is unchanged.
+
+        A fresh `spark.read.parquet(samples/)` lists the tree, and the
+        hash layout's 64 `stream_bucket=` dirs exceed Spark's 32-path
+        parallel-partition-discovery threshold, so every fresh read starts
+        a distributed file-listing job before any query work. Instead the
+        relation is memoized under a driver-side state key: every
+        non-hidden file under samples/ with its size and mtime (the
+        Catalog._load idiom).
+        Spark lists the tree again only when that key changes, whoever
+        changed it — this Connection, another Connection on the same db,
+        the CLI, or a file dropped straight into the tree.
+
+        Two ordering rules keep reads fresh:
+        - the key is computed BEFORE the read, so a write landing in
+          between only forces a rebuild on the next call, never a stale
+          read;
+        - `(key, df)` is published as ONE tuple attribute: concurrent plan
+          builders (the pooled HTTP handlers) read it without a lock and
+          can never pair a new key with an old relation.
+
+        The memo holds one relation per Connection, so it stays bounded.
+        """
+        key = self._samples_state_key()
+        memo = self._samples_memo
+        if memo is not None and memo[0] == key:
+            return memo[1]
         schema = self._samples_schema()
         if not os.path.isdir(self.samples_path):
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(self.samples_path)
+            df = self.spark.createDataFrame([], schema)
+        else:
+            df = self.spark.read.schema(schema).parquet(self.samples_path)
+        self._samples_memo = (key, df)
+        return df
 
     def value_column(self, value_type: str) -> F.Column:
         """The stored value column for a stream of the given type (per-db

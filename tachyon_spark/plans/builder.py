@@ -27,14 +27,14 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass, replace
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from tachyon_spark.operators.aggregates import grouped_agg, scalar_agg
 from tachyon_spark.operators.interpolate import interpolated_binop
 from tachyon_spark.operators.select import select_range
-from tachyon_spark.operators.topk import bottom_k, top_k
+from tachyon_spark.operators.topk import bottom_k, grouped_top_k, top_k
 from tachyon_spark.promql import ast
 from tachyon_spark.types import VT_F64, VT_I64, VT_U64, is_integer, promote, result_type
 
@@ -160,6 +160,28 @@ class Plan:
 
 
 class PlanBuilder:
+    """The PromQL evaluator. This class evaluates over raw samples in
+    [start, end]; plans/range_eval.RangeEvaluator subclasses it for the
+    Prometheus step grid. Dispatch (`_eval` over `_HANDLERS`) and every
+    handler whose two forms differ only in the step key live here once.
+    A mode supplies three hooks:
+
+      - child evaluation: all recursion goes through `_eval`;
+      - `_instant`, the per-instant group key: () here (a raw aggregate
+        with no keys collapses the range to a scalar), ("ts",) on the
+        grid. Aggregates, count_values, topk, scalar() and the histogram
+        family group by their label keys plus this key;
+      - `_grouped_buckets`, the accepted child kinds of the histogram
+        family: only the grid takes a grouped `sum by (le)` input, since
+        raw aggregates collapse time.
+
+    The grid overrides the handlers whose semantics really differ:
+    selectors and windowed functions, binary operators, absent,
+    absent_over_time and the time()/vector() clock arms."""
+
+    _instant: tuple[str, ...] = ()
+    _grouped_buckets = False
+
     def __init__(self, conn, start: int | None, end: int | None):
         self.conn = conn
         self.start = start
@@ -167,99 +189,78 @@ class PlanBuilder:
 
     # ------------------------------------------------------------------ build
     def build(self, expr) -> Plan:
-        if isinstance(expr, ast.NumberLiteral):
-            return Plan("scalar", None, VT_F64, literal=float(expr.value))
-        if isinstance(expr, ast.VectorSelector):
-            return self._selector(expr)
-        if isinstance(expr, ast.MatrixSelector):
+        return self._eval(expr)
+
+    # AST node type -> handler method; a mode overrides methods, not entries
+    _HANDLERS = {
+        ast.NumberLiteral: "_number",
+        ast.VectorSelector: "_selector",
+        ast.MatrixSelector: "_bare_range",
+        ast.Subquery: "_bare_range",
+        ast.BinaryOp: "_binary",
+        ast.Aggregate: "_aggregate",
+        ast.GetK: "_getk",
+        ast.CountValues: "_count_values",
+        ast.LimitAgg: "_limit_agg",
+        ast.RangeFunc: "_range_func",
+        ast.OverTimeFunc: "_over_time_func",
+        ast.RangeCountFunc: "_range_count_func",
+        ast.DerivFunc: "_deriv_func",
+        ast.PredictLinearFunc: "_predict_linear",
+        ast.HoltWintersFunc: "_holt_winters",
+        ast.ClockFunc: "_clock_func",
+        ast.MathFunc: "_columnwise",
+        ast.ClampFunc: "_columnwise",
+        ast.RoundFunc: "_columnwise",
+        ast.CalendarFunc: "_calendar_func",
+        ast.HistogramQuantile: "_histogram_quantile",
+        ast.HistogramAgg: "_histogram_agg",
+        ast.HistogramFraction: "_histogram_fraction",
+        ast.LabelFunc: "_label_func",
+        ast.AbsentOverTime: "_absent_over_time",
+        ast.AbsentFunc: "_absent",
+        ast.SortFunc: "_sort_func",
+        ast.SortByLabelFunc: "_sort_by_label",
+    }
+
+    def _eval(self, expr) -> Plan:
+        handler = self._HANDLERS.get(type(expr))
+        if handler is None:
+            raise ValueError(f"unsupported expression: {expr!r}")
+        return getattr(self, handler)(expr)
+
+    def _number(self, node: ast.NumberLiteral) -> Plan:
+        return Plan("scalar", None, VT_F64, literal=float(node.value))
+
+    def _bare_range(self, node) -> Plan:
+        if isinstance(node, ast.MatrixSelector):
             raise ValueError(
                 "range vector (matrix selector) can only be used as the "
                 "argument of a range function (rate/increase/delta, "
                 "*_over_time, resets/changes/irate/idelta, deriv)"
             )
-        if isinstance(expr, ast.BinaryOp):
-            return self._binary(expr)
-        if isinstance(expr, ast.Aggregate):
-            return self._aggregate(expr)
-        if isinstance(expr, ast.GetK):
-            return self._getk(expr)
-        if isinstance(expr, ast.RangeFunc):
-            return self._range_func(expr)
-        if isinstance(expr, ast.OverTimeFunc):
-            return self._over_time_func(expr)
-        if isinstance(expr, ast.RangeCountFunc):
-            return self._range_count_func(expr)
-        if isinstance(expr, ast.DerivFunc):
-            return self._deriv_func(expr)
-        if isinstance(expr, ast.PredictLinearFunc):
-            return self._predict_linear(expr)
-        if isinstance(expr, ast.HoltWintersFunc):
-            return self._holt_winters(expr)
-        if isinstance(expr, ast.ClockFunc):
-            return self._clock_func(expr)
-        if isinstance(expr, ast.MathFunc):
-            return self._math_func(expr)
-        if isinstance(expr, ast.CalendarFunc):
-            return self._calendar_func(expr)
-        if isinstance(expr, ast.HistogramQuantile):
-            return self._histogram_quantile(expr)
-        if isinstance(expr, ast.HistogramAgg):
-            return self._histogram_agg(expr)
-        if isinstance(expr, ast.HistogramFraction):
-            return self._histogram_fraction(expr)
-        if isinstance(expr, ast.LabelFunc):
-            return self._label_func(expr)
-        if isinstance(expr, ast.AbsentOverTime):
-            return self._absent_over_time(expr)
-        if isinstance(expr, ast.AbsentFunc):
-            return self._absent(expr)
-        if isinstance(expr, ast.RoundFunc):
-            child = self.build(expr.child)
-            if child.kind != "vector":
-                raise ValueError("round() requires a vector input")
-            t = float(expr.to_nearest)
-            # PromQL: floor(v/t + 0.5) * t (ties round up toward +inf)
-            v = F.col("value").cast("double")
-            result = F.floor(v / F.lit(t) + F.lit(0.5)) * F.lit(t)
-            keep = [c for c in ("stream_id", "ts") if c in child.df.columns]
-            return Plan(
-                "vector", child.df.select(*keep, result.alias("value")), VT_F64,
-                streams=child.streams,
-            )
-        if isinstance(expr, ast.CountValues):
-            child = self.build(expr.child)
-            if child.kind != "vector":
-                raise ValueError("count_values requires a vector input")
-            cdf, extra = self._grouping_cols(
-                child, expr.by, expr.without, "count_values"
-            )
-            out = cdf.groupBy(
-                *extra, F.col("value").cast("string").alias(expr.label)
-            ).agg(F.count("*").alias("value"))
-            return Plan(
-                "grouped", out, VT_U64, group_cols=(*extra, expr.label)
-            )
-        if isinstance(expr, ast.Subquery):
-            raise ValueError(
-                "a subquery expr[RANGE:STEP] can only be the argument of a "
-                "windowed function (*_over_time, rate/increase/delta, "
-                "resets/changes/irate/idelta, deriv, predict_linear, "
-                "holt_winters)"
-            )
-        if isinstance(expr, ast.SortFunc):
-            return self._sort_func(expr)
-        if isinstance(expr, ast.SortByLabelFunc):
-            return self._sort_by_label(expr)
-        if isinstance(expr, ast.LimitAgg):
-            return self._limit_agg(expr)
-        if isinstance(expr, ast.ClampFunc):
-            return self._clamp_func(expr)
-        raise ValueError(f"unsupported expression: {expr!r}")
+        raise ValueError(
+            "a subquery expr[RANGE:STEP] can only be the argument of a "
+            "windowed function (*_over_time, rate/increase/delta, "
+            "resets/changes/irate/idelta, deriv, predict_linear, "
+            "holt_winters)"
+        )
+
+    def _scalar_param(self, expr, what: str) -> float:
+        """A function's scalar parameter (topk's k, limitk's k/ratio): a
+        literal, or a one-row scalar frame read on the driver."""
+        p = self._eval(expr)
+        if p.kind not in ("scalar", "topk"):
+            raise ValueError(f"{what} must be a scalar")
+        if p.literal is not None:
+            return float(p.literal)
+        row = p.df.select("value").collect()
+        return float(row[0].value) if row else 0.0
 
     def _sort_func(self, node: ast.SortFunc) -> Plan:
         """sort()/sort_desc(): vector ordered by value (ts kept). Extension;
         a global sort — at scale prefer topk for bounded results."""
-        child = self.build(node.child)
+        child = self._eval(node.child)
         if child.kind != "vector":
             raise ValueError(f"{node.func} requires a vector input")
         order = F.asc("value") if node.func == "sort" else F.desc("value")
@@ -272,7 +273,7 @@ class PlanBuilder:
         stream_id (same shape as grouped aggregation); the sort itself is
         the presentation-order global sort the sort()/sort_desc family
         already accepts at this altitude."""
-        child = self.build(node.child)
+        child = self._eval(node.child)
         if child.kind != "vector":
             raise ValueError(f"{node.func} requires a vector input")
         if "stream_id" not in child.df.columns or not child.streams:
@@ -349,18 +350,11 @@ class PlanBuilder:
         SHRINKS — no shuffle, no window. Deterministic: limitk keeps the k
         smallest stream_ids per group; limit_ratio hashes the series
         fingerprint to [0,1) via md5 and keeps u < r (complement u >= 1+r
-        for negative r — limit_ratio(r) + limit_ratio(-(1-r)) partition)."""
-        import hashlib
-
-        p_plan = self.build(node.param)
-        if p_plan.kind != "scalar":
-            raise ValueError(f"{node.func} parameter must be a scalar")
-        if p_plan.literal is not None:
-            param = float(p_plan.literal)
-        else:
-            row = p_plan.df.select("value").collect()
-            param = float(row[0].value) if row else 0.0
-        child = self.build(node.child)
+        for negative r — limit_ratio(r) + limit_ratio(-(1-r)) partition).
+        Selection is metadata-only, so both modes keep the SAME series for
+        a given param."""
+        param = self._scalar_param(node.param, f"{node.func} parameter")
+        child = self._eval(node.child)
         if child.kind != "vector":
             raise ValueError(f"{node.func} requires a vector input")
         if "stream_id" not in child.df.columns or not child.streams:
@@ -376,24 +370,6 @@ class PlanBuilder:
             out = child.df.where(F.lit(False))
         streams = tuple(s for s in child.streams if s.stream_id in kept)
         return Plan("vector", out, child.value_type, streams=streams)
-
-    def _clamp_func(self, node: ast.ClampFunc) -> Plan:
-        """clamp/clamp_min/clamp_max with literal bounds; result f64."""
-        child = self.build(node.child)
-        if child.kind != "vector":
-            raise ValueError(f"{node.func} requires a vector input")
-        v = F.col("value").cast("double")
-        if node.func == "clamp_min":
-            result = F.greatest(v, F.lit(node.args[0]))
-        elif node.func == "clamp_max":
-            result = F.least(v, F.lit(node.args[0]))
-        else:
-            result = F.least(F.greatest(v, F.lit(node.args[0])), F.lit(node.args[1]))
-        keep = [c for c in ("stream_id", "ts") if c in child.df.columns]
-        return Plan(
-            "vector", child.df.select(*keep, result.alias("value")), VT_F64,
-            streams=child.streams,
-        )
 
     _MATH = {
         "abs": F.abs,
@@ -419,6 +395,18 @@ class PlanBuilder:
         "atanh": F.atanh,
         "deg": F.degrees,
         "rad": F.radians,
+    }
+    # driver-side mirror of _MATH for literal scalars
+    _MATH_PY = {
+        "abs": abs, "ceil": math.ceil, "floor": math.floor,
+        "sqrt": math.sqrt, "exp": math.exp, "ln": math.log,
+        "sgn": lambda x: (x > 0) - (x < 0),
+        "log2": math.log2, "log10": math.log10, "sin": math.sin,
+        "cos": math.cos, "tan": math.tan, "asin": math.asin,
+        "acos": math.acos, "atan": math.atan, "sinh": math.sinh,
+        "cosh": math.cosh, "tanh": math.tanh, "asinh": math.asinh,
+        "acosh": math.acosh, "atanh": math.atanh,
+        "deg": math.degrees, "rad": math.radians,
     }
 
     @staticmethod
@@ -477,65 +465,68 @@ class PlanBuilder:
             return float(d.year)
         raise ValueError(f"unknown calendar function {func!r}")
 
-    def _calendar_func(self, node: ast.CalendarFunc) -> Plan:
-        """Prometheus calendar functions (ast.CalendarFunc): sample VALUES
-        as unix seconds UTC -> field, f64. Zero-arg = vector(time()) with
-        time()'s native-ns value converted to seconds."""
-        if node.child is None:
-            secs = float(self.start or 0) / 1e9
-            ts0 = int(self.start or 0)
-            df = self.conn.spark.range(1).select(
-                F.lit(ts0).cast("long").alias("ts"),
-                F.lit(self._calendar_py(node.func, secs)).alias("value"),
-            )
-            return Plan("vector", df, VT_F64)
-        child = self.build(node.child)
-        if child.kind == "scalar" and child.literal is not None:
-            return Plan(
-                "scalar", None, VT_F64,
-                literal=self._calendar_py(node.func, float(child.literal)),
-            )
-        if child.kind not in ("vector", "grouped"):
-            raise ValueError(f"{node.func} requires a vector input")
+    @classmethod
+    def _elementwise(cls, node):
+        """The value-Column map of an elementwise function node: math,
+        clamp/clamp_min/clamp_max (literal bounds), round(v, t) and the
+        calendar fields."""
+        if isinstance(node, ast.MathFunc):
+            return cls._MATH[node.func]
+        if isinstance(node, ast.CalendarFunc):
+            return lambda v: cls._calendar_col(node.func, v)
+        if isinstance(node, ast.RoundFunc):
+            # PromQL: floor(v/t + 0.5) * t (ties round up toward +inf)
+            t = float(node.to_nearest)
+            return lambda v: F.floor(v / F.lit(t) + F.lit(0.5)) * F.lit(t)
+        if node.func == "clamp_min":
+            return lambda v: F.greatest(v, F.lit(node.args[0]))
+        if node.func == "clamp_max":
+            return lambda v: F.least(v, F.lit(node.args[0]))
+        return lambda v: F.least(
+            F.greatest(v, F.lit(node.args[0])), F.lit(node.args[1])
+        )
+
+    def _columnwise(self, node) -> Plan:
+        """Elementwise math, clamp*, round and calendar-over-a-child: one
+        narrow projection that keeps every key column, so sample vectors,
+        grouped results and scalar frames all pass (whole-stage codegen,
+        no shuffle). The result is f64; literal scalars fold driver-side
+        where a Python mirror exists (math, calendar). Raw mode keeps abs
+        over a sample vector in its input value type (reference parity);
+        step-grid values are Prometheus floats."""
+        child = self._eval(node.child)
+        if child.literal is not None and isinstance(
+            node, (ast.MathFunc, ast.CalendarFunc)
+        ):
+            v = float(child.literal)
+            if isinstance(node, ast.MathFunc):
+                v = self._MATH_PY[node.func](v)
+            else:
+                v = self._calendar_py(node.func, v)
+            return Plan("scalar", None, VT_F64, literal=float(v))
+        func = getattr(node, "func", "round")  # RoundFunc names no func
+        if child.kind not in ("vector", "grouped", "scalar") or child.df is None:
+            raise ValueError(f"{func} requires a vector input")
+        exact = func == "abs" and child.kind == "vector" and not self._instant
+        v = F.col("value") if exact else F.col("value").cast("double")
         keep = [c for c in child.df.columns if c != "value"]
-        result = self._calendar_col(node.func, F.col("value").cast("double"))
+        out = child.df.select(*keep, self._elementwise(node)(v).alias("value"))
         return Plan(
-            child.kind, child.df.select(*keep, result.alias("value")), VT_F64,
+            child.kind, out, child.value_type if exact else VT_F64,
             group_cols=child.group_cols, streams=child.streams,
         )
 
-    def _math_func(self, node: ast.MathFunc) -> Plan:
-        """Elementwise math (extension; ast.MathFunc). Narrow column
-        expression — stays in whole-stage codegen, no shuffle."""
-        child = self.build(node.child)
-        if child.kind == "scalar":
-            if child.literal is not None:
-                import math as m
-
-                fn = {"abs": abs, "ceil": m.ceil, "floor": m.floor,
-                      "sqrt": m.sqrt, "exp": m.exp, "ln": m.log,
-                      "sgn": lambda x: (x > 0) - (x < 0),
-                      "log2": m.log2, "log10": m.log10, "sin": m.sin,
-                      "cos": m.cos, "tan": m.tan, "asin": m.asin,
-                      "acos": m.acos, "atan": m.atan, "sinh": m.sinh,
-                      "cosh": m.cosh, "tanh": m.tanh, "asinh": m.asinh,
-                      "acosh": m.acosh, "atanh": m.atanh,
-                      "deg": m.degrees, "rad": m.radians}[node.func]
-                return Plan("scalar", None, VT_F64, literal=float(fn(child.literal)))
-            out = child.df.select(
-                self._MATH[node.func](F.col("value").cast("double")).alias("value")
-            )
-            return Plan("scalar", out, VT_F64)
-        if child.kind != "vector":
-            raise ValueError(f"{node.func} requires a vector or scalar input")
-        vt = child.value_type if node.func == "abs" else VT_F64
-        col = F.col("value") if node.func == "abs" else F.col("value").cast("double")
-        result = self._MATH[node.func](col)
-        keep = [c for c in ("stream_id", "ts") if c in child.df.columns]
-        return Plan(
-            "vector", child.df.select(*keep, result.alias("value")), vt,
-            streams=child.streams,
-        )
+    def _calendar_func(self, node: ast.CalendarFunc) -> Plan:
+        """Prometheus calendar functions (ast.CalendarFunc): sample VALUES
+        as unix seconds UTC -> field, f64. Zero-arg = vector(time()), the
+        mode's evaluation clock (the query start raw, each step on the
+        grid), with its native-ns value converted to seconds."""
+        if node.child is not None:
+            return self._columnwise(node)
+        now = self._eval(ast.ClockFunc("vector", ast.ClockFunc("time")))
+        secs = F.col("value").cast("double") / F.lit(1e9)
+        out = now.df.select("ts", self._calendar_col(node.func, secs).alias("value"))
+        return Plan("vector", out, VT_F64)
 
     def _set_op(self, op: str, lhs: Plan, rhs: Plan) -> Plan:
         """and/or/unless on the ts key (extension; reference has no set ops,
@@ -588,7 +579,7 @@ class PlanBuilder:
             return self._windowed_subquery_func(
                 "range", node.func, node.child, None
             )
-        child = self.build(node.child)
+        child = self._eval(node.child)
         if child.kind != "vector":
             raise ValueError(f"{node.func} requires a vector input")
         df = child.df
@@ -772,12 +763,12 @@ class PlanBuilder:
                     f"function's window width ({msel.range_}): the inner "
                     "function's tumbling grid IS the step grid"
                 )
-            return self.build(inner), self._effective_start(msel.selector) or 0
+            return self._eval(inner), self._effective_start(msel.selector) or 0
         # generic inner expression — `(a + b)[R:S]`, `abs(a)[R:S]`, ... :
         # evaluate raw (interpolating joins and all), then snap to the
         # step grid: the NEWEST derived row per (series?, step window) —
         # the same latest-per-step contract the plain-selector form uses
-        child = self.build(inner)
+        child = self._eval(inner)
         if child.kind != "vector":
             raise ValueError(
                 "subquery inner expression must evaluate to a vector, got "
@@ -878,7 +869,7 @@ class PlanBuilder:
         """absent(v): 1 when v has no samples in range (unknown metric OR
         empty range), else empty — the dead-stream alerting primitive."""
         try:
-            child = self.build(node.child)
+            child = self._eval(node.child)
         except ValueError as e:
             if "no streams matched" in str(e):
                 one = self.conn.spark.range(1).select(F.lit(1.0).alias("value"))
@@ -899,7 +890,7 @@ class PlanBuilder:
         Zero cost in the distributed plan — grouping (`sum by`) and vector
         matching (`on()/group_left`) read labels from the plan's stream
         info, so they see the rewritten labels transparently."""
-        child = self.build(node.child)
+        child = self._eval(node.child)
         if child.kind != "vector" or not child.streams:
             raise ValueError(
                 f"{node.func} requires a label-carrying selector vector"
@@ -907,94 +898,99 @@ class PlanBuilder:
         return replace(child, streams=rewrite_label_streams(node, child.streams))
 
     def _histogram_quantile(self, node: ast.HistogramQuantile) -> Plan:
-        """histogram_quantile(phi, buckets): the selector's streams must
-        carry an `le` label (cumulative bucket upper bounds; '+Inf'
-        allowed). Buckets group per timestamp and per remaining-label set;
-        the per-group quantile is functions/histogram.bucket_quantile —
-        array HOFs over the (bounded) bucket list, no UDF.
-
-        The child may be a bare selector or any expression that evaluates
-        to a streams-carrying vector (e.g. `increase(m_bucket[1h])` —
-        series identity propagates through windowed range functions), so
-        the classic `histogram_quantile(phi, increase(m_bucket[1h]))`
-        works in raw-sample mode too. Aggregate children (`sum by (le)`)
-        belong to query_range, where instants exist per step; the raw
-        engine's aggregates collapse time."""
+        """histogram_quantile(phi, buckets): cumulative bucket series
+        carrying an `le` label ('+Inf' allowed), evaluated per timestamp
+        and per remaining-label set; the per-group quantile is
+        functions/histogram.bucket_quantile — array HOFs over the
+        (bounded) bucket list, no UDF. Child shapes: _le_bucket_eval."""
         from tachyon_spark.functions.histogram import bucket_quantile
 
-        out, multi, smap = self._le_bucket_eval(
+        return self._le_bucket_eval(
             node.child, "histogram_quantile",
             lambda df, group_cols: bucket_quantile(
                 df, node.phi, group_cols, le_col="__le"
             ),
         )
-        if multi:
-            return Plan(
-                "grouped", out, VT_F64, group_cols=("series", "ts"),
-                series_labels=smap,
-            )
-        return Plan("vector", out, VT_F64)
-
-    def _le_bucket_eval(self, child_expr, fname: str, apply):
-        """Shared raw-sample le-bucket evaluation for the histogram family:
-        resolve the child to le-labeled bucket streams, broadcast-join the
-        (stream_id -> le, series) frame, and run `apply(df, group_cols)`
-        per timestamp (and per remaining-label series when more than one
-        exists). Returns (df, multi, series_labels)."""
-        from tachyon_spark.functions.histogram import le_series_frame
-
-        child = self.build(child_expr)
-        if child.kind != "vector" or not child.streams:
-            raise ValueError(
-                f"{fname} (raw-sample mode) requires le-labeled "
-                "bucket series: a selector or a windowed function over one "
-                "(aggregate inputs are a query_range shape — raw aggregates "
-                "collapse time)"
-            )
-        le_map, multi, smap = le_series_frame(self.conn.spark, child.streams)
-        df = child.df.join(F.broadcast(le_map), "stream_id")
-        group_cols = (["__series"] if multi else []) + ["ts"]
-        out = apply(df, group_cols)
-        if multi:
-            out = out.withColumnRenamed("__series", "series")
-        return out, multi, smap
 
     def _histogram_agg(self, node: ast.HistogramAgg) -> Plan:
         """histogram_count/sum/avg(buckets): Prometheus 3.x classic-
-        histogram helpers over the same le-frame machinery as
+        histogram helpers over the same le-bucket machinery as
         histogram_quantile — count is the +Inf bucket's cumulative count,
         sum the midpoint estimate, avg their ratio
         (functions/histogram.bucket_agg)."""
         from tachyon_spark.functions.histogram import bucket_agg
 
-        out, multi, smap = self._le_bucket_eval(
+        return self._le_bucket_eval(
             node.child, f"histogram_{node.op}",
             lambda df, group_cols: bucket_agg(
                 df, node.op, group_cols, le_col="__le"
             ),
         )
-        if multi:
-            return Plan(
-                "grouped", out, VT_F64, group_cols=("series", "ts"),
-                series_labels=smap,
-            )
-        return Plan("vector", out, VT_F64)
 
     def _histogram_fraction(self, node: ast.HistogramFraction) -> Plan:
         """histogram_fraction(lo, hi, buckets): interpolated in-range
-        observation fraction (functions/histogram.bucket_fraction)."""
+        observation fraction, bounds clamped into the bucket domain
+        (functions/histogram.bucket_fraction)."""
         from tachyon_spark.functions.histogram import bucket_fraction
 
-        out, multi, smap = self._le_bucket_eval(
+        return self._le_bucket_eval(
             node.child, "histogram_fraction",
             lambda df, group_cols: bucket_fraction(
                 df, node.lo, node.hi, group_cols, le_col="__le"
             ),
         )
+
+    def _le_bucket_eval(self, child_expr, fname: str, apply) -> Plan:
+        """Shared le-bucket evaluation for the histogram family
+        (quantile/count/sum/avg/fraction); `apply(df, group_cols)` runs
+        the bucket math. Two child forms:
+
+        - a vector carrying le-labeled streams (a selector, or a windowed
+          function over bucket series — series identity propagates, so
+          `histogram_quantile(phi, increase(m_bucket[1h]))` works in both
+          modes): broadcast the (stream_id -> le, series) map, then
+          evaluate per (series?, ts).
+        - where the mode accepts it (`_grouped_buckets`, the grid), a
+          grouped result with 'le' among its group columns (a
+          `sum by (le[, ...])` aggregate): parse le and evaluate per
+          (remaining group cols, step), sharing the aggregate's key
+          shuffle shape. Raw aggregates collapse time, so they are no
+          bucket input.
+
+        Either way the per-group bucket list is bounded (tens of les), the
+        math is pure array-HOF codegen (functions/histogram.py), and the
+        only exchange is the group-key hash — scale-safe."""
+        from tachyon_spark.functions.histogram import le_series_frame, parse_le
+
+        child = self._eval(child_expr)
+        if (
+            self._grouped_buckets
+            and child.kind == "grouped"
+            and "le" in child.group_cols
+        ):
+            rest = [c for c in child.group_cols if c != "le"]
+            if "ts" not in rest:
+                raise ValueError(
+                    f"{fname}: grouped input must keep the step "
+                    "timestamp (aggregate with by (le, ...))"
+                )
+            out = apply(child.df.withColumn("__le", parse_le("le")), rest)
+            if rest == ["ts"]:
+                return Plan("vector", out, VT_F64)
+            return Plan("grouped", out, VT_F64, group_cols=tuple(rest))
+        if child.kind != "vector" or not child.streams:
+            raise ValueError(
+                f"{fname} needs le-labeled bucket series: a selector or a "
+                "windowed function over them (an aggregate grouped by (le) "
+                "only in query_range, where instants exist per step)"
+            )
+        le_map, multi, smap = le_series_frame(self.conn.spark, child.streams)
+        df = child.df.join(F.broadcast(le_map), "stream_id")
+        out = apply(df, (["__series"] if multi else []) + ["ts"])
         if multi:
             return Plan(
-                "grouped", out, VT_F64, group_cols=("series", "ts"),
-                series_labels=smap,
+                "grouped", out.withColumnRenamed("__series", "series"),
+                VT_F64, group_cols=("series", "ts"), series_labels=smap,
             )
         return Plan("vector", out, VT_F64)
 
@@ -1161,25 +1157,23 @@ class PlanBuilder:
         return self._holt_frame(inner_plan, win, sf, tf)
 
     def _clock_func(self, node: ast.ClockFunc) -> Plan:
-        """Evaluation-clock functions on the raw-sample path (ts stays in
-        NATIVE unitless units, ast.CLOCK_FUNCS note):
+        """Evaluation-clock functions (ts stays in NATIVE unitless units,
+        ast.CLOCK_FUNCS note). The time()/vector() arms are this mode's;
+        the grid overrides them (plans/range_eval):
 
           time()       -> scalar: the query start (the raw path's
-                          evaluation instant; the step grid form is in
-                          plans/range_eval).
-          timestamp(v) -> each sample's value becomes its own ts.
+                          evaluation instant).
           vector(s)    -> one sample at the query start with value s.
-          scalar(v)    -> the value if v has exactly ONE sample in range,
-                          else NaN (Prometheus's one-series rule applied
-                          to the raw result set).
+          timestamp(v) -> each sample's value becomes its own ts.
+          scalar(v)    -> per instant (the whole range raw), the value
+                          when exactly ONE sample reports, else NaN
+                          (Prometheus's one-series rule).
         """
         if node.func == "time":
             return Plan("scalar", None, VT_F64, literal=float(self.start or 0))
         if node.func == "pi":
-            import math as _m
-
-            return Plan("scalar", None, VT_F64, literal=_m.pi)
-        child = self.build(node.child)
+            return Plan("scalar", None, VT_F64, literal=math.pi)
+        child = self._eval(node.child)
         if node.func == "timestamp":
             if child.kind not in ("vector", "grouped"):
                 raise ValueError("timestamp() requires a vector input")
@@ -1205,14 +1199,15 @@ class PlanBuilder:
         # scalar(v)
         if child.kind != "vector":
             raise ValueError("scalar() requires a vector input")
-        agg = child.df.agg(
+        agg = child.df.groupBy(*self._instant).agg(
             F.count("*").alias("__n"),
             F.first("value").alias("__v"),
         )
         out = agg.select(
+            *self._instant,
             F.when(F.col("__n") == 1, F.col("__v").cast("double"))
             .otherwise(F.lit(float("nan")))
-            .alias("value")
+            .alias("value"),
         )
         return Plan("scalar", out, VT_F64)
 
@@ -1473,8 +1468,8 @@ class PlanBuilder:
     # ----------------------------------------------------------------- binary
     def _binary(self, node: ast.BinaryOp) -> Plan:
         op = node.op
-        lhs = self.build(node.lhs)
-        rhs = self.build(node.rhs)
+        lhs = self._eval(node.lhs)
+        rhs = self._eval(node.rhs)
         if node.matching is not None:
             return self._matched_binop(op, lhs, rhs, node.matching)
         if op in ast.SET_OPS:
@@ -1621,6 +1616,55 @@ class PlanBuilder:
         )
         return plan.df.join(F.broadcast(map_df), "stream_id")
 
+    def _match_keys(
+        self, matching: ast.VectorMatching, lhs_streams, rhs_streams
+    ) -> tuple[list, dict, dict]:
+        """(match key columns, stream_id -> key per side) for on()/
+        ignoring() matching. The keys are computed once driver-side and
+        used verbatim on the Spark and the bookkeeping side, so they
+        cannot diverge."""
+        if matching.on:
+            key_cols = list(matching.labels)
+            if not key_cols:
+                raise ValueError("on() requires at least one label")
+        else:
+            key_cols = ["__match_key"]
+        if set(matching.include) & set(key_cols):
+            raise ValueError("group_left/right include labels overlap match labels")
+        lkeys = {s.stream_id: self._key(s, matching) for s in lhs_streams}
+        rkeys = {s.stream_id: self._key(s, matching) for s in rhs_streams}
+        return key_cols, lkeys, rkeys
+
+    @staticmethod
+    def _matched_groups(
+        matching: ast.VectorMatching, lkeys: dict, rkeys: dict
+    ) -> tuple[dict, dict]:
+        """Restrict both sides to their common match groups and enforce
+        the PromQL cardinality contract: the "one" side must be unique
+        per group; one-to-one requires both. Checked driver-side — free."""
+        from collections import Counter
+
+        common = set(lkeys.values()) & set(rkeys.values())
+        if not common:
+            raise ValueError("no matching label groups between operands")
+        lkeys = {sid: k for sid, k in lkeys.items() if k in common}
+        rkeys = {sid: k for sid, k in rkeys.items() if k in common}
+        for keys, side in ((lkeys, "left"), (rkeys, "right")):
+            if matching.group == side:  # the "many" side may repeat a group
+                continue
+            dup = [k for k, c in Counter(keys.values()).items() if c > 1]
+            if dup:
+                hint = (
+                    " (use group_left/group_right for many-to-one)"
+                    if matching.group is None
+                    else ""
+                )
+                raise ValueError(
+                    f"vector matching: multiple {side} series in match group "
+                    f"{dup[0]!r}{hint}"
+                )
+        return lkeys, rkeys
+
     def _matched_binop(
         self, op: str, lhs: Plan, rhs: Plan, matching: ast.VectorMatching
     ) -> Plan:
@@ -1642,49 +1686,12 @@ class PlanBuilder:
                 "vector matching requires label-carrying selector vectors "
                 "(derived vectors lost their series identity)"
             )
-        if matching.on:
-            key_cols = list(matching.labels)
-            if not key_cols:
-                raise ValueError("on() requires at least one label")
-        else:
-            key_cols = ["__match_key"]
-        if set(matching.include) & set(key_cols):
-            raise ValueError("group_left/right include labels overlap match labels")
-
-        lkeys = {s.stream_id: self._key(s, matching) for s in lhs.streams}
-        rkeys = {s.stream_id: self._key(s, matching) for s in rhs.streams}
-
+        key_cols, lkeys, rkeys = self._match_keys(
+            matching, lhs.streams, rhs.streams
+        )
         if op in ast.SET_OPS:
             return self._matched_set_op(op, lhs, rhs, lkeys, rkeys, key_cols, matching)
-
-        common = set(lkeys.values()) & set(rkeys.values())
-        lkeys = {sid: k for sid, k in lkeys.items() if k in common}
-        rkeys = {sid: k for sid, k in rkeys.items() if k in common}
-        if not common:
-            raise ValueError("no matching label groups between operands")
-
-        # cardinality contract (PromQL): the "one" side must be unique per
-        # group; one-to-one requires both. Checked driver-side — free.
-        def _assert_unique(keys: dict, side: str) -> None:
-            from collections import Counter
-
-            dup = [k for k, c in Counter(keys.values()).items() if c > 1]
-            if dup:
-                hint = (
-                    " (use group_left/group_right for many-to-one)"
-                    if matching.group is None
-                    else ""
-                )
-                raise ValueError(
-                    f"vector matching: multiple {side} series in match group "
-                    f"{dup[0]!r}{hint}"
-                )
-
-        if matching.group in (None, "right"):
-            _assert_unique(lkeys, "left")
-        if matching.group in (None, "left"):
-            _assert_unique(rkeys, "right")
-
+        lkeys, rkeys = self._matched_groups(matching, lkeys, rkeys)
         keyed_l = self._keyed_side(lhs, lkeys, key_cols)
         keyed_r = self._keyed_side(rhs, rkeys, key_cols)
 
@@ -1854,7 +1861,13 @@ class PlanBuilder:
 
     # -------------------------------------------------------------- aggregate
     def _aggregate(self, node: ast.Aggregate) -> Plan:
-        child = self.build(node.child)
+        """sum/avg/min/max/count/... per (by/without keys + instant key).
+        Over an already-grouped child (a nested aggregate, a grouped binop
+        or set-op result) the child's group columns ARE its label set, so
+        by/without resolve against them and the re-aggregation runs over
+        the group rows: `max(sum by (s) (m))` is the max of the per-s
+        sums. With no keys, raw mode collapses the range to a scalar."""
+        child = self._eval(node.child)
         func = node.func
         if func in ("sum", "min", "max"):
             vt = child.value_type
@@ -1862,92 +1875,60 @@ class PlanBuilder:
             vt = VT_U64
         else:  # avg
             vt = VT_F64
-        if child.kind == "grouped":
-            # composition over an already-grouped result (round 10,
-            # mirroring range_eval._aggregate_grouped): raw grouped aggs
-            # collapse the range per group, so re-aggregation runs over
-            # the GROUP ROWS — `max(sum by (s) (m))` is the max of the
-            # per-s sums (a scalar), `sum by (a) (... by (a,b) ...)`
-            # re-keys on the surviving labels
+        if child.kind not in ("vector", "topk", "grouped"):
+            raise ValueError("aggregate requires a vector input")
+        cdf = child.df
+        if func == "avg" and isinstance(cdf.schema["value"].dataType, T.DecimalType):
+            # avg is always f64; Spark's avg over DECIMAL (u64-exact layout)
+            # would return DECIMAL — pre-cast only in that case so the long
+            # path keeps its exact integer partial sums.
+            cdf = cdf.withColumn("value", F.col("value").cast("double"))
+        approx = getattr(self.conn, "approx_aggregates", False)
+        smap = ()
+        if child.kind != "grouped":
+            cdf, keys, smap = self._group_keys(
+                cdf, node.by, node.without, child.streams
+            )
+        else:
             labels = [
                 c
                 for c in child.group_cols
                 if c not in ("ts", "stream_id") and not c.startswith("__")
             ]
-            approx = getattr(self.conn, "approx_aggregates", False)
             if "series" in labels and (node.by or node.without):
                 # composite-keyed child (a `without` grouping): decompose
-                # via the plan's series->labels map and re-key (ADVICE
-                # r11 medium — regrouping the composite unchanged fails
-                # to merge series differing only in the dropped labels;
-                # dropping it collapsed these shapes to a scalar).
+                # the opaque key via the plan's series->labels map and
+                # re-key — regrouping the composite unchanged would fail
+                # to merge series differing only in the outer-dropped
+                # labels (ADVICE r11 medium)
                 if len(labels) > 1:
                     raise ValueError(
-                        "cannot re-group a mixed composite/label-keyed "
-                        "result"
+                        "cannot re-group a mixed composite/label-keyed result"
                     )
-                df, keys, new_sl = self._rekey_series(child, node)
-                out = grouped_agg(
-                    df, func, keys, param=node.param, approx=approx
-                )
-                return Plan(
-                    "grouped", out, vt, group_cols=tuple(keys),
-                    series_labels=new_sl,
-                )
-            labels = [c for c in labels if c != "series"]
-            if node.by:
+                cdf, keys, smap = self._rekey_series(child, node)
+            elif node.by:
                 missing = set(node.by) - set(labels)
                 if missing:
                     raise ValueError(
-                        f"grouping label(s) {sorted(missing)} not present "
-                        f"in the grouped input (carries {labels})"
+                        f"grouping label(s) {sorted(missing)} not present in "
+                        f"the grouped input (carries {labels}; default-matched "
+                        "set operators key on full label sets — use "
+                        "on(...) matching to keep named labels)"
                     )
-                out = grouped_agg(
-                    child.df, func, list(node.by), param=node.param,
-                    approx=approx,
-                )
-                return Plan("grouped", out, vt, group_cols=tuple(node.by))
-            keys = (
-                [c for c in labels if c not in set(node.without)]
-                if node.without
-                else []
-            )
-            if keys:
-                out = grouped_agg(
-                    child.df, func, keys, param=node.param, approx=approx
-                )
-                return Plan("grouped", out, vt, group_cols=tuple(keys))
+                keys = list(node.by)
+            elif node.without:
+                keys = [c for c in labels if c not in node.without]
+            else:
+                keys = []
+        group = keys + list(self._instant)
+        if not group:
             return Plan(
-                "scalar",
-                scalar_agg(child.df, func, param=node.param, approx=approx),
-                vt,
+                "scalar", scalar_agg(cdf, func, param=node.param, approx=approx), vt
             )
-        if child.kind not in ("vector", "topk"):
-            raise ValueError("aggregate requires a vector input")
-
-        cdf = child.df
-        if func == "avg":
-            from pyspark.sql import types as T
-
-            # avg is always f64; Spark's avg over DECIMAL (u64-exact layout)
-            # would return DECIMAL — pre-cast only in that case so the long
-            # path keeps its exact integer partial sums.
-            if isinstance(cdf.schema["value"].dataType, T.DecimalType):
-                cdf = cdf.withColumn("value", F.col("value").cast("double"))
-        approx = getattr(self.conn, "approx_aggregates", False)
-        if node.by:
-            df = self._attach_labels(cdf, node.by, child.streams)
-            out = grouped_agg(df, func, list(node.by), param=node.param, approx=approx)
-            return Plan("grouped", out, vt, group_cols=tuple(node.by))
-        if node.without:
-            df, smap = self._attach_series_key(cdf, node.without, child.streams)
-            out = grouped_agg(df, func, ["series"], param=node.param, approx=approx)
-            return Plan(
-                "grouped", out, vt, group_cols=("series",), series_labels=smap
-            )
-        return Plan(
-            "scalar", scalar_agg(cdf, func, param=node.param, approx=approx), vt
-        )
+        out = grouped_agg(cdf, func, group, param=node.param, approx=approx)
+        if not keys:
+            return Plan("vector", out, vt)
+        return Plan("grouped", out, vt, group_cols=tuple(group), series_labels=smap)
 
     @staticmethod
     def _series_key_rows(
@@ -2022,15 +2003,22 @@ class PlanBuilder:
         )
         return df, ["series"], tuple(new_map.items())
 
-    def _attach_series_key(
-        self, cdf: DataFrame, without: tuple[str, ...], streams: tuple
-    ) -> tuple[DataFrame, tuple]:
-        """`without (l1,..)` grouping key: group by every label EXCEPT the
-        listed ones — per-series canonical remaining-label key computed
+    def _group_keys(
+        self, df: DataFrame, by: tuple[str, ...], without: tuple[str, ...],
+        streams: tuple,
+    ) -> tuple[DataFrame, list, tuple]:
+        """The by/without arm shared by aggregates, count_values and topk:
+        attach the group-key columns to a sample frame. `by` attaches the
+        named labels; `without (l1,..)` groups by every label EXCEPT the
+        listed ones — a per-series canonical remaining-label key computed
         driver-side from the plan's stream info, attached as one broadcast
-        map column named `series`. Also returns the series -> labels map
-        for Plan.series_labels (outer re-grouping support)."""
-        if "stream_id" not in cdf.columns or not streams:
+        map column named `series`. Returns (df, key column names, the
+        series -> labels map for Plan.series_labels)."""
+        if by:
+            return self._attach_labels(df, by, streams), list(by), ()
+        if not without:
+            return df, [], ()
+        if "stream_id" not in df.columns or not streams:
             raise ValueError(
                 "grouped aggregation (without ...) requires a "
                 "label-carrying selector vector"
@@ -2039,21 +2027,7 @@ class PlanBuilder:
         key_df = self.conn.spark.createDataFrame(
             rows, "stream_id string, series string"
         )
-        return cdf.join(F.broadcast(key_df), "stream_id", "left"), smap
-
-    def _grouping_cols(
-        self, child: "Plan", by: tuple[str, ...], without: tuple[str, ...],
-        what: str,
-    ) -> tuple[DataFrame, tuple[str, ...]]:
-        """Shared by/without grouping-column attachment for aggregation
-        operators that group on labels plus their own key (count_values).
-        Returns (df with group columns, group column names)."""
-        if by:
-            return self._attach_labels(child.df, by, child.streams), by
-        if without:
-            df, _ = self._attach_series_key(child.df, without, child.streams)
-            return df, ("series",)
-        return child.df, ()
+        return df.join(F.broadcast(key_df), "stream_id", "left"), ["series"], smap
 
     def _attach_labels(
         self, df: DataFrame, labels: tuple[str, ...], streams: tuple = ()
@@ -2082,38 +2056,69 @@ class PlanBuilder:
             )
         return df.join(F.broadcast(cat), "stream_id", "left")
 
+    def _count_values(self, node: ast.CountValues) -> Plan:
+        """count_values("label", v): how many samples (per instant on the
+        grid) report each distinct value — one groupBy on (by/without
+        keys, value, instant key)."""
+        child = self._eval(node.child)
+        if child.kind not in ("vector", "grouped"):
+            raise ValueError("count_values requires a vector input")
+        cdf, keys, _ = self._group_keys(
+            child.df, node.by, node.without, child.streams
+        )
+        group = (*keys, node.label, *self._instant)
+        out = cdf.groupBy(
+            *keys, F.col("value").cast("string").alias(node.label),
+            *self._instant,
+        ).agg(F.count("*").alias("value"))
+        return Plan("grouped", out, VT_U64, group_cols=group)
+
     # ------------------------------------------------------------------ getk
     def _getk(self, node: ast.GetK) -> Plan:
-        k_plan = self.build(node.k)
-        if k_plan.kind not in ("scalar", "topk"):
-            raise ValueError("topk/bottomk k must be a scalar expression")
-        if k_plan.literal is not None:
-            k = int(k_plan.literal)
-        else:
-            row = k_plan.df.select("value").collect()
-            k = int(row[0].value) if row else 0
-        child = self.build(node.child)
+        """topk/bottomk: k rows per (by/without keys + instant key). The
+        rank window shares the group-key shuffle — no global sort (the
+        reference's GetK is global only); raw mode with no keys keeps the
+        global TakeOrderedAndProject."""
+        k = int(self._scalar_param(node.k, "topk/bottomk k"))
+        child = self._eval(node.child)
+        inst = list(self._instant)
+        desc = node.func == "topk"
+        if child.kind == "grouped":
+            # derived results keyed by match/group columns (`topk(2, a +
+            # b)`, `topk(2, sum by (l) (...))`): rank those rows per
+            # instant — PromQL's topk works on any instant vector
+            if node.by or node.without:
+                raise ValueError(
+                    "topk/bottomk by/without needs a label-carrying "
+                    "selector vector (the input is already grouped)"
+                )
+            keys = [c for c in child.df.columns if c not in ("ts", "value")]
+            value = F.col("value")
+            w = Window.partitionBy(*inst).orderBy(
+                value.desc() if desc else value.asc(),
+                *[F.col(c) for c in keys],  # deterministic tie-break
+            )
+            if k <= 0:
+                out = child.df.limit(0)
+            else:
+                out = (
+                    child.df.withColumn("__rn", F.row_number().over(w))
+                    .where(F.col("__rn") <= k)
+                    .drop("__rn")
+                )
+            return Plan(
+                "grouped", out, child.value_type, group_cols=child.group_cols
+            )
         if child.kind != "vector":
             raise ValueError("topk/bottomk requires a vector input")
-        if node.by or node.without:
-            # per-group k: rank window shares the group-key shuffle — no
-            # global sort (extension; the reference's GetK is global only).
-            # `without` groups on the canonical remaining-label series key
-            # (same broadcast attach as Aggregate.without).
-            from tachyon_spark.operators.topk import grouped_top_k
-
-            if node.by:
-                df = self._attach_labels(child.df, node.by, child.streams)
-                cols = list(node.by)
-            else:
-                df, smap = self._attach_series_key(
-                    child.df, node.without, child.streams
-                )
-                cols = ["series"]
-            out = grouped_top_k(df, k, cols, desc=node.func == "topk")
-            return Plan(
-                "grouped", out, child.value_type, group_cols=tuple(cols),
-                series_labels=smap if not node.by else (),
-            )
-        fn = top_k if node.func == "topk" else bottom_k
-        return Plan("topk", fn(child.df, k), child.value_type)
+        df, keys, smap = self._group_keys(
+            child.df, node.by, node.without, child.streams
+        )
+        if not keys + inst:
+            fn = top_k if desc else bottom_k
+            return Plan("topk", fn(child.df, k), child.value_type)
+        out = grouped_top_k(df, k, keys + inst, desc=desc)
+        return Plan(
+            "grouped", out, child.value_type, group_cols=(*keys, *inst),
+            series_labels=smap,
+        )

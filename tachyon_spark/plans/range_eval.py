@@ -36,17 +36,16 @@ Spark mapping — the step grid is DATA, never a per-step driver loop:
   a ∘ on(l) b     exact equi-join per (match key, step): instant vectors
                   on the same grid never interpolate (PromQL semantics;
                   the raw-sample engine's interpolating join is the
-                  analogue for unaligned samples).
+                  analogue for unaligned samples). group_left/
+                  group_right many-to-one keeps the many side's series
+                  identity, include labels broadcast from the one side;
+                  and/or/unless match membership per (group, step).
 
   histogram_     per step instant: grouped `sum by (le)` inputs share the
   quantile       aggregate's key shuffle; le-labeled selector/rate vectors
                  get a broadcast le map — interpolation is array-HOF
                  codegen either way (functions/histogram.py).
 
-  a ∘ on(l) b     exact equi-join per (match key, step); group_left/
-                  group_right many-to-one keeps the many side's series
-                  identity, include labels broadcast from the one side;
-                  and/or/unless match membership per (group, step).
   absent(v)       grid anti-join against the instant vector's steps.
   m @ T           pinned instant (one single-step evaluation at T, fanned
                   across the steps with one explode — no per-step rescan).
@@ -80,7 +79,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tachyon_spark.operators.select import select_range
-from tachyon_spark.operators.topk import grouped_top_k
 from tachyon_spark.plans.builder import (
     _ARITH,
     _CMP,
@@ -100,11 +98,26 @@ MAX_WINDOWS_PER_SAMPLE = 10_000
 DEFAULT_LOOKBACK = 300_000  # 5m in ms, the Timestamp convention (SURVEY §1.2)
 
 
-class RangeEvaluator:
-    """Evaluates an AST on the step grid. Reuses PlanBuilder's selector
-    machinery (partition-pruned scan, broadcast semi-join past the IN-list
-    threshold, label attachment) and mirrors its per-window aggregation
-    semantics with the window key = step timestamp."""
+class RangeEvaluator(PlanBuilder):
+    """Evaluates an AST on the step grid. The dispatch and every handler
+    whose raw and grid forms differ only in the step key are PlanBuilder's;
+    this mode supplies its three hooks:
+
+      - child evaluation: `_eval`, plus `build`, which turns a top-level
+        literal into a constant series on the grid;
+      - the instant key `_instant = ("ts",)`: aggregates, count_values,
+        topk, scalar() and the histogram family group per step;
+      - accepted child kinds: `_grouped_buckets`, so the histogram family
+        also takes a grouped `sum by (le)` input.
+
+    It overrides only the handlers whose semantics differ from the raw
+    mode: instant selectors (lookback carry-forward), sliding-window
+    functions and subqueries, binary operators (exact per-step equi-joins,
+    fused scans), absent/absent_over_time (per-step anti-joins), the
+    time()/vector() clock arms and the sort functions (ignored)."""
+
+    _instant = ("ts",)
+    _grouped_buckets = True
 
     def __init__(self, conn, start: int, end: int, step: int, lookback: int):
         if step <= 0:
@@ -117,96 +130,42 @@ class RangeEvaluator:
                 f"query_range grid has {self.n_steps} steps (max {MAX_STEPS}); "
                 "widen the step or narrow the range"
             )
-        self.conn = conn
-        self.start = start
-        self.end = end
+        super().__init__(conn, start, end)
         self.step = step
         self.lookback = lookback
-        # helper builder for selector resolution / label attachment; its
-        # scan window is set per selector below
-        self._b = PlanBuilder(conn, start, end)
 
     # ------------------------------------------------------------- public
     def build(self, expr) -> Plan:
         plan = self._eval(expr)
         if plan.kind == "scalar" and plan.literal is not None:
             # top-level literal: a constant series on the grid
-            grid = self.conn.spark.range(self.n_steps).select(
-                (F.lit(self.start) + F.col("id") * F.lit(self.step)).alias("ts"),
-                F.lit(plan.literal).alias("value"),
-            )
+            grid = self._grid_df().select("ts", F.lit(plan.literal).alias("value"))
             return Plan("vector", grid, VT_F64)
         return plan
 
-    # --------------------------------------------------------------- eval
-    def _eval(self, expr) -> Plan:
-        if isinstance(expr, ast.NumberLiteral):
-            return Plan("scalar", None, VT_F64, literal=float(expr.value))
-        if isinstance(expr, ast.VectorSelector):
-            return self._selector_instant(expr)
-        if isinstance(expr, ast.RangeFunc):
-            return self._windowed(expr.func, expr.child, None)
-        if isinstance(expr, ast.OverTimeFunc):
-            fn = expr.func[: -len("_over_time")]
-            return self._windowed(fn, expr.child, expr.arg, family="over_time")
-        if isinstance(expr, ast.RangeCountFunc):
-            return self._windowed(expr.func, expr.child, None, family="count")
-        if isinstance(expr, ast.DerivFunc):
-            return self._windowed("deriv", expr.child, None, family="deriv")
-        if isinstance(expr, ast.PredictLinearFunc):
-            return self._windowed(
-                "predict_linear", expr.child, expr.horizon, family="predict"
-            )
-        if isinstance(expr, ast.ClockFunc):
-            return self._clock_func(expr)
-        if isinstance(expr, ast.HoltWintersFunc):
-            return self._windowed(
-                "holt_winters", expr.child, (expr.sf, expr.tf), family="holt"
-            )
-        if isinstance(expr, ast.Aggregate):
-            return self._aggregate(expr)
-        if isinstance(expr, ast.BinaryOp):
-            return self._binary(expr)
-        if isinstance(expr, ast.MathFunc):
-            return self._columnwise(expr.func, expr.child, self._math_col)
-        if isinstance(expr, ast.CalendarFunc):
-            return self._calendar_func(expr)
-        if isinstance(expr, ast.ClampFunc):
-            return self._columnwise(expr, expr.child, self._clamp_col)
-        if isinstance(expr, ast.RoundFunc):
-            return self._columnwise(expr, expr.child, self._round_col)
-        if isinstance(expr, ast.GetK):
-            return self._getk(expr)
-        if isinstance(expr, (ast.SortFunc, ast.SortByLabelFunc)):
-            # Prometheus IGNORES sorting functions in range queries
-            # (sort/sort_desc/sort_by_label only affect instant-query
-            # presentation)
-            return self._eval(expr.child)
-        if isinstance(expr, ast.LimitAgg):
-            return self._limit_agg(expr)
-        if isinstance(expr, ast.HistogramQuantile):
-            return self._histogram_quantile(expr)
-        if isinstance(expr, ast.HistogramAgg):
-            return self._histogram_agg(expr)
-        if isinstance(expr, ast.HistogramFraction):
-            return self._histogram_fraction(expr)
-        if isinstance(expr, ast.AbsentOverTime):
-            return self._absent_over_time(expr)
-        if isinstance(expr, ast.AbsentFunc):
-            return self._absent(expr)
-        if isinstance(expr, ast.LabelFunc):
-            return self._label_func(expr)
-        if isinstance(expr, ast.CountValues):
-            return self._count_values(expr)
-        raise ValueError(
-            f"{type(expr).__name__} is not supported in query_range "
-            "(supported: selectors, range/over_time/resets/changes/irate/"
-            "idelta/deriv over m[R], aggregates with by/without, arithmetic "
-            "and comparisons with scalars, on()/ignoring() vector matching "
-            "incl. group_left/group_right and set ops, "
-            "abs/ceil/floor/sqrt/exp/ln/sgn, clamp*, round, topk/bottomk, "
-            "histogram_quantile/count/sum/avg/fraction, absent, "
-            "absent_over_time)"
+    def _grid_df(self):
+        """The bare step grid (ts only) — bounded by MAX_STEPS."""
+        return self.conn.spark.range(self.n_steps).select(
+            (F.lit(self.start) + F.col("id") * F.lit(self.step)).alias("ts")
+        )
+
+    def _pin(self, node) -> int:
+        """The pinned evaluation instant T of an `@ T` / `@ start()` /
+        `@ end()` modifier."""
+        if node.at_anchor == "start":
+            return self.start
+        if node.at_anchor == "end":
+            return self.end
+        return int(node.at_ts)
+
+    def _fan(self, df: DataFrame) -> DataFrame:
+        """A pinned single-step (stream_id, value) result repeated at
+        every step with one explode — no per-step rescan."""
+        return df.selectExpr(
+            "stream_id",
+            f"explode(sequence({self.start}L, {self.end}L, {self.step}L))"
+            " as ts",
+            "value",
         )
 
     # ----------------------------------------------------------- selector
@@ -242,26 +201,27 @@ class RangeEvaluator:
             "stream_id"
         )
 
-    def _selector_instant(self, sel: ast.VectorSelector) -> Plan:
-        if sel.at_ts is not None or sel.at_anchor:
-            return self._selector_at(sel)
-        child = self._scan(sel, self.lookback)
-        df = child.df
-        # Expressions are composed as SQL strings, ONE py4j round trip
-        # per select instead of one per Column operation: the §5-style
-        # cProfile (r16) put ~600 py4j round trips and ~0.32 s behind a
-        # single query_range build, 0.17 s of it here — the grid/window
-        # column algebra was pure driver-side socket chatter. The parsed
-        # expressions are identical (VERDICT r15 item 4).
-        vtype = df.schema["value"].dataType.simpleString()
-        grid = self._ids_df(sel, child.streams).selectExpr(
+    def _carry_forward(self, samples: DataFrame, ids: DataFrame) -> DataFrame:
+        """Per-series step instants: the (stream_id, ts, value) samples
+        unioned with the step grid of every id, one window pass per
+        series carrying the latest sample forward; steps whose latest
+        sample is older than the lookback are dropped (staleness).
+
+        Expressions are composed as SQL strings, ONE py4j round trip per
+        select instead of one per Column operation: the §5-style cProfile
+        (r16) put ~600 py4j round trips and ~0.32 s behind a single
+        query_range build, 0.17 s of it here — the grid/window column
+        algebra was pure driver-side socket chatter. The parsed
+        expressions are identical (VERDICT r15 item 4)."""
+        vtype = samples.schema["value"].dataType.simpleString()
+        grid = ids.selectExpr(
             "stream_id",
             f"explode(sequence({self.start}L, {self.end}L, {self.step}L))"
             " as ts",
             f"cast(null as {vtype}) as value",
             "1 as __tag",
         )
-        s = df.selectExpr("stream_id", "ts", "value", "0 as __tag")
+        s = samples.selectExpr("stream_id", "ts", "value", "0 as __tag")
         u = s.unionByName(grid)
         # samples sort before grid rows at equal ts (sample AT the step
         # counts); same-ts duplicate samples tie-break by value (max wins)
@@ -270,7 +230,7 @@ class RangeEvaluator:
             "over (partition by stream_id order by ts, __tag, value "
             "rows between unbounded preceding and current row)"
         )
-        out = (
+        return (
             u.selectExpr(
                 "stream_id",
                 "ts",
@@ -284,6 +244,12 @@ class RangeEvaluator:
             )
             .selectExpr("stream_id", "ts", "__v as value")
         )
+
+    def _selector(self, sel: ast.VectorSelector) -> Plan:
+        if sel.at_ts is not None or sel.at_anchor:
+            return self._selector_at(sel)
+        child = self._scan(sel, self.lookback)
+        out = self._carry_forward(child.df, self._ids_df(sel, child.streams))
         return Plan("vector", out, child.value_type, streams=child.streams)
 
     def _selector_at(self, sel: ast.VectorSelector) -> Plan:
@@ -291,26 +257,18 @@ class RangeEvaluator:
         instant is PINNED at T — every step reports the same value
         (Prometheus @ semantics; the grid only sets output timestamps).
         One single-step instant evaluation at T, then the per-series row
-        fans across the steps with one explode — no per-step rescan.
-        `offset` composes (shifts the pinned clock, handled in _scan)."""
-        if sel.at_anchor == "start":
-            t = self.start
-        elif sel.at_anchor == "end":
-            t = self.end
-        else:
-            t = int(sel.at_ts)
+        fans across the steps (_fan). `offset` composes (shifts the
+        pinned clock, handled in _scan)."""
+        t = self._pin(sel)
         bare = ast.VectorSelector(
             sel.name, sel.matchers, offset=sel.offset, or_groups=sel.or_groups
         )
         sub = RangeEvaluator(self.conn, t, t, self.step, self.lookback)
-        child = sub._selector_instant(bare)
-        out = child.df.selectExpr(
-            "stream_id",
-            f"explode(sequence({self.start}L, {self.end}L, {self.step}L))"
-            " as ts",
-            "value",
+        child = sub._selector(bare)
+        return Plan(
+            "vector", self._fan(child.df), child.value_type,
+            streams=child.streams,
         )
-        return Plan("vector", out, child.value_type, streams=child.streams)
 
     # ----------------------------------------------------- sliding windows
     def _explode_to_steps(self, df: DataFrame, r: int) -> DataFrame:
@@ -325,7 +283,7 @@ class RangeEvaluator:
                 f"(max {MAX_WINDOWS_PER_SAMPLE}); widen the step"
             )
         # SQL-string expressions: one py4j round trip per select (see
-        # _selector_instant — this helper was 0.10 s/build of chatter)
+        # _carry_forward — this helper was 0.10 s/build of chatter)
         shift = r // self.step + 2  # makes every numerator positive
         step = self.step
         a = f"(ts - {self.start}L + {shift * step}L)"  # shifted offset
@@ -351,15 +309,10 @@ class RangeEvaluator:
         value (Prometheus @ semantics; the grid only sets output
         timestamps). Mirrors _selector_at: one single-step windowed
         evaluation at T, then the per-series row fans across the steps
-        with one explode — no per-step rescan. `offset` composes (handled
-        by _scan inside the sub-evaluation)."""
+        with one explode (_fan). `offset` composes (handled by _scan inside
+        the sub-evaluation)."""
         sel = msel.selector
-        if sel.at_anchor == "start":
-            t = self.start
-        elif sel.at_anchor == "end":
-            t = self.end
-        else:
-            t = int(sel.at_ts)
+        t = self._pin(sel)
         bare = ast.MatrixSelector(
             ast.VectorSelector(
                 sel.name, sel.matchers, offset=sel.offset,
@@ -369,13 +322,10 @@ class RangeEvaluator:
         )
         sub = RangeEvaluator(self.conn, t, t, self.step, self.lookback)
         child = sub._windowed(func, bare, arg, family)
-        out = child.df.selectExpr(
-            "stream_id",
-            f"explode(sequence({self.start}L, {self.end}L, {self.step}L))"
-            " as ts",
-            "value",
+        return Plan(
+            "vector", self._fan(child.df), child.value_type,
+            streams=child.streams,
         )
-        return Plan("vector", out, child.value_type, streams=child.streams)
 
     def _exploded(self, msel: ast.MatrixSelector) -> tuple[Plan, DataFrame]:
         r = msel.range_
@@ -410,12 +360,7 @@ class RangeEvaluator:
             # (same shape as _windowed_at; offset composes inside)
             from dataclasses import replace
 
-            if sub.at_anchor == "start":
-                t = self.start
-            elif sub.at_anchor == "end":
-                t = self.end
-            else:
-                t = int(sub.at_ts)
+            t = self._pin(sub)
             bare = replace(sub, at_ts=None, at_anchor=None)
             sub_eval = RangeEvaluator(self.conn, t, t, self.step, self.lookback)
             child = sub_eval._windowed_subquery(fn, bare, arg, family)
@@ -502,7 +447,7 @@ class RangeEvaluator:
         distributes at any scale. Returns (grouped frame with
         part+value, value_type)."""
         if family == "over_time":
-            agg, vt = PlanBuilder._over_time_agg(
+            agg, vt = self._over_time_agg(
                 func, vt_in, arg,
                 approx=getattr(self.conn, "approx_aggregates", False),
             )
@@ -511,7 +456,7 @@ class RangeEvaluator:
             sf, tf = arg
             out = (
                 df.groupBy(*part)
-                .agg(PlanBuilder._holt_winters_value(sf, tf).alias("value"))
+                .agg(self._holt_winters_value(sf, tf).alias("value"))
                 .where(F.col("value").isNotNull())
             )
             return out, VT_F64
@@ -665,105 +610,37 @@ class RangeEvaluator:
         de = F.when(de >= thr, avg_d / F.lit(2.0)).otherwise(de)
         return value * (si + ds + de) / si
 
-    # ------------------------------------------------------------ aggregate
-    @staticmethod
-    def _agg_result_type(func: str, child_vt):
-        if func in ("sum", "min", "max"):
-            return child_vt
-        if func == "count":
-            return VT_U64
-        return VT_F64
+    # windowed functions: per-step sliding windows over m[R] or a subquery
+    def _range_func(self, node: ast.RangeFunc) -> Plan:
+        return self._windowed(node.func, node.child, None)
 
-    def _aggregate_grouped(self, node: ast.Aggregate, child: Plan) -> Plan:
-        """Aggregation over an ALREADY-GROUPED instant vector — a set-op
-        result (`sum by (et) (a unless on(et) b)`), a grouped binop, or
-        a nested aggregate (`max(sum by (l) (m))`). Prometheus
-        aggregations compose over any instant vector; here the child's
-        group columns ARE its label set, so by/without resolve against
-        them directly and the re-aggregation is one grouped_agg shuffle
-        on the (new key, ts)."""
-        from tachyon_spark.operators.aggregates import grouped_agg
+    def _over_time_func(self, node: ast.OverTimeFunc) -> Plan:
+        fn = node.func[: -len("_over_time")]
+        return self._windowed(fn, node.child, node.arg, family="over_time")
 
-        vt = self._agg_result_type(node.func, child.value_type)
-        labels = [
-            c
-            for c in child.group_cols
-            if c != "ts" and c != "stream_id" and not c.startswith("__")
-        ]
-        approx = getattr(self.conn, "approx_aggregates", False)
-        if "series" in labels and (node.by or node.without):
-            # composite-keyed child (a `without` grouping): decompose the
-            # opaque key via the plan's series->labels map and re-key —
-            # regrouping the composite unchanged would silently fail to
-            # merge series differing only in the outer-dropped labels
-            # (ADVICE r11 medium).
-            if len(labels) > 1:
-                raise ValueError(
-                    "cannot re-group a mixed composite/label-keyed result"
-                )
-            df, keys, new_sl = self._b._rekey_series(child, node)
-            out = grouped_agg(
-                df, node.func, keys + ["ts"], param=node.param, approx=approx
-            )
-            return Plan(
-                "grouped", out, vt, group_cols=(*keys, "ts"),
-                series_labels=new_sl,
-            )
-        if node.by:
-            missing = set(node.by) - set(labels)
-            if missing:
-                raise ValueError(
-                    f"grouping label(s) {sorted(missing)} not present in "
-                    f"the grouped input (carries {labels}; default-matched "
-                    "set operators key on full label sets — use "
-                    "on(...) matching to keep named labels)"
-                )
-            keys = list(node.by)
-        elif node.without:
-            keys = [c for c in labels if c not in set(node.without)]
-        else:
-            keys = []
-        out = grouped_agg(
-            child.df, node.func, keys + ["ts"], param=node.param,
-            approx=approx,
+    def _range_count_func(self, node: ast.RangeCountFunc) -> Plan:
+        return self._windowed(node.func, node.child, None, family="count")
+
+    def _deriv_func(self, node: ast.DerivFunc) -> Plan:
+        return self._windowed("deriv", node.child, None, family="deriv")
+
+    def _predict_linear(self, node: ast.PredictLinearFunc) -> Plan:
+        return self._windowed(
+            "predict_linear", node.child, node.horizon, family="predict"
         )
-        if keys:
-            return Plan("grouped", out, vt, group_cols=(*keys, "ts"))
-        return Plan("vector", out, vt)
 
-    def _aggregate(self, node: ast.Aggregate) -> Plan:
-        child = self._eval(node.child)
-        if child.kind == "grouped" and "ts" in child.group_cols:
-            return self._aggregate_grouped(node, child)
-        if child.kind != "vector":
-            raise ValueError("aggregate requires a vector input")
-        func = node.func
-        vt = self._agg_result_type(func, child.value_type)
-        from tachyon_spark.operators.aggregates import grouped_agg
+    def _holt_winters(self, node: ast.HoltWintersFunc) -> Plan:
+        return self._windowed(
+            "holt_winters", node.child, (node.sf, node.tf), family="holt"
+        )
 
-        approx = getattr(self.conn, "approx_aggregates", False)
-        cdf = child.df
-        if node.by:
-            df = self._b._attach_labels(cdf, node.by, child.streams)
-            out = grouped_agg(
-                df, func, list(node.by) + ["ts"], param=node.param, approx=approx
-            )
-            return Plan("grouped", out, vt, group_cols=tuple(node.by) + ("ts",))
-        if node.without:
-            df, smap = self._b._attach_series_key(
-                cdf, node.without, child.streams
-            )
-            out = grouped_agg(
-                df, func, ["series", "ts"], param=node.param, approx=approx
-            )
-            return Plan(
-                "grouped", out, vt, group_cols=("series", "ts"),
-                series_labels=smap,
-            )
-        # ungrouped: PER STEP (the per-instant semantics dashboards expect,
-        # unlike the raw-sample engine's whole-range collapse)
-        out = grouped_agg(cdf, func, ["ts"], param=node.param, approx=approx)
-        return Plan("vector", out, vt)
+    def _sort_func(self, node) -> Plan:
+        """Prometheus IGNORES sorting functions in range queries
+        (sort/sort_desc/sort_by_label only affect instant-query
+        presentation)."""
+        return self._eval(node.child)
+
+    _sort_by_label = _sort_func
 
     # ------------------------------------------------- fused operand eval
     def _operand_chain(self, expr):
@@ -784,30 +661,13 @@ class RangeEvaluator:
         def _d(f, v):
             return (v if f is None else f(v)).cast("double")
 
-        if isinstance(expr, ast.MathFunc):
-            sub = self._operand_chain(expr.child)
-            if sub is None or expr.func not in PlanBuilder._MATH:
-                return None
-            sel, f = sub
-            return sel, (
-                lambda v, f=f, k=expr.func: self._math_col(k, _d(f, v))
-            )
-        if isinstance(expr, ast.ClampFunc):
+        if isinstance(expr, (ast.MathFunc, ast.ClampFunc, ast.RoundFunc)):
             sub = self._operand_chain(expr.child)
             if sub is None:
                 return None
             sel, f = sub
-            return sel, (
-                lambda v, f=f, n=expr: self._clamp_col(n, _d(f, v))
-            )
-        if isinstance(expr, ast.RoundFunc):
-            sub = self._operand_chain(expr.child)
-            if sub is None:
-                return None
-            sel, f = sub
-            return sel, (
-                lambda v, f=f, n=expr: self._round_col(n, _d(f, v))
-            )
+            fn = self._elementwise(expr)
+            return sel, (lambda v, f=f, fn=fn: fn(_d(f, v)))
         if (
             isinstance(expr, ast.BinaryOp)
             and expr.matching is None
@@ -838,7 +698,7 @@ class RangeEvaluator:
         remove duplicate exchanges outright: per-operand instant
         evaluation re-ran the identical scan→union→window spine once per
         operand). Per-stream instants are bit-identical to
-        _selector_instant's because the window partitions per series —
+        _selector's because the window partitions per series —
         extra series add partitions, never rows inside one. Returns
         (instants_df, per-selector streams, per-selector value_type) or
         None when one scan cannot serve all selectors (mixed value
@@ -898,41 +758,11 @@ class RangeEvaluator:
                 time_bucket=self.conn.time_bucket, stream_buckets=buckets,
             )
             grid_ids = inline_ids_df(self.conn.spark, ids)
-        value = PlanBuilder._value_expr(set(next(iter(tsets))), self.conn)
+        value = self._value_expr(set(next(iter(tsets))), self.conn)
         s = df.select("stream_id", "ts", value.alias("value"))
         if off:
             s = s.selectExpr("stream_id", f"ts + {off}L as ts", "value")
-        # SQL-string expressions — one py4j round trip per select; same
-        # instant spine as _selector_instant (see the rationale there)
-        vtype = s.schema["value"].dataType.simpleString()
-        grid = grid_ids.selectExpr(
-            "stream_id",
-            f"explode(sequence({self.start}L, {self.end}L, {self.step}L))"
-            " as ts",
-            f"cast(null as {vtype}) as value",
-            "1 as __tag",
-        )
-        u = s.selectExpr(
-            "stream_id", "ts", "value", "0 as __tag"
-        ).unionByName(grid)
-        w = (
-            "over (partition by stream_id order by ts, __tag, value "
-            "rows between unbounded preceding and current row)"
-        )
-        instants = (
-            u.selectExpr(
-                "stream_id",
-                "ts",
-                "__tag",
-                f"last(value, true) {w} as __v",
-                f"last(if(__tag = 0, ts, null), true) {w} as __sts",
-            )
-            .where(
-                "__tag = 1 and __sts is not null "
-                f"and ts - __sts <= {self.lookback}L"
-            )
-            .selectExpr("stream_id", "ts", "__v as value")
-        )
+        instants = self._carry_forward(s, grid_ids)
         vts = []
         for rows in rows_per:
             vt = rows[0].value_type
@@ -1004,35 +834,28 @@ class RangeEvaluator:
         if matching is None:
             # Prometheus default matching: one-to-one on full label sets
             matching = ast.VectorMatching(False, ())
-        if matching.on:
-            key_cols = list(matching.labels)
-            if not key_cols:
-                raise ValueError("on() requires at least one label")
-        else:
-            key_cols = ["__match_key"]
-        if set(matching.include) & set(key_cols):
+        key_cols, lkeys, rkeys = self._match_keys(matching, rows_l, rows_r)
+        if node.op not in ast.SET_OPS:
+            lkeys, rkeys = self._matched_groups(matching, lkeys, rkeys)
+        elif matching.group is not None:
             raise ValueError(
-                "group_left/right include labels overlap match labels"
+                "group_left/group_right do not apply to set operators"
             )
-        lkeys = {s.stream_id: self._b._key(s, matching) for s in rows_l}
-        rkeys = {s.stream_id: self._b._key(s, matching) for s in rows_r}
+        # side membership and match keys attach via one broadcast map
+        rows = [(sid, *k, 0) for sid, k in lkeys.items()] + [
+            (sid, *k, 1) for sid, k in rkeys.items()
+        ]
+        t = instants.join(
+            F.broadcast(self._map_side_df(rows, key_cols)), "stream_id"
+        )
         on = key_cols + ["ts"]
         lv = F.col("value") if f_l is None else f_l(F.col("value"))
+        rv = F.col("value") if f_r is None else f_r(F.col("value"))
 
         if node.op in ast.SET_OPS:
-            if matching.group is not None:
-                raise ValueError(
-                    "group_left/group_right do not apply to set operators"
-                )
-            rows = [(sid, *k, 0) for sid, k in lkeys.items()] + [
-                (sid, *k, 1) for sid, k in rkeys.items()
-            ]
-            tagged = instants.join(
-                F.broadcast(self._map_side_df(rows, key_cols)), "stream_id"
-            )
             w = Window.partitionBy(*on)
             if node.op in ("and", "unless"):
-                t = tagged.withColumn(
+                t = t.withColumn(
                     "__rp",
                     F.max(F.when(F.col("__side") == 1, F.lit(1))).over(w),
                 )
@@ -1049,8 +872,7 @@ class RangeEvaluator:
                     group_cols=tuple(on),
                 )
             # or: all lhs rows, plus rhs rows whose (group, step) has no lhs
-            rv = F.col("value") if f_r is None else f_r(F.col("value"))
-            t = tagged.withColumn(
+            t = t.withColumn(
                 "__lp", F.max(F.when(F.col("__side") == 0, F.lit(1))).over(w)
             )
             out = t.where(
@@ -1064,37 +886,11 @@ class RangeEvaluator:
             )
             return Plan("grouped", out, VT_F64, group_cols=tuple(on))
 
-        common = set(lkeys.values()) & set(rkeys.values())
-        lkeys = {sid: k for sid, k in lkeys.items() if k in common}
-        rkeys = {sid: k for sid, k in rkeys.items() if k in common}
-        if not common:
-            raise ValueError("no matching label groups between operands")
-        from collections import Counter
-
-        for keys, side in ((lkeys, "left"), (rkeys, "right")):
-            dup = [k for k, c in Counter(keys.values()).items() if c > 1]
-            if dup:
-                hint = (
-                    " (use group_left/group_right for many-to-one)"
-                    if matching.group is None
-                    else ""
-                )
-                raise ValueError(
-                    f"vector matching: multiple {side} series in match "
-                    f"group {dup[0]!r}{hint}"
-                )
-        rows = [(sid, *k, 0) for sid, k in lkeys.items()] + [
-            (sid, *k, 1) for sid, k in rkeys.items()
-        ]
-        tagged = instants.join(
-            F.broadcast(self._map_side_df(rows, key_cols)), "stream_id"
-        )
-        rv = F.col("value") if f_r is None else f_r(F.col("value"))
         # one (key, step) aggregation replaces the two-sided equi-join:
         # each side is unique per group (asserted above), so max() IS the
         # side's value and count() its presence — null values stay null,
         # exactly like the join's output
-        g = tagged.groupBy(*on).agg(
+        g = t.groupBy(*on).agg(
             F.max(F.when(F.col("__side") == 0, lv.cast("double"))).alias(
                 "__va"
             ),
@@ -1194,65 +990,6 @@ class RangeEvaluator:
             f"{node.op!r} (grouped operands need on()/ignoring() matching)"
         )
 
-    def _grid_df(self):
-        """The bare step grid (ts only) — bounded by MAX_STEPS."""
-        return self.conn.spark.range(self.n_steps).select(
-            (F.lit(self.start) + F.col("id") * F.lit(self.step)).alias("ts")
-        )
-
-    def _clock_func(self, expr) -> Plan:
-        """Evaluation-clock functions on the step grid (native ts units):
-        time() = the step value itself; vector(s) = s at every step;
-        timestamp(v) = each step instant's value replaced by the step ts;
-        scalar(v) = per step, the value when exactly one series reports,
-        else NaN."""
-        if expr.func == "time":
-            out = self._grid_df().select(
-                "ts", F.col("ts").cast("double").alias("value")
-            )
-            return Plan("vector", out, VT_F64)
-        if expr.func == "pi":
-            import math as _m
-
-            return Plan("scalar", None, VT_F64, literal=_m.pi)
-        child = self._eval(expr.child) if expr.func != "vector" else None
-        if expr.func == "timestamp":
-            if child.kind != "vector":
-                raise ValueError("timestamp() requires a vector input")
-            keep = [c for c in child.df.columns if c != "value"]
-            out = child.df.select(*keep, F.col("ts").cast("double").alias("value"))
-            return Plan("vector", out, VT_F64, streams=child.streams)
-        if expr.func == "vector":
-            sub = self._eval(expr.child)
-            if sub.kind != "scalar" or sub.literal is None:
-                raise ValueError(
-                    "query_range vector() requires a literal scalar"
-                )
-            out = self._grid_df().select(
-                "ts", F.lit(float(sub.literal)).alias("value")
-            )
-            return Plan("vector", out, VT_F64)
-        # scalar(v)
-        if child.kind != "vector":
-            raise ValueError("scalar() requires a vector input")
-        agg = child.df.groupBy("ts").agg(
-            F.count("*").alias("__n"), F.first("value").alias("__v")
-        )
-        present = agg.select(
-            "ts",
-            F.when(F.col("__n") == 1, F.col("__v").cast("double"))
-            .otherwise(F.lit(float("nan")))
-            .alias("value"),
-        )
-        # steps where NO series reports must still yield NaN (scalar is
-        # total on the grid)
-        out = (
-            self._grid_df()
-            .join(present, "ts", "left")
-            .select("ts", F.coalesce("value", F.lit(float("nan"))).alias("value"))
-        )
-        return Plan("vector", out, VT_F64)
-
     def _vec_lit(
         self, op: str, vec: Plan, lit: float, scalar_on_left: bool, bool_mode: bool
     ) -> Plan:
@@ -1290,18 +1027,9 @@ class RangeEvaluator:
             raise ValueError(
                 "vector matching requires label-carrying selector vectors"
             )
-        if matching.on:
-            key_cols = list(matching.labels)
-            if not key_cols:
-                raise ValueError("on() requires at least one label")
-        else:
-            key_cols = ["__match_key"]
-        if set(matching.include) & set(key_cols):
-            raise ValueError(
-                "group_left/right include labels overlap match labels"
-            )
-        lkeys = {s.stream_id: self._b._key(s, matching) for s in lhs.streams}
-        rkeys = {s.stream_id: self._b._key(s, matching) for s in rhs.streams}
+        key_cols, lkeys, rkeys = self._match_keys(
+            matching, lhs.streams, rhs.streams
+        )
         on = key_cols + ["ts"]
 
         if node.op in ast.SET_OPS:
@@ -1309,8 +1037,8 @@ class RangeEvaluator:
                 raise ValueError(
                     "group_left/group_right do not apply to set operators"
                 )
-            keyed_l = self._b._keyed_side(lhs, lkeys, key_cols).drop("stream_id")
-            keyed_r = self._b._keyed_side(rhs, rkeys, key_cols).drop("stream_id")
+            keyed_l = self._keyed_side(lhs, lkeys, key_cols).drop("stream_id")
+            keyed_r = self._keyed_side(rhs, rkeys, key_cols).drop("stream_id")
             if node.op == "and":
                 out = keyed_l.join(keyed_r.select(*on).distinct(), on, "left_semi")
                 return Plan("grouped", out, lhs.value_type, group_cols=tuple(on))
@@ -1326,33 +1054,9 @@ class RangeEvaluator:
             )
             return Plan("grouped", out, VT_F64, group_cols=tuple(on))
 
-        common = set(lkeys.values()) & set(rkeys.values())
-        lkeys = {sid: k for sid, k in lkeys.items() if k in common}
-        rkeys = {sid: k for sid, k in rkeys.items() if k in common}
-        if not common:
-            raise ValueError("no matching label groups between operands")
-        from collections import Counter
-
-        def _assert_unique(keys: dict, side: str) -> None:
-            dup = [k for k, c in Counter(keys.values()).items() if c > 1]
-            if dup:
-                hint = (
-                    " (use group_left/group_right for many-to-one)"
-                    if matching.group is None
-                    else ""
-                )
-                raise ValueError(
-                    f"vector matching: multiple {side} series in match "
-                    f"group {dup[0]!r}{hint}"
-                )
-
-        if matching.group in (None, "right"):
-            _assert_unique(lkeys, "left")
-        if matching.group in (None, "left"):
-            _assert_unique(rkeys, "right")
-
-        keyed_l = self._b._keyed_side(lhs, lkeys, key_cols)
-        keyed_r = self._b._keyed_side(rhs, rkeys, key_cols)
+        lkeys, rkeys = self._matched_groups(matching, lkeys, rkeys)
+        keyed_l = self._keyed_side(lhs, lkeys, key_cols)
+        keyed_r = self._keyed_side(rhs, rkeys, key_cols)
         if matching.group is None:
             series = key_cols
             a_frame, b_frame = keyed_l.drop("stream_id"), keyed_r.drop("stream_id")
@@ -1389,183 +1093,43 @@ class RangeEvaluator:
                 *sel, _ARITH[node.op](F.col("__va"), F.col("__vb")).alias("value")
             )
         if matching.include:
-            out = self._b._attach_include(
+            out = self._attach_include(
                 out, matching, key_cols, lkeys, rkeys, lhs, rhs
             )
         return Plan("grouped", out, VT_F64, group_cols=tuple(sel))
 
-    # ---------------------------------------------------------- columnwise
-    @staticmethod
-    def _math_col(func, v):
-        return PlanBuilder._MATH[func](v)
-
-    def _calendar_func(self, expr) -> Plan:
-        """Calendar functions on the step grid (ast.CalendarFunc): values
-        are unix seconds. Zero-arg = the Prometheus vector(time()) default,
-        per-step: each grid instant's native-ns ts converted to seconds,
-        then the field — so `hour()` in a range query traces the clock."""
-        if expr.child is None:
+    # ---------------------------------------------------------------- clock
+    def _clock_func(self, node: ast.ClockFunc) -> Plan:
+        """The grid's evaluation clock (native ts units): time() is the
+        step value itself; vector(s) is s at every step, for a literal s
+        or an already per-step scalar (time(), scalar(v)); scalar(v) is
+        total on the grid — steps where no series reports are NaN.
+        timestamp(v) and the per-step one-series rule of scalar(v) are
+        the shared handler's."""
+        if node.func == "time":
             out = self._grid_df().select(
-                "ts",
-                PlanBuilder._calendar_col(
-                    expr.func, F.col("ts").cast("double") / F.lit(1e9)
-                ).alias("value"),
+                "ts", F.col("ts").cast("double").alias("value")
             )
             return Plan("vector", out, VT_F64)
-        return self._columnwise(
-            expr.func, expr.child, PlanBuilder._calendar_col
-        )
-
-    @staticmethod
-    def _clamp_col(node, v):
-        if node.func == "clamp_min":
-            return F.greatest(v, F.lit(node.args[0]))
-        if node.func == "clamp_max":
-            return F.least(v, F.lit(node.args[0]))
-        return F.least(F.greatest(v, F.lit(node.args[0])), F.lit(node.args[1]))
-
-    @staticmethod
-    def _round_col(node, v):
-        t = float(node.to_nearest)
-        return F.floor(v / F.lit(t) + F.lit(0.5)) * F.lit(t)
-
-    def _columnwise(self, key, child_expr, fn) -> Plan:
-        child = self._eval(child_expr)
-        if child.kind not in ("vector", "grouped"):
-            raise ValueError("function requires a vector input")
-        keep = [c for c in child.df.columns if c != "value"]
-        result = fn(key, F.col("value").cast("double"))
-        out = child.df.select(*keep, result.alias("value"))
-        return Plan(child.kind, out, VT_F64,
-                    group_cols=child.group_cols, streams=child.streams)
-
-    # ----------------------------------------------------------- histogram
-    def _histogram_quantile(self, node: ast.HistogramQuantile) -> Plan:
-        """histogram_quantile(phi, buckets) per step instant — the canonical
-        dashboard shape `histogram_quantile(phi, sum by (le) (rate(
-        m_bucket[5m])))`. Child handling and scale shape: _le_bucket_eval
-        (shared with histogram_count/sum/avg/fraction)."""
-        from tachyon_spark.functions.histogram import bucket_quantile
-
-        return self._le_bucket_eval(
-            node.child, "histogram_quantile",
-            lambda df, group_cols: bucket_quantile(
-                df, node.phi, group_cols, le_col="__le"
-            ),
-        )
-
-    def _histogram_agg(self, node: ast.HistogramAgg) -> Plan:
-        """histogram_count/sum/avg per step instant — the grid analogue of
-        the raw path (builder._histogram_agg): the canonical dashboard
-        shape `histogram_count(sum by (le) (rate(m_bucket[5m])))`. Same
-        le-bucket machinery as histogram_quantile; count/sum/avg math is
-        functions/histogram.bucket_agg."""
-        from tachyon_spark.functions.histogram import bucket_agg
-
-        return self._le_bucket_eval(
-            node.child, f"histogram_{node.op}",
-            lambda df, group_cols: bucket_agg(
-                df, node.op, group_cols, le_col="__le"
-            ),
-        )
-
-    def _histogram_fraction(self, node: ast.HistogramFraction) -> Plan:
-        """histogram_fraction(lo, hi, buckets) per step instant — bounds
-        clamped into the bucket domain (functions/histogram.
-        bucket_fraction)."""
-        from tachyon_spark.functions.histogram import bucket_fraction
-
-        return self._le_bucket_eval(
-            node.child, "histogram_fraction",
-            lambda df, group_cols: bucket_fraction(
-                df, node.lo, node.hi, group_cols, le_col="__le"
-            ),
-        )
-
-    def _le_bucket_eval(self, child_expr, fname: str, apply) -> Plan:
-        """Shared grid-mode le-bucket evaluation for the histogram family
-        (quantile/count/sum/avg/fraction). Two child forms (wider than
-        the raw path, which only accepts streams-carrying vectors):
-
-        - grouped with 'le' among its group columns (a `sum by (le[, ...])`
-          aggregate): parse le and run the bucket math per (remaining
-          group cols, step) — the groupBy shares the aggregate's existing
-          key shuffle shape.
-        - vector carrying le-labeled streams (a selector instant or a
-          windowed rate/increase over bucket series): broadcast the
-          (stream_id -> le, series) map, then evaluate per (series?, step).
-
-        Either way the per-group bucket list is bounded (tens of les), the
-        math is pure array-HOF codegen (functions/histogram.py), and the
-        only exchange is the group-key hash — scale-safe."""
-        from tachyon_spark.functions.histogram import le_series_frame, parse_le
-
-        child = self._eval(child_expr)
-        if child.kind == "grouped" and "le" in (child.group_cols or ()):
-            rest = [c for c in child.group_cols if c != "le"]
-            if "ts" not in rest:
-                raise ValueError(
-                    f"{fname}: grouped input must keep the step "
-                    "timestamp (aggregate with by (le, ...))"
+        if node.func == "vector":
+            sub = self._eval(node.child)
+            if sub.literal is not None:
+                out = self._grid_df().select(
+                    "ts", F.lit(float(sub.literal)).alias("value")
                 )
-            df = child.df.withColumn("__le", parse_le("le"))
-            out = apply(df, rest)
-            if rest == ["ts"]:
                 return Plan("vector", out, VT_F64)
-            return Plan("grouped", out, VT_F64, group_cols=tuple(rest))
-        if child.kind == "vector" and child.streams:
-            le_map, multi, smap = le_series_frame(
-                self.conn.spark, child.streams
-            )
-            df = child.df.join(F.broadcast(le_map), "stream_id")
-            group_cols = (["__series"] if multi else []) + ["ts"]
-            out = apply(df, group_cols)
-            if multi:
-                out = out.withColumnRenamed("__series", "series")
-                return Plan(
-                    "grouped", out, VT_F64, group_cols=("series", "ts"),
-                    series_labels=smap,
-                )
-            return Plan("vector", out, VT_F64)
-        raise ValueError(
-            f"{fname} in query_range needs le-labeled bucket "
-            "series (a selector / windowed function over them, or an "
-            "aggregate grouped by (le))"
+            if sub.kind != "vector" or "stream_id" in sub.df.columns:
+                raise ValueError("vector() requires a scalar input")
+            return sub
+        plan = super()._clock_func(node)
+        if node.func != "scalar":
+            return plan
+        out = (
+            self._grid_df()
+            .join(plan.df, "ts", "left")
+            .select("ts", F.coalesce("value", F.lit(float("nan"))).alias("value"))
         )
-
-    # ------------------------------------------------------------ labels
-    def _label_func(self, node: ast.LabelFunc) -> Plan:
-        """label_replace/label_join on the grid: the same driver-side
-        stream rewrite as raw mode (labels are plan-level metadata; zero
-        distributed-plan cost) — downstream by()/matching on the grid see
-        the rewritten labels transparently."""
-        from dataclasses import replace
-
-        from tachyon_spark.plans.builder import rewrite_label_streams
-
-        child = self._eval(node.child)
-        if child.kind != "vector" or not child.streams:
-            raise ValueError(
-                f"{node.func} requires a label-carrying selector vector"
-            )
-        return replace(child, streams=rewrite_label_streams(node, child.streams))
-
-    def _count_values(self, node: ast.CountValues) -> Plan:
-        """count_values("label", v) per step: how many series report each
-        distinct value at each instant — groupBy (value, step), one
-        shuffle on that key."""
-        child = self._eval(node.child)
-        if child.kind not in ("vector", "grouped"):
-            raise ValueError("count_values requires a vector input")
-        cdf, extra = self._b._grouping_cols(
-            child, node.by, node.without, "count_values"
-        )
-        out = cdf.groupBy(
-            *extra, F.col("value").cast("string").alias(node.label), "ts"
-        ).agg(F.count("*").alias("value"))
-        return Plan(
-            "grouped", out, VT_U64, group_cols=(*extra, node.label, "ts")
-        )
+        return Plan("vector", out, VT_F64)
 
     # -------------------------------------------------------------- absent
     def _absent(self, node: ast.AbsentFunc) -> Plan:
@@ -1573,10 +1137,7 @@ class RangeEvaluator:
         (unknown metric → 1 on the whole grid) — the dead-stream alerting
         primitive, per instant. Grid anti-join against the instant
         vector's step set; the grid is data, one small exchange."""
-        grid = self.conn.spark.range(self.n_steps).select(
-            (F.lit(self.start) + F.col("id") * F.lit(self.step)).alias("ts"),
-            F.lit(1.0).alias("value"),
-        )
+        grid = self._grid_df().select("ts", F.lit(1.0).alias("value"))
         try:
             child = self._eval(node.child)
         except ValueError as e:
@@ -1595,72 +1156,29 @@ class RangeEvaluator:
         metric -> 1 on the whole grid). Present steps come from the same
         sample-to-step explode every windowed function uses; the grid
         anti-join is one small exchange."""
-        grid = self.conn.spark.range(self.n_steps).select(
-            (F.lit(self.start) + F.col("id") * F.lit(self.step)).alias("ts"),
-            F.lit(1.0).alias("value"),
-        )
+        grid = self._grid_df().select("ts", F.lit(1.0).alias("value"))
         if isinstance(node.child, ast.Subquery):
             # absent_over_time(expr[R:S]): absent when the window holds
             # no inner INSTANT (Prometheus — inner instants, not raw
             # samples; a step whose inner expression evaluates empty on
-            # the whole window is absent)
+            # the whole window is absent). With `@ T` the subquery clock
+            # pins at T, so absence is a SINGLE pinned-window fact — 1 on
+            # the whole grid when (T-R, T] holds no inner instant, empty
+            # otherwise (the same one-eval-then-fan shape as
+            # _windowed_subquery's @ path; the presence probe is a
+            # bounded limit(1) check, not a collect)
             sub = node.child
             if sub.step <= 0:
                 raise ValueError("subquery step must be positive")
-            if sub.at_ts is not None or sub.at_anchor:
-                # absent_over_time(expr[R:S] @ T): the subquery clock
-                # pins at T, so absence is a SINGLE pinned-window fact —
-                # 1 on the whole grid when (T-R, T] holds no inner
-                # instant, empty otherwise (the same one-eval-then-fan
-                # shape as _windowed_subquery's @ path; the presence
-                # probe is a bounded limit(1) check, not a collect)
-                if sub.at_anchor == "start":
-                    t = self.start
-                elif sub.at_anchor == "end":
-                    t = self.end
-                else:
-                    t = int(sub.at_ts)
-                off = sub.offset or 0
-                back = (sub.range_ // sub.step) * sub.step
-                inner_eval = RangeEvaluator(
-                    self.conn, t - back - off, t - off, sub.step,
-                    self.lookback,
-                )
-                try:
-                    inner = inner_eval._eval(sub.child)
-                except ValueError as e:
-                    if "no streams matched" in str(e):
-                        return Plan("vector", grid, VT_F64)
-                    raise
-                if (
-                    inner.kind not in ("vector", "grouped")
-                    or inner.df is None
-                    or "ts" not in inner.df.columns
-                ):
-                    raise ValueError(
-                        "query_range subquery inner expression must "
-                        "evaluate to an instant vector (absent_over_time "
-                        "over a scalar subquery is not supported)"
-                    )
-                df_i = inner.df
-                if off:
-                    df_i = df_i.withColumn("ts", F.col("ts") + F.lit(off))
-                present = (
-                    df_i.where(
-                        (F.col("ts") > t - sub.range_) & (F.col("ts") <= t)
-                    )
-                    .limit(1)
-                    .count()
-                    > 0
-                )
-                if present:
-                    return Plan("vector", grid.limit(0), VT_F64)
-                return Plan("vector", grid, VT_F64)
+            pinned = sub.at_ts is not None or sub.at_anchor
+            if pinned:
+                lo = hi = self._pin(sub)
+            else:
+                lo, hi = self.start, self.end
             off = sub.offset or 0
             back = (sub.range_ // sub.step) * sub.step
             inner_eval = RangeEvaluator(
-                self.conn, self.start - back - off, self.end - off,
-                sub.step, self.lookback,
+                self.conn, lo - back - off, hi - off, sub.step, self.lookback
             )
             try:
                 inner = inner_eval._eval(sub.child)
@@ -1681,6 +1199,10 @@ class RangeEvaluator:
             df_i = inner.df
             if off:
                 df_i = df_i.withColumn("ts", F.col("ts") + F.lit(off))
+            if pinned:
+                window = (F.col("ts") > hi - sub.range_) & (F.col("ts") <= hi)
+                present = df_i.where(window).limit(1).count() > 0
+                return Plan("vector", grid.limit(0) if present else grid, VT_F64)
             exploded = self._explode_to_steps(
                 df_i.select("ts", "value"), sub.range_
             )
@@ -1695,12 +1217,7 @@ class RangeEvaluator:
             # grid or empty (same one-eval-then-fan shape as
             # _windowed_at).
             sel = msel.selector
-            if sel.at_anchor == "start":
-                t = self.start
-            elif sel.at_anchor == "end":
-                t = self.end
-            else:
-                t = int(sel.at_ts)
+            t = self._pin(sel)
             bare = ast.MatrixSelector(
                 ast.VectorSelector(
                     sel.name, sel.matchers, offset=sel.offset,
@@ -1715,9 +1232,8 @@ class RangeEvaluator:
                 if "no streams matched" in str(e):
                     return Plan("vector", grid, VT_F64)
                 raise
-            if df.limit(1).count() > 0:
-                return Plan("vector", grid.limit(0), VT_F64)
-            return Plan("vector", grid, VT_F64)
+            present = df.limit(1).count() > 0
+            return Plan("vector", grid.limit(0) if present else grid, VT_F64)
         try:
             child, df = self._exploded(node.child)
         except ValueError as e:
@@ -1727,93 +1243,3 @@ class RangeEvaluator:
         present = df.select(F.col("__step").alias("ts")).distinct()
         out = grid.join(present, "ts", "left_anti")
         return Plan("vector", out, VT_F64)
-
-    # ---------------------------------------------------------------- getk
-    def _limit_agg(self, node: ast.LimitAgg) -> Plan:
-        """limitk/limit_ratio on the step grid: the SAME metadata-driven
-        series selection as the raw path (PlanBuilder._select_limit_series
-        — both paths must keep identical series for a given param), then a
-        pushdown-able stream_id filter on the grid frame."""
-        p_plan = self._eval(node.param)
-        if p_plan.kind != "scalar" or p_plan.literal is None:
-            raise ValueError(
-                f"query_range {node.func} parameter must be a literal"
-            )
-        child = self._eval(node.child)
-        if child.kind != "vector":
-            raise ValueError(f"{node.func} requires a vector input")
-        if "stream_id" not in child.df.columns or not child.streams:
-            raise ValueError(
-                f"{node.func} requires a label-carrying selector vector"
-            )
-        kept = PlanBuilder._select_limit_series(
-            node.func, float(p_plan.literal), child.streams, node.by,
-            node.without,
-        )
-        if kept:
-            out = child.df.where(F.col("stream_id").isin(sorted(kept)))
-        else:
-            out = child.df.where(F.lit(False))
-        streams = tuple(s for s in child.streams if s.stream_id in kept)
-        return Plan("vector", out, child.value_type, streams=streams)
-
-    def _getk(self, node: ast.GetK) -> Plan:
-        k_plan = self._eval(node.k)
-        if k_plan.kind != "scalar" or k_plan.literal is None:
-            raise ValueError("query_range topk/bottomk k must be a literal")
-        k = int(k_plan.literal)
-        child = self._eval(node.child)
-        if child.kind == "grouped" and "ts" in child.df.columns:
-            # derived instant vectors keyed by match/group columns
-            # (`topk(2, a + b)`, `topk(2, sum by (l) (...))`): per-step
-            # rank over those rows — PromQL's topk works on any instant
-            # vector, so grouped results qualify
-            if node.by or node.without:
-                raise ValueError(
-                    "topk/bottomk by/without needs a label-carrying "
-                    "selector vector (the input is already grouped)"
-                )
-            if k <= 0:
-                return Plan(
-                    "grouped", child.df.limit(0), child.value_type,
-                    group_cols=child.group_cols,
-                )
-            keys = [c for c in child.df.columns if c not in ("ts", "value")]
-            value = F.col("value")
-            w = Window.partitionBy("ts").orderBy(
-                value.desc() if node.func == "topk" else value.asc(),
-                *[F.col(c) for c in keys],  # deterministic tie-break
-            )
-            out = (
-                child.df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") <= k)
-                .drop("__rn")
-            )
-            return Plan(
-                "grouped", out, child.value_type,
-                group_cols=child.group_cols,
-            )
-        if child.kind != "vector":
-            raise ValueError("topk/bottomk requires a vector input")
-        if node.by or node.without:
-            # per-(group, INSTANT) top-k: label/series-key attach via the
-            # raw builder's broadcast maps, rank window keyed on
-            # (group cols..., step) — still one shuffle
-            if node.by:
-                df = self._b._attach_labels(child.df, node.by, child.streams)
-                cols = list(node.by)
-            else:
-                df, smap = self._b._attach_series_key(
-                    child.df, node.without, child.streams
-                )
-                cols = ["series"]
-            out = grouped_top_k(
-                df, k, [*cols, "ts"], desc=node.func == "topk"
-            )
-            return Plan(
-                "grouped", out, child.value_type, group_cols=(*cols, "ts"),
-                series_labels=smap if not node.by else (),
-            )
-        # per-INSTANT top-k (PromQL): rank window per step, one shuffle
-        out = grouped_top_k(child.df, k, ["ts"], desc=node.func == "topk")
-        return Plan("grouped", out, child.value_type, group_cols=("ts",))

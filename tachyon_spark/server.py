@@ -47,6 +47,24 @@ class _Handler(BaseHTTPRequestHandler):
         self.end_headers()
         self.wfile.write(body)
 
+    def _api_error(self, exc: Exception) -> None:
+        """Prometheus error envelope for a failed /api/v1 request, by
+        cause: a result over the serving cap is 422 `execution` (what
+        Prometheus returns past --query.max-samples); a malformed request
+        (ValueError, PromQLError included; a missing or mistyped
+        parameter) is 400 `bad_data`; anything else is the engine's own
+        failure (a Spark error, an OOM, a bug) and is 500 `internal`, so
+        clients never retry it as their mistake."""
+        from tachyon_spark.promapi import TooManyPoints
+
+        if isinstance(exc, TooManyPoints):
+            code, kind = 422, "execution"
+        elif isinstance(exc, (ValueError, KeyError, TypeError)):
+            code, kind = 400, "bad_data"
+        else:
+            code, kind = 500, "internal"
+        self._json(code, {"status": "error", "errorType": kind, "error": str(exc)})
+
     def do_GET(self):
         if self.path == "/health":
             self._json(200, {"status": "ok"})
@@ -148,11 +166,7 @@ class _Handler(BaseHTTPRequestHandler):
                      "data": conn.tsdb_status(int(req.get("top", 10)))},
                 )
             except Exception as exc:
-                self._json(
-                    400,
-                    {"status": "error", "errorType": "bad_data",
-                     "error": str(exc)},
-                )
+                self._api_error(exc)
             return
         if parsed.path == "/api/v1/labels" or parsed.path.startswith(
             "/api/v1/label/"
@@ -207,11 +221,7 @@ class _Handler(BaseHTTPRequestHandler):
                         data = conn.label_values(label)
                 self._json(200, {"status": "success", "data": data})
             except Exception as exc:
-                self._json(
-                    400,
-                    {"status": "error", "errorType": "bad_data",
-                     "error": str(exc)},
-                )
+                self._api_error(exc)
             return
         if parsed.path in ("/labels", "/label_values", "/series"):
             # GET forms of the metadata endpoints (what Prometheus
@@ -267,11 +277,7 @@ class _Handler(BaseHTTPRequestHandler):
         Grafana's datapoint-to-trace links call. Prometheus envelope:
         data = [{seriesLabels, exemplars: [{labels, value,
         timestamp}]}]."""
-        from tachyon_spark.promapi import (
-            DEFAULT_MAX_POINTS,
-            TooManyPoints,
-            exemplars_envelope,
-        )
+        from tachyon_spark.promapi import DEFAULT_MAX_POINTS, exemplars_envelope
 
         try:
             conn = _get_connection(req["path"])
@@ -284,28 +290,14 @@ class _Handler(BaseHTTPRequestHandler):
                 ),
             )
             self._json(200, {"status": "success", "data": data})
-        except TooManyPoints as exc:
-            self._json(
-                422,
-                {"status": "error", "errorType": "execution",
-                 "error": str(exc)},
-            )
         except Exception as exc:
-            self._json(
-                400,
-                {"status": "error", "errorType": "bad_data",
-                 "error": str(exc)},
-            )
+            self._api_error(exc)
 
     def _handle_api(self, req: dict) -> None:
         """Prometheus API response shape (promapi.py): what Grafana-style
         clients poll, via GET query params or POST JSON. ns_clock
         (default True) renders native-ns timestamps as unix seconds."""
-        from tachyon_spark.promapi import (
-            DEFAULT_MAX_POINTS,
-            TooManyPoints,
-            prometheus_envelope,
-        )
+        from tachyon_spark.promapi import DEFAULT_MAX_POINTS, prometheus_envelope
 
         try:
             conn = _get_connection(req["path"])
@@ -364,21 +356,8 @@ class _Handler(BaseHTTPRequestHandler):
                     q, req.get("ns_clock", True), cap, instant
                 ),
             )
-        except TooManyPoints as exc:
-            # Prometheus returns 422 "execution" when a query trips
-            # --query.max-samples; mirror that so clients can distinguish
-            # a too-big result from a malformed request
-            self._json(
-                422,
-                {"status": "error", "errorType": "execution",
-                 "error": str(exc)},
-            )
         except Exception as exc:
-            self._json(
-                400,
-                {"status": "error", "errorType": "bad_data",
-                 "error": str(exc)},
-            )
+            self._api_error(exc)
 
     def do_POST(self):
         from urllib.parse import parse_qs, urlparse

@@ -1156,3 +1156,53 @@ def test_http_post_form_encoded(tmp_path, spark):
         assert body["data"]["result"][0]["value"] == [25, "2.5"]
     finally:
         srv.shutdown()
+
+
+def test_api_error_classification(tmp_path, spark, monkeypatch):
+    """Prometheus-envelope handlers classify a failure by cause: a
+    malformed request is 400 bad_data, an engine failure is 500
+    internal (not a client error), on every /api/v1 read endpoint."""
+    from urllib.parse import urlencode
+
+    import tachyon_spark.promapi as promapi
+    import tachyon_spark.server as srv_mod
+    from tachyon_spark.connection import Connection
+
+    db = str(tmp_path / "errdb")
+    conn = Connection(db, spark)
+    conn.create_stream('m{k="1"}', "f64")
+    srv_mod._connections[db] = conn
+    srv = serve(port=0)
+    port = srv.server_address[1]
+
+    def get(path, **params):
+        qs = urlencode({"path": db, **params})
+        try:
+            with urllib.request.urlopen(f"http://127.0.0.1:{port}{path}?{qs}") as r:
+                return r.status, json.load(r)
+        except urllib.error.HTTPError as e:
+            return e.code, json.load(e)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("engine failure")
+
+    try:
+        code, body = get("/api/v1/query", query="not a query ((", start=0, end=1)
+        assert (code, body["errorType"]) == (400, "bad_data")
+        monkeypatch.setattr(conn, "query", boom)
+        monkeypatch.setattr(conn, "tsdb_status", boom)
+        monkeypatch.setattr(conn, "label_names", boom)
+        monkeypatch.setattr(promapi, "exemplars_envelope", boom)
+        for path, params in (
+            ("/api/v1/query", {"query": 'm{k="1"}', "start": 0, "end": 1}),
+            ("/api/v1/status/tsdb", {}),
+            ("/api/v1/labels", {}),
+            ("/api/v1/query_exemplars", {"query": "m", "start": 0, "end": 1}),
+        ):
+            code, body = get(path, **params)
+            assert (code, body["status"], body["errorType"]) == (
+                500, "error", "internal"
+            ), path
+            assert body["error"] == "engine failure"
+    finally:
+        srv.shutdown()

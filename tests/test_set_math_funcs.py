@@ -1,6 +1,8 @@
 """Set operators (and/or/unless on ts keys) and elementwise math functions —
 extensions; the reference has neither (planner.rs:95-107, 218-222)."""
 
+import math
+
 import pytest
 
 
@@ -133,6 +135,28 @@ def test_sgn_and_round(golden_db):
     # to_nearest = 0.5
     q3 = golden_db.query("round(floats, 0.5)", 0, 100)
     assert [v for _, v in q3.rows()] == [4.0, 3.0, 2.5, 1.5]
+
+
+@pytest.mark.parametrize(
+    "call,fn",
+    [
+        ("hour({})", lambda v: float(math.floor(v / 3600.0) % 24)),
+        ("abs({})", abs),
+        ("sqrt({})", math.sqrt),
+        ("clamp_min({}, 30)", lambda v: max(v, 30.0)),
+        ("round({}, 7)", lambda v: math.floor(v / 7.0 + 0.5) * 7.0),
+    ],
+    ids=["hour", "abs", "sqrt", "clamp_min", "round"],
+)
+def test_elementwise_over_grouped(golden_db, call, fn):
+    # one row per group, f applied to that group's sum (mobile 24, web 60):
+    # every elementwise function takes a grouped input, not only calendar
+    q = golden_db.query(call.format("sum by (service) (vm_req)"), 0, 100)
+    got = sorted(tuple(r) for r in q.df().collect())
+    assert got == [
+        ("mobile", pytest.approx(fn(24.0))),
+        ("web", pytest.approx(fn(60.0))),
+    ]
 
 
 def test_extended_math_funcs(golden_db):

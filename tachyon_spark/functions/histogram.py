@@ -20,6 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from tachyon_spark.plans.builder import local_df
 
 INF = float("inf")
 
@@ -53,9 +56,14 @@ def le_series_frame(spark, streams):
         key = ",".join(f"{k}={v}" for k, v in rest)
         les[s.stream_id] = (le, key)
         smap.setdefault(key, rest)
-    frame = spark.createDataFrame(
+    frame = local_df(
+        spark,
         [(sid, le, grp) for sid, (le, grp) in les.items()],
-        "stream_id string, __le double, __series string",
+        T.StructType([
+            T.StructField("stream_id", T.StringType()),
+            T.StructField("__le", T.DoubleType()),
+            T.StructField("__series", T.StringType()),
+        ]),
     )
     return frame, len(smap) > 1, tuple(smap.items())
 

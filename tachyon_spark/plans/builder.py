@@ -78,18 +78,54 @@ def rewrite_label_streams(node, streams) -> tuple:
             new_streams.append(replace(s, labels=labels))
     return tuple(new_streams)
 
-def inline_ids_df(spark, ids, col: str = "stream_id") -> DataFrame:
-    """A 1-column DataFrame of driver-known ids WITHOUT createDataFrame.
 
-    createDataFrame costs ~40 ms of py4j/serialization per call even for a
-    handful of rows (measured r16, §4-adjacent driver latency); the grid
-    evaluator builds one id frame per selector instant. Packing the ids
-    into ONE string literal and exploding a split() costs a few round
-    trips. Falls back to createDataFrame when an id contains the
+def string_schema(names) -> T.StructType:
+    """Nullable string columns: the schema of every label / match-key map."""
+    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+
+
+def local_df(spark, rows, schema: T.StructType) -> DataFrame:
+    """A DataFrame of driver-known rows that runs in the JVM only.
+
+    A Python list handed to createDataFrame becomes a pickled PythonRDD
+    whose rows Python workers re-read, in a Spark job of their own, every
+    time the frame executes (typically as the build side of a broadcast
+    join). Here the rows go to the JVM as Arrow record batches instead
+    and are served from there. The relation is then re-wrapped as an RDD
+    scan: a local relation would hand the optimizer an exact, tiny size
+    estimate and flip unhinted joins above the map from sort-merge to
+    broadcast, while an RDD scan keeps the unknown-size estimate of the
+    list path, so plans change only inside the leaf. The schema is always
+    explicit, so an empty row list or an all-null column keeps its type."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    local = spark.createDataFrame(table, schema)._jdf
+    return DataFrame(
+        spark._jsparkSession.internalCreateDataFrame(
+            local.queryExecution().toRdd(), local.schema(), False
+        ),
+        spark,
+    )
+
+
+def inline_ids_df(spark, ids, col: str = "stream_id") -> DataFrame:
+    """A 1-column DataFrame of driver-known ids, from one string literal.
+
+    The grid evaluator builds one id frame per selector instant. Packing
+    the ids into ONE string literal and exploding a split() costs a few
+    py4j round trips and nothing at execution. (A list-fed createDataFrame
+    costs both: tens of ms of build, and a Python-worker job every time
+    the frame executes.) Falls back to local_df when an id contains the
     separator (never for catalog-generated ids)."""
     sep = "\x1f"
     if any(sep in i for i in ids):
-        return spark.createDataFrame([(i,) for i in ids], f"{col} string")
+        return local_df(spark, [(i,) for i in ids], string_schema([col]))
     return spark.range(1).select(
         F.explode(F.split(F.lit(sep.join(ids)), sep, -1)).alias(col)
     )
@@ -1610,11 +1646,16 @@ class PlanBuilder:
         `keys` — no match partner — drop out via the inner join). The keys
         are computed once driver-side and used verbatim on both the Spark
         and the bookkeeping side, so they cannot diverge."""
-        rows = [(sid,) + key for sid, key in keys.items()]
-        map_df = self.conn.spark.createDataFrame(
-            rows, ["stream_id"] + key_cols
+        key_map = self._key_map(keys, key_cols)
+        return plan.df.join(F.broadcast(key_map), "stream_id")
+
+    def _key_map(self, keys: dict, key_cols: list[str]) -> DataFrame:
+        """(stream_id, *key_cols) frame of the driver-computed match keys."""
+        return local_df(
+            self.conn.spark,
+            [(sid,) + key for sid, key in keys.items()],
+            string_schema(["stream_id"] + key_cols),
         )
-        return plan.df.join(F.broadcast(map_df), "stream_id")
 
     def _match_keys(
         self, matching: ast.VectorMatching, lhs_streams, rhs_streams
@@ -1703,16 +1744,12 @@ class PlanBuilder:
             # many side = left; replicate the unique right series onto each
             # left series of its group (broadcast of a per-series frame)
             series = ["stream_id"] + key_cols
-            lmap = self.conn.spark.createDataFrame(
-                [(sid,) + k for sid, k in lkeys.items()], ["stream_id"] + key_cols
-            )
+            lmap = self._key_map(lkeys, key_cols)
             a_frame = keyed_l
             b_frame = keyed_r.drop("stream_id").join(F.broadcast(lmap), key_cols)
         else:  # group == 'right': many side = right
             series = ["stream_id"] + key_cols
-            rmap = self.conn.spark.createDataFrame(
-                [(sid,) + k for sid, k in rkeys.items()], ["stream_id"] + key_cols
-            )
+            rmap = self._key_map(rkeys, key_cols)
             a_frame = keyed_l.drop("stream_id").join(F.broadcast(rmap), key_cols)
             b_frame = keyed_r
         vt = result_type(op, lhs.value_type, rhs.value_type)
@@ -1748,8 +1785,8 @@ class PlanBuilder:
                     one_keys[s.stream_id]
                     + tuple(s.labels.get(l, "") for l in matching.include)
                 )
-        inc_df = self.conn.spark.createDataFrame(
-            rows, key_cols + list(matching.include)
+        inc_df = local_df(
+            self.conn.spark, rows, string_schema(key_cols + list(matching.include))
         ).dropDuplicates(key_cols)
         return out.join(F.broadcast(inc_df), key_cols, "left")
 
@@ -1983,7 +2020,7 @@ class PlanBuilder:
                 [T.StructField("series", T.StringType(), False)]
                 + [T.StructField(b, T.StringType(), True) for b in node.by]
             )
-            key_df = self.conn.spark.createDataFrame(rows, schema)
+            key_df = local_df(self.conn.spark, rows, schema)
             df = child.df.join(F.broadcast(key_df), "series").drop("series")
             return df, list(node.by), ()
         drop = set(node.without)
@@ -1993,8 +2030,8 @@ class PlanBuilder:
             nk = ",".join(f"{k}={v}" for k, v in kept)
             rows.append((series, nk))
             new_map.setdefault(nk, kept)
-        key_df = self.conn.spark.createDataFrame(
-            rows, "series string, __series_out string"
+        key_df = local_df(
+            self.conn.spark, rows, string_schema(["series", "__series_out"])
         )
         df = (
             child.df.join(F.broadcast(key_df), "series")
@@ -2024,8 +2061,8 @@ class PlanBuilder:
                 "label-carrying selector vector"
             )
         rows, smap = self._series_key_rows(streams, set(without))
-        key_df = self.conn.spark.createDataFrame(
-            rows, "stream_id string, series string"
+        key_df = local_df(
+            self.conn.spark, rows, string_schema(["stream_id", "series"])
         )
         return df.join(F.broadcast(key_df), "stream_id", "left"), ["series"], smap
 
@@ -2049,7 +2086,7 @@ class PlanBuilder:
                 [T.StructField("stream_id", T.StringType(), False)]
                 + [T.StructField(l, T.StringType(), True) for l in labels]
             )
-            cat = self.conn.spark.createDataFrame(rows, schema)
+            cat = local_df(self.conn.spark, rows, schema)
         else:
             cat = self.conn.catalog.df().select(
                 "stream_id", *[F.col("labels").getItem(l).alias(l) for l in labels]

@@ -77,6 +77,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from tachyon_spark.operators.select import select_range
 from tachyon_spark.plans.builder import (
@@ -85,6 +86,8 @@ from tachyon_spark.plans.builder import (
     Plan,
     PlanBuilder,
     inline_ids_df,
+    local_df,
+    string_schema,
 )
 from tachyon_spark.promql import ast
 from tachyon_spark.types import VT_F64, VT_U64, promote
@@ -772,17 +775,19 @@ class RangeEvaluator(PlanBuilder):
         return instants, rows_per, vts
 
     def _map_side_df(self, rows, key_cols):
-        """(stream_id, *key_cols, __side) membership frame from driver
-        rows, via one packed string literal (same rationale as
-        inline_ids_df: createDataFrame costs ~40 ms per call)."""
-        cols = ["stream_id"] + key_cols + ["__side"]
+        """(stream_id, *key_cols, __side int) membership frame from
+        driver rows, via one packed string literal (same rationale as
+        inline_ids_df)."""
         sep, rsep = "\x1f", "\x1e"
         if len(rows) > 2_000 or any(
             sep in str(f) or rsep in str(f) for r in rows for f in r[:-1]
         ):
-            # big maps: one packed literal would bloat the plan; Arrow
-            # createDataFrame is the right tool past a few thousand rows
-            return self.conn.spark.createDataFrame(rows, cols)
+            # big maps: one packed literal would bloat the plan; past a
+            # few thousand rows local_df's Arrow batches are the right tool
+            schema = string_schema(["stream_id"] + key_cols).add(
+                "__side", T.IntegerType()
+            )
+            return local_df(self.conn.spark, rows, schema)
         packed = rsep.join(sep.join(str(f) for f in r) for r in rows)
         df = (
             self.conn.spark.range(1)

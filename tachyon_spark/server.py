@@ -24,6 +24,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 _connections: dict[str, object] = {}
 _lock = threading.Lock()
+# a malformed request: a bad value (PromQLError and TooManyPoints are
+# ValueErrors), a missing parameter, a mistyped one
+_CLIENT_ERRORS = (ValueError, KeyError, TypeError)
 
 
 def _get_connection(path: str):
@@ -59,11 +62,23 @@ class _Handler(BaseHTTPRequestHandler):
 
         if isinstance(exc, TooManyPoints):
             code, kind = 422, "execution"
-        elif isinstance(exc, (ValueError, KeyError, TypeError)):
+        elif isinstance(exc, _CLIENT_ERRORS):
             code, kind = 400, "bad_data"
         else:
             code, kind = 500, "internal"
         self._json(code, {"status": "error", "errorType": kind, "error": str(exc)})
+
+    def _error(self, exc: Exception) -> None:
+        """A failed request outside the /api/v1 read handlers: /api/v1
+        paths (the admin endpoints, an unparsable POST body) answer with
+        the Prometheus envelope of _api_error; the rest with
+        `{"error": ...}`, 400 for a malformed request and 500 for the
+        engine's own failure."""
+        if self.path.startswith("/api/v1/"):
+            self._api_error(exc)
+        else:
+            code = 400 if isinstance(exc, _CLIENT_ERRORS) else 500
+            self._json(code, {"error": str(exc)})
 
     def do_GET(self):
         if self.path == "/health":
@@ -106,7 +121,7 @@ class _Handler(BaseHTTPRequestHandler):
                 self.end_headers()
                 self.wfile.write(body)
             except Exception as exc:
-                self._json(400, {"error": str(exc)})
+                self._error(exc)
             return
         if parsed.path == "/metrics":
             # OpenMetrics text exposition (promapi.openmetrics_text):
@@ -135,7 +150,7 @@ class _Handler(BaseHTTPRequestHandler):
                 self.end_headers()
                 self.wfile.write(body)
             except Exception as exc:
-                self._json(400, {"error": str(exc)})
+                self._error(exc)
             return
         if parsed.path == "/api/v1/status/buildinfo":
             # Grafana probes this on datasource setup to pick its
@@ -248,7 +263,7 @@ class _Handler(BaseHTTPRequestHandler):
                         {"series": conn.series(req["selector"], st, en)},
                     )
             except Exception as exc:
-                self._json(400, {"error": str(exc)})
+                self._error(exc)
             return
         if parsed.path in ("/api/v1/query", "/api/v1/query_range"):
             req = dict(parse_qsl(parsed.query))
@@ -769,15 +784,7 @@ class _Handler(BaseHTTPRequestHandler):
                 payload = {"value_type": q.value_type, "values": q.rows()}
             self._json(200, payload)
         except Exception as exc:  # mirror the reference's error JSON
-            if self.path.startswith("/api/v1/"):
-                # Prometheus-style error envelope for the /api surface
-                self._json(
-                    400,
-                    {"status": "error", "errorType": "bad_data",
-                     "error": str(exc)},
-                )
-            else:
-                self._json(400, {"error": str(exc)})
+            self._error(exc)
 
 
 def serve(host: str = "127.0.0.1", port: int = 8080) -> ThreadingHTTPServer:

@@ -1206,3 +1206,64 @@ def test_api_error_classification(tmp_path, spark, monkeypatch):
             assert body["error"] == "engine failure"
     finally:
         srv.shutdown()
+
+
+def test_endpoint_error_classification(tmp_path, spark, monkeypatch):
+    """Endpoints outside the /api/v1 query handlers classify a failure
+    the same way: a malformed request stays 400, an engine failure is
+    500. /api/v1 paths keep the Prometheus envelope, the others answer
+    {"error": ...}."""
+    from urllib.parse import quote
+
+    import tachyon_spark.promapi as promapi
+    import tachyon_spark.server as srv_mod
+    from tachyon_spark.connection import Connection
+
+    db = str(tmp_path / "errdb2")
+    conn = Connection(db, spark)
+    conn.create_stream('m{k="1"}', "f64")
+    srv_mod._connections[db] = conn
+    srv = serve(port=0)
+    port = srv.server_address[1]
+
+    def call(path, body=None):
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}{path}",
+            data=None if body is None else json.dumps(body).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+        try:
+            with urllib.request.urlopen(req) as r:
+                return r.status, json.load(r)
+        except urllib.error.HTTPError as e:
+            return e.code, json.load(e)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("engine failure")
+
+    q = quote(db)
+    try:
+        # malformed requests stay client errors
+        assert call(f"/federate?path={q}")[0] == 400
+        assert call("/metrics")[0] == 400  # no ?path=
+        code, body = call(
+            "/api/v1/admin/tsdb/delete_series", {"path": db}
+        )  # no match
+        assert (code, body["errorType"]) == (400, "bad_data")
+        monkeypatch.setattr(promapi, "openmetrics_text", boom)
+        monkeypatch.setattr(conn, "delete_series", boom)
+        monkeypatch.setattr(conn, "label_names", boom)
+        for path in (
+            f"/federate?path={q}&match[]=m", f"/metrics?path={q}",
+            f"/labels?path={q}",
+        ):
+            assert call(path) == (500, {"error": "engine failure"}), path
+        assert call(
+            "/api/v1/admin/tsdb/delete_series", {"path": db, "match": "m"}
+        ) == (500, {"status": "error", "errorType": "internal",
+                    "error": "engine failure"})
+        assert call("/labels", {"path": db}) == (
+            500, {"error": "engine failure"}
+        )
+    finally:
+        srv.shutdown()

@@ -53,6 +53,12 @@ def strict_rows(pdf):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
+    qs = queries()
+    unknown = sorted(only - qs.keys()) if only else []
+    if unknown:
+        # a requested name that is not registered would otherwise be
+        # skipped silently and the run would still read "all ok"
+        sys.exit(f"not in queries(): {', '.join(unknown)}")
 
     from tachyon_spark.session import get_spark
 
@@ -63,7 +69,6 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs = queries()
     oracles = oracle_sql()
     ok = bad = 0
     for name, fn in qs.items():

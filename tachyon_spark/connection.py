@@ -366,7 +366,8 @@ class Connection:
             stage = os.path.join(self.db_dir, "_delete_tmp", str(b))
             shutil.rmtree(stage, ignore_errors=True)
             part = ["ts_bucket"] if self.time_bucket else []
-            w = kept.sortWithinPartitions("stream_id", "ts").write.mode("overwrite")
+            # partition columns first, as in _write_samples
+            w = kept.sortWithinPartitions(*part, "stream_id", "ts").write.mode("overwrite")
             if part:
                 w = w.partitionBy(*part)
             w.parquet(stage)
@@ -547,7 +548,8 @@ class Connection:
 
     def _write_samples(self, df: DataFrame, single_stream: bool = False) -> None:
         # One stream's buffer fits one task; bulk loads shuffle by partition
-        # dir so each directory is written by one task (big files, sorted).
+        # dir so each directory is written by one task (one file per dir per
+        # write), and the dirs are spread over every core.
         self.uncache_samples()
         if self.stream_buckets:
             df = df.withColumn("stream_bucket", stream_bucket_col(self.stream_buckets))
@@ -565,12 +567,21 @@ class Connection:
         # (measured r12: ~4 s per 1-row flush -> ~0.4 s). The shuffle moves
         # only the flush buffer, which is driver-memory-bounded by
         # construction.
-        df = df.repartition(1) if single_stream else df.repartition(*part_cols)
+        # An explicit partition count: AQE coalesces a small batch's shuffle
+        # into one task, which then writes every bucket file in turn.
+        df = (
+            df.repartition(1)
+            if single_stream
+            else df.repartition(self.spark.sparkContext.defaultParallelism, *part_cols)
+        )
         # Bucketed dirs hold many streams: cluster row groups by stream so
-        # Parquet min/max stats on stream_id prune single-stream reads.
+        # Parquet min/max stats on stream_id prune single-stream reads. The
+        # sort leads with the partition columns: a partitioned write needs
+        # its input sorted by them, and a sort that does not start with
+        # them is replaced by one on the partition columns alone.
         sort_cols = ["stream_id", "ts"] if self.stream_buckets else ["ts"]
         (
-            df.sortWithinPartitions(*sort_cols)
+            df.sortWithinPartitions(*part_cols, *sort_cols)
             .write.mode("append")
             .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
             .partitionBy(*part_cols)
@@ -612,13 +623,14 @@ class Connection:
     def samples_df(self) -> DataFrame:
         """The samples relation, reused while the samples tree is unchanged.
 
-        A fresh `spark.read.parquet(samples/)` lists the tree, and the
-        hash layout's 64 `stream_bucket=` dirs exceed Spark's 32-path
-        parallel-partition-discovery threshold, so every fresh read starts
-        a distributed file-listing job before any query work. Instead the
-        relation is memoized under a driver-side state key: every
-        non-hidden file under samples/ with its size and mtime (the
-        Catalog._load idiom).
+        A fresh `spark.read.parquet(samples/)` lists the tree. `get_spark`
+        raises Spark's parallel-partition-discovery threshold to 1024
+        paths, so the hash layout's 64 `stream_bucket=` dirs are listed on
+        the driver; under Spark's default of 32 (a session built
+        elsewhere) every fresh read starts a distributed file-listing job
+        before any query work. Either way the relation is memoized under
+        a driver-side state key: every non-hidden file under samples/
+        with its size and mtime (the Catalog._load idiom).
         Spark lists the tree again only when that key changes, whoever
         changed it — this Connection, another Connection on the same db,
         the CLI, or a file dropped straight into the tree.

@@ -29,6 +29,14 @@ def get_spark(app_name: str = "tachyon_spark", master: str | None = None) -> Spa
         # driver testdata writes TIMESTAMP(NANOS) parquet; read as long nanos
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # list the samples tree on the driver: the default threshold of 32
+        # paths sends the hash layout's 64 bucket dirs to a listing job on
+        # every relation rebuild, i.e. the read after each ingest batch
+        # (64 dirs / 640 files on 4 cores: 0.35-0.45 s as a job, 0.07 s on
+        # the driver); fan-outs wider than 1024 dirs (legacy
+        # one-dir-per-stream dbs with thousands of streams) keep Spark's
+        # distributed listing
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )

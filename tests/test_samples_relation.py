@@ -1,6 +1,6 @@
 """Connection.samples_df() reuses one relation per on-disk state of the
-samples tree: an unchanged multi-bucket db builds queries without Spark's
-file-listing job, and every write — through this Connection, another
+samples tree, and a changed tree is listed on the driver: a multi-bucket
+db builds queries without Spark's file-listing job, and every write — through this Connection, another
 Connection on the same db, the HTTP server's cached Connection, or a file
 dropped straight into the tree — is seen by the next query."""
 
@@ -45,28 +45,34 @@ def _load(conn, t0):
 
 
 def test_unchanged_db_builds_without_listing_job(spark, tmp_path):
-    conn = Connection(str(tmp_path / "db"), spark)
-    conn.create_streams([(f'm{{i="{i}"}}', "f64") for i in range(N_STREAMS)])
-    _load(conn, 0)
-    buckets = [d for d in os.listdir(conn.samples_path) if d.startswith("stream_bucket=")]
-    # above Spark's 32-path parallel partition discovery threshold
-    assert len(buckets) > 32
+    # the hash layout, and the same with nested ts_bucket= dirs below it
+    for name, kw in (("hashed", {}), ("time_bucket", {"time_bucket": 500})):
+        conn = Connection(str(tmp_path / name), spark, **kw)
+        conn.create_streams([(f'm{{i="{i}"}}', "f64") for i in range(N_STREAMS)])
+        _load(conn, 0)
+        buckets = [d for d in os.listdir(conn.samples_path) if d.startswith("stream_bucket=")]
+        # above Spark's default 32-path parallel partition discovery threshold
+        assert len(buckets) > 32
 
-    def build():
-        return conn.query_range('sum(m{i=~"1.*"})', 0, 90, 10)
+        def build(start=0):
+            return conn.query_range('sum(m{i=~"1.*"})', start, start + 90, 10)
 
-    _, first = _jobs_started(spark, build)
-    assert first >= 1  # the tree is listed once
-    q, second = _jobs_started(spark, build)
-    assert second == 0
-    assert conn.samples_df() is conn.samples_df()
-    assert len(q.rows()) == STEPS
+        # the session lists the tree on the driver: no listing job, ever
+        _, first = _jobs_started(spark, build)
+        assert first == 0
+        q, second = _jobs_started(spark, build)
+        assert second == 0
+        before = conn.samples_df()
+        assert before is conn.samples_df()
+        assert len(q.rows()) == STEPS
 
-    _load(conn, 1000)
-    _, after_write = _jobs_started(spark, build)
-    assert after_write >= 1  # new files: listed again
-    _, settled = _jobs_started(spark, build)
-    assert settled == 0
+        _load(conn, 1000)
+        q, after_write = _jobs_started(spark, lambda: build(1000))
+        assert after_write == 0
+        assert conn.samples_df() is not before  # new files: a new relation
+        assert len(q.rows()) == STEPS  # the second load's rows
+        _, settled = _jobs_started(spark, build)
+        assert settled == 0
 
 
 def _values(conn, sel, start=0, end=10_000):

@@ -64,11 +64,6 @@ MAX_RECORDS_PER_FILE = 4_000_000
 # one-dir-per-stream). A few x cluster parallelism is right at scale.
 DEFAULT_STREAM_BUCKETS = 64
 
-# Selectors matching more ids than this compile to a broadcast semi-join
-# against the catalog-resolved id frame instead of an isin() literal — an
-# unbounded IN-list is a driver/codegen bottleneck at high cardinality.
-ISIN_THRESHOLD = 1_000
-
 
 def stream_bucket_py(stream_id: str, n: int) -> int:
     """crc32(utf8) % n — MUST agree with stream_bucket_col (Spark's crc32
@@ -147,7 +142,6 @@ class Connection:
         self.compat_rate_last_first = compat_rate_last_first
         self.prometheus_extrapolation = prometheus_extrapolation
         self.approx_aggregates = approx_aggregates
-        self.isin_threshold = ISIN_THRESHOLD
         self._samples_memo: tuple | None = None
         self._recover_partial_delete()
 
@@ -307,22 +301,14 @@ class Connection:
             check_matcher_regexes(g)
         rows = self.catalog.resolve(expr.name, expr.matchers, expr.or_groups)
         if rows and (start is not None or end is not None):
-            from tachyon_spark.operators.select import select_range
+            from tachyon_spark.operators.select import select_streams
 
-            ids = [r.stream_id for r in rows]
-            n_sb = self.stream_buckets or 0
-            buckets = None
-            if n_sb:
-                bset = {stream_bucket_py(i, n_sb) for i in ids}
-                if len(bset) < n_sb:
-                    buckets = sorted(bset)
-            scan = select_range(
-                self.samples_df(),
-                ids,
-                start,
-                end,
-                time_bucket=self.time_bucket,
-                stream_buckets=buckets,
+            scan = select_streams(
+                self, [r.stream_id for r in rows],
+                lambda: self.catalog.resolve_df(
+                    expr.name, expr.matchers, expr.or_groups
+                ),
+                start, end,
             )
             present = {
                 x.stream_id

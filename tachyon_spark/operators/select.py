@@ -10,20 +10,24 @@ sorted by (stream_id, ts) within files, Catalyst turns this into partition
 pruning + row-group min/max skipping — the distributed equivalent of the
 reference's SQLite file catalog (query/indexer.rs:323-343).
 
-High-cardinality posture: a selector matching a handful of ids compiles to
-an ``isin`` literal (best pushdown); past the builder's threshold it becomes
-a BROADCAST SEMI-JOIN against the catalog-resolved id frame — an unbounded
+High-cardinality posture (`select_streams`, the one decision every
+selector scan takes): a selector matching a handful of ids compiles to an
+``isin`` literal (best pushdown); past ISIN_THRESHOLD ids it becomes a
+BROADCAST SEMI-JOIN against the catalog-resolved id frame — an unbounded
 IN-list literal is a driver/codegen bottleneck at 10^5+ matched series and
 cannot be what a 1000-executor plan carries.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Past this many matched series a selector semi-joins an id frame instead
+# of carrying its ids as an IN-list literal.
+ISIN_THRESHOLD = 1_000
 # Broadcast the id frame below this many ids; beyond it, let AQE pick the
 # join strategy (a 10^7-row broadcast would OOM the driver).
 BROADCAST_IDS_MAX = 5_000_000
@@ -79,3 +83,27 @@ def select_range(
             rhs = F.broadcast(rhs)
         df = df.join(rhs, stream_col, "left_semi")
     return df
+
+
+def select_streams(
+    conn, ids: Sequence[str], frame: Callable[[], DataFrame],
+    start: int | None, end: int | None,
+) -> DataFrame:
+    """The samples of the streams `ids` in [start, end] on `conn`'s
+    layout: `ids` go into the plan as an ``isin`` literal up to
+    ISIN_THRESHOLD, past it the scan semi-joins `frame()` (a thunk, so a
+    small selector never builds it). The scan reads only the hash-bucket
+    dirs the ids fall in, unless they cover every bucket."""
+    buckets = None
+    if conn.stream_buckets:
+        from tachyon_spark.connection import stream_bucket_py
+
+        bset = {stream_bucket_py(i, conn.stream_buckets) for i in ids}
+        if len(bset) < conn.stream_buckets:
+            buckets = sorted(bset)
+    rhs = frame() if len(ids) > ISIN_THRESHOLD else None
+    return select_range(
+        conn.samples_df(), ids if rhs is None else None, start, end,
+        time_bucket=conn.time_bucket, stream_ids_df=rhs, id_count=len(ids),
+        stream_buckets=buckets,
+    )

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 
 from tachyon_spark.operators.aggregates import grouped_agg, scalar_agg
 from tachyon_spark.operators.interpolate import interpolated_binop
-from tachyon_spark.operators.select import select_range
+from tachyon_spark.operators.select import select_streams
 from tachyon_spark.operators.topk import bottom_k, grouped_top_k, top_k
 from tachyon_spark.promql import ast
 from tachyon_spark.types import VT_F64, VT_I64, VT_U64, is_integer, promote, result_type
@@ -608,7 +608,7 @@ class PlanBuilder:
         runs per (series, TUMBLING window): one scan + one hash shuffle on
         that key (the lag window and the aggregation share the
         partitioning) — the distributed plan shape at any scale."""
-        compat = getattr(self.conn, "compat_rate_last_first", False)
+        compat = self.conn.compat_rate_last_first
         if isinstance(node.child, ast.MatrixSelector):
             return self._range_windowed(node.func, node.child)
         if isinstance(node.child, ast.Subquery):
@@ -752,7 +752,7 @@ class PlanBuilder:
         win = self._window_col(msel)
         agg, vt = self._over_time_agg(
             fn, child.value_type, node.arg,
-            approx=getattr(self.conn, "approx_aggregates", False),
+            approx=self.conn.approx_aggregates,
         )
         out = child.df.groupBy(*self._series_window_keys(child, win)).agg(
             agg.alias("value")
@@ -833,7 +833,7 @@ class PlanBuilder:
         win = ((F.col("ts") - a) - (F.col("ts") - a) % width + a).alias("ts")
         agg, vt = self._over_time_agg(
             fn, inner_plan.value_type, arg,
-            approx=getattr(self.conn, "approx_aggregates", False),
+            approx=self.conn.approx_aggregates,
         )
         keys = [win]
         if "stream_id" in inner_plan.df.columns:
@@ -1283,7 +1283,7 @@ class PlanBuilder:
             tdiff = (F.col("__ts") - F.lag("__ts").over(w)).cast("double")
             if func == "irate":
                 num = diff
-                if not getattr(self.conn, "compat_rate_last_first", False):
+                if not self.conn.compat_rate_last_first:
                     num = F.when(diff >= 0, diff).otherwise(
                         F.col("value").cast("double")
                     )
@@ -1369,7 +1369,7 @@ class PlanBuilder:
         return self._range_windowed_frame(func, child, win)
 
     def _range_windowed_frame(self, func: str, child: Plan, win) -> Plan:
-        compat = getattr(self.conn, "compat_rate_last_first", False)
+        compat = self.conn.compat_rate_last_first
         if func in ("rate", "increase") and not compat:
             return self._counter_windowed(func, child, win)
         agg = (
@@ -1445,35 +1445,17 @@ class PlanBuilder:
         for r in rows[1:]:
             vt = promote(vt, r.value_type)
 
-        ids = [r.stream_id for r in rows]
-        n_sb = getattr(self.conn, "stream_buckets", 0) or 0
-        buckets = None
-        if n_sb:
-            from tachyon_spark.connection import stream_bucket_py
-
-            bset = {stream_bucket_py(i, n_sb) for i in ids}
-            if len(bset) < n_sb:  # all-bucket filter prunes nothing — skip
-                buckets = sorted(bset)
-        if len(ids) > getattr(self.conn, "isin_threshold", 1_000):
-            # High cardinality: no IN-list literal in the plan. The id frame
-            # comes from the catalog parquet filtered IN-PLAN (resolve_df),
-            # so executors — not the driver — carry the ids; the broadcast
-            # semi-join replaces the reference's posting-list intersection.
-            df = select_range(
-                self.conn.samples_df(), None, start, end,
-                time_bucket=self.conn.time_bucket,
-                stream_ids_df=self.conn.catalog.resolve_df(
-                    sel.name, sel.matchers, sel.or_groups
-                ),
-                id_count=len(ids),
-                stream_buckets=buckets,
-            )
-        else:
-            df = select_range(
-                self.conn.samples_df(), ids, start, end,
-                time_bucket=self.conn.time_bucket,
-                stream_buckets=buckets,
-            )
+        # past the IN-list threshold the id frame comes from the catalog
+        # parquet filtered IN-PLAN (resolve_df), so executors — not the
+        # driver — carry the ids; the broadcast semi-join replaces the
+        # reference's posting-list intersection
+        df = select_streams(
+            self.conn, [r.stream_id for r in rows],
+            lambda: self.conn.catalog.resolve_df(
+                sel.name, sel.matchers, sel.or_groups
+            ),
+            start, end,
+        )
         value = self._value_expr({r.value_type for r in rows}, self.conn)
         df = df.select("stream_id", "ts", value.alias("value"))
         return Plan("vector", df, vt, streams=tuple(rows))
@@ -1605,7 +1587,7 @@ class PlanBuilder:
             s_col = F.col("__s")
         keep = list(grp.group_cols)
         v, s = F.col("value").cast("double"), s_col.cast("double")
-        if scalar_on_left and getattr(self.conn, "compat_scalar_swap", False):
+        if scalar_on_left and self.conn.compat_scalar_swap:
             scalar_on_left = False
         a, b = (s, v) if scalar_on_left else (v, s)
         if op in _CMP:
@@ -1860,7 +1842,7 @@ class PlanBuilder:
             # written-order comparison (the reference swaps scalar-on-left
             # like arithmetic, binary_op.rs:103-105; compat flag replays it)
             v_cmp, s_cmp = F.col("value").cast("double"), s_col.cast("double")
-            if scalar_on_left and getattr(self.conn, "compat_scalar_swap", False):
+            if scalar_on_left and self.conn.compat_scalar_swap:
                 scalar_on_left = False
             a, b = (s_cmp, v_cmp) if scalar_on_left else (v_cmp, s_cmp)
             cond = _CMP[op](a, b)
@@ -1880,7 +1862,7 @@ class PlanBuilder:
         v_col = F.col("value")
         if vt == VT_F64:
             v_col, s_col = v_col.cast("double"), s_col.cast("double")
-        if scalar_on_left and getattr(self.conn, "compat_scalar_swap", False):
+        if scalar_on_left and self.conn.compat_scalar_swap:
             # reference bug-compat: `2 - v` evaluates as `v - 2`
             # (binary_op.rs:103-105 swaps operands). Off by default — we
             # evaluate written order; the flag makes golden-test migration
@@ -1920,7 +1902,7 @@ class PlanBuilder:
             # would return DECIMAL — pre-cast only in that case so the long
             # path keeps its exact integer partial sums.
             cdf = cdf.withColumn("value", F.col("value").cast("double"))
-        approx = getattr(self.conn, "approx_aggregates", False)
+        approx = self.conn.approx_aggregates
         smap = ()
         if child.kind != "grouped":
             cdf, keys, smap = self._group_keys(

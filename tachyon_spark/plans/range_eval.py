@@ -75,11 +75,13 @@ reference parity; here it shifts the sample clock).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tachyon_spark.operators.select import select_range
+from tachyon_spark.operators.select import ISIN_THRESHOLD, select_streams
 from tachyon_spark.plans.builder import (
     _ARITH,
     _CMP,
@@ -196,13 +198,13 @@ class RangeEvaluator(PlanBuilder):
         """One row per matched series. Small selectors: a driver-side id
         list; past the IN-list threshold: the distributed catalog frame
         (the grid explode then happens executor-side for 10^5+ series)."""
-        if len(streams) <= getattr(self.conn, "isin_threshold", 1_000):
+        if len(streams) <= ISIN_THRESHOLD:
             return inline_ids_df(
                 self.conn.spark, [s.stream_id for s in streams]
             )
-        return self.conn.catalog.resolve_df(sel.name, sel.matchers, sel.or_groups).select(
-            "stream_id"
-        )
+        return self.conn.catalog.resolve_df(
+            sel.name, sel.matchers, sel.or_groups
+        ).select("stream_id")
 
     def _carry_forward(self, samples: DataFrame, ids: DataFrame) -> DataFrame:
         """Per-series step instants: the (stream_id, ts, value) samples
@@ -452,7 +454,7 @@ class RangeEvaluator(PlanBuilder):
         if family == "over_time":
             agg, vt = self._over_time_agg(
                 func, vt_in, arg,
-                approx=getattr(self.conn, "approx_aggregates", False),
+                approx=self.conn.approx_aggregates,
             )
             return df.groupBy(*part).agg(agg.alias("value")), vt
         if family == "holt":
@@ -529,8 +531,8 @@ class RangeEvaluator(PlanBuilder):
             )
             return out, VT_U64
         # range family: rate | increase | delta
-        compat = getattr(self.conn, "compat_rate_last_first", False)
-        extrap = getattr(self.conn, "prometheus_extrapolation", False)
+        compat = self.conn.compat_rate_last_first
+        extrap = self.conn.prometheus_extrapolation
         if func in ("rate", "increase") and not compat:
             adj = F.when(prev.isNull(), F.lit(None)).when(
                 v >= prev, v - prev
@@ -705,8 +707,8 @@ class RangeEvaluator(PlanBuilder):
         extra series add partitions, never rows inside one. Returns
         (instants_df, per-selector streams, per-selector value_type) or
         None when one scan cannot serve all selectors (mixed value
-        layouts, past the IN-list threshold, no match — the caller falls
-        back to the per-operand path and its canonical errors)."""
+        layouts, no match — the caller falls back to the per-operand
+        path and its canonical errors)."""
         off = sels[0].offset or 0
         rows_per = []
         for sel in sels:
@@ -722,45 +724,22 @@ class RangeEvaluator(PlanBuilder):
         if len(tsets) != 1:
             return None  # per-side value columns would differ
         ids = sorted({r.stream_id for rows in rows_per for r in rows})
-        n_sb = getattr(self.conn, "stream_buckets", 0) or 0
-        buckets = None
-        if n_sb:
-            from tachyon_spark.connection import stream_bucket_py
-
-            bset = {stream_bucket_py(i, n_sb) for i in ids}
-            if len(bset) < n_sb:
-                buckets = sorted(bset)
-        if len(ids) > getattr(self.conn, "isin_threshold", 1_000):
-            # high-cardinality: one semi-join scan against the UNION of
-            # the operands' catalog-resolved id frames (the same
-            # executor-side posture as _selector past the threshold;
+        if len(ids) <= ISIN_THRESHOLD:
+            grid_ids = inline_ids_df(self.conn.spark, ids)
+        else:
+            # the UNION of the operands' catalog-resolved id frames,
             # distinct because the operands may overlap and the grid
-            # needs one row per series)
-            id_frames = [
+            # needs one row per series; the scan semi-joins the same frame
+            grid_ids = reduce(DataFrame.unionByName, (
                 self.conn.catalog.resolve_df(
                     s.name, s.matchers, s.or_groups
                 ).select("stream_id")
                 for s in sels
-            ]
-            ids_frame = id_frames[0]
-            for fr in id_frames[1:]:
-                ids_frame = ids_frame.unionByName(fr)
-            ids_frame = ids_frame.distinct()
-            df = select_range(
-                self.conn.samples_df(), None,
-                self.start - self.lookback - off, self.end - off,
-                time_bucket=self.conn.time_bucket,
-                stream_ids_df=ids_frame, id_count=len(ids),
-                stream_buckets=buckets,
-            )
-            grid_ids = ids_frame
-        else:
-            df = select_range(
-                self.conn.samples_df(), ids,
-                self.start - self.lookback - off, self.end - off,
-                time_bucket=self.conn.time_bucket, stream_buckets=buckets,
-            )
-            grid_ids = inline_ids_df(self.conn.spark, ids)
+            )).distinct()
+        df = select_streams(
+            self.conn, ids, lambda: grid_ids,
+            self.start - self.lookback - off, self.end - off,
+        )
         value = self._value_expr(set(next(iter(tsets))), self.conn)
         s = df.select("stream_id", "ts", value.alias("value"))
         if off:

@@ -96,7 +96,11 @@ from tachyon_spark.sources.remote_write import (
     _UNIT_NS,
     _uvarint,
 )
-from tachyon_spark.sources.series_resolve import _ingest_parsed, _read_blobs
+from tachyon_spark.sources.series_resolve import (
+    _ingest_parsed,
+    _read_blobs,
+    malformed_payload,
+)
 
 # parse_remote_write's schema plus an EXACT int channel: OTLP number
 # points carry an as_double/as_int oneof, and bucket/observation counts
@@ -812,10 +816,10 @@ def parse_otlp_metrics(
         for pdf in batches:
             rows = []
             for blob in pdf[payload_col]:
-                raw = _unwrap(bytes(blob), encoding)
-                for name, labels, ts, vd, vi in decode_export_metrics(
-                    raw
-                ):
+                with malformed_payload("otlp"):
+                    raw = _unwrap(bytes(blob), encoding)
+                    decoded = decode_export_metrics(raw)
+                for name, labels, ts, vd, vi in decoded:
                     if vi is not None and vi >= 1 << 63:
                         raise ValueError(
                             "otlp: uint64 count exceeds int64 storage"

@@ -39,7 +39,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from tachyon_spark.sources.series_resolve import _ingest_parsed, _read_blobs
+from tachyon_spark.sources.series_resolve import (
+    _ingest_parsed,
+    _read_blobs,
+    malformed_payload,
+)
 
 __all__ = [
     "decode_write_request",
@@ -908,10 +912,16 @@ def parse_remote_write(
         for pdf in batches:
             rows = []
             for blob in pdf[payload_col]:
-                raw = bytes(blob)
-                if compressed:
-                    raw = snappy_decompress(raw)
-                for labels, samples in decoder(raw):
+                with malformed_payload("remote_write"):
+                    raw = bytes(blob)
+                    if compressed:
+                        raw = snappy_decompress(raw)
+                    decoded = decoder(raw)
+                    hist_series = (
+                        decode_write_request_histograms(raw, proto)
+                        if native_histograms == "classic" else ()
+                    )
+                for labels, samples in decoded:
                     name = labels.pop("__name__", None)
                     if name is None:
                         raise ValueError(
@@ -930,42 +940,39 @@ def parse_remote_write(
                         rows.append(
                             (name, lk, lv, key, val, ts * mult)
                         )
-                if native_histograms == "classic":
-                    for labels, hists in (
-                        decode_write_request_histograms(raw, proto)
-                    ):
-                        labels = dict(labels)
-                        name = labels.pop("__name__", None)
-                        if name is None:
-                            raise ValueError(
-                                "remote_write: histogram series "
-                                "without __name__ label"
-                            )
+                for labels, hists in hist_series:
+                    labels = dict(labels)
+                    name = labels.pop("__name__", None)
+                    if name is None:
+                        raise ValueError(
+                            "remote_write: histogram series "
+                            "without __name__ label"
+                        )
 
-                        def emit(n, extra, ts, v):
-                            lbs = dict(labels)
-                            lbs.update(extra)
-                            k2 = sorted(lbs)
-                            rows.append(
-                                (
-                                    n, k2, [lbs[x] for x in k2],
-                                    _series_key(n, lbs), v, ts * mult,
-                                )
+                    def emit(n, extra, ts, v):
+                        lbs = dict(labels)
+                        lbs.update(extra)
+                        k2 = sorted(lbs)
+                        rows.append(
+                            (
+                                n, k2, [lbs[x] for x in k2],
+                                _series_key(n, lbs), v, ts * mult,
                             )
+                        )
 
-                        for ts, count, hsum, ladder in hists:
-                            for le, cum in ladder:
-                                emit(
-                                    f"{name}_bucket",
-                                    {"le": repr(float(le))},
-                                    ts, cum,
-                                )
+                    for ts, count, hsum, ladder in hists:
+                        for le, cum in ladder:
                             emit(
-                                f"{name}_bucket", {"le": "+Inf"},
-                                ts, count,
+                                f"{name}_bucket",
+                                {"le": repr(float(le))},
+                                ts, cum,
                             )
-                            emit(f"{name}_sum", {}, ts, hsum)
-                            emit(f"{name}_count", {}, ts, count)
+                        emit(
+                            f"{name}_bucket", {"le": "+Inf"},
+                            ts, count,
+                        )
+                        emit(f"{name}_sum", {}, ts, hsum)
+                        emit(f"{name}_count", {}, ts, count)
             yield pd.DataFrame(
                 rows, columns=[f.name for f in PARSED_SCHEMA.fields]
             )

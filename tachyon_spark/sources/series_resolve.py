@@ -12,7 +12,11 @@ becomes stored samples:
    the catalog changes: a malformed line or blob fails the ingest
    atomically. In-expression `raise_error` guards of the text parsers
    ("unparseable ... line/fields", line protocol's missing timestamp)
-   surface here and are re-raised as `ValueError`;
+   and a `ValueError` raised in a Python worker (a binary decoder's
+   malformed-blob error; the decoders run under `malformed_payload`, so
+   whatever the bytes make them raise is one) surface here and are
+   re-raised as `ValueError` with their own message, so callers can
+   tell a bad payload from an engine failure;
 2. resolve the series to stream ids (`resolve_series_mapping`, below);
 3. broadcast-join the mapping and split each value into the typed
    layout: integer-typed streams store `value_int`, taken from the
@@ -49,8 +53,11 @@ re-registers existing streams as duplicates.
 from __future__ import annotations
 
 import re
+import struct
+import zlib
+from contextlib import contextmanager
 
-from pyspark.errors import SparkRuntimeException
+from pyspark.errors import PythonException, SparkRuntimeException
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -194,6 +201,38 @@ def _read_blobs(conn, source) -> DataFrame:
     return conn.spark.read.format("binaryFile").load(source).select("content")
 
 
+# what a malformed body can raise in a binary decoder besides a plain
+# ValueError: invalid UTF-8 in a label (a ValueError subclass, but named
+# as its own class in the worker's traceback), a short struct, a body
+# that is not gzip or is cut short
+_MALFORMED = (UnicodeDecodeError, struct.error, EOFError, OSError, zlib.error)
+
+
+@contextmanager
+def malformed_payload(fmt: str):
+    """Decode client bytes inside this block: a failure the bytes
+    themselves cause leaves it as a plain `ValueError` naming `fmt`, the
+    one class `_ingest_parsed` reports as the client's fault."""
+    try:
+        yield
+    except _MALFORMED as e:
+        raise ValueError(f"{fmt}: malformed payload: {e}") from None
+
+
+def _worker_value_error(e: PythonException) -> str | None:
+    """The message of the `ValueError` a Python worker raised, or None
+    when it raised anything else. Read from the worker's traceback: the
+    first unindented line after its last "Traceback" header starts the
+    exception, and its message runs to the end (it may span lines). A
+    JVM stack trace appended to the text is cut off first."""
+    tb = str(e).partition("\n\nJVM stacktrace:\n")[0]
+    tb = tb.rpartition("Traceback (most recent call last):\n")[2]
+    m = re.search(r"^(\S+?)(?:: (.*))?\Z", tb.rstrip("\n"), re.M | re.S)
+    if m is None or m.group(1) != "ValueError":
+        return None
+    return m.group(2) or ""
+
+
 def _ingest_parsed(conn, parsed: DataFrame, value_type: str) -> int:
     """Store a parsed batch — (series_key, name, labels, ts, value
     [, value_int]) rows — registering its new series with `value_type`.
@@ -214,6 +253,11 @@ def _ingest_parsed(conn, parsed: DataFrame, value_type: str) -> int:
             raise ValueError(
                 e.getMessageParameters()["errorMessage"]
             ) from None
+        except PythonException as e:
+            msg = _worker_value_error(e)
+            if msg is None:
+                raise
+            raise ValueError(msg) from None
         mapping = resolve_series_mapping(conn, series_df, value_type)
         as_long = F.col("value").cast("long")
         if exact_int:

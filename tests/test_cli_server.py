@@ -1267,3 +1267,176 @@ def test_endpoint_error_classification(tmp_path, spark, monkeypatch):
         )
     finally:
         srv.shutdown()
+
+
+def test_receiver_error_classification(tmp_path, spark, monkeypatch):
+    """The binary receivers classify a failure by its class, like every
+    other route: an engine failure is 500 even when its message names
+    the wire format (a malformed body stays 400, see the receivers' own
+    tests)."""
+    from urllib.parse import quote
+
+    import tachyon_spark.server as srv_mod
+    from tachyon_spark.connection import Connection
+    from tachyon_spark.sources import otlp, remote_read, remote_write
+
+    db = str(tmp_path / "rxdb")
+    srv_mod._connections[db] = Connection(db, spark)
+
+    def boom(name):
+        def fail(*args, **kwargs):
+            raise RuntimeError(f"{name}: injected")
+
+        return fail
+
+    monkeypatch.setattr(remote_write, "ingest_remote_write", boom("remote_write"))
+    monkeypatch.setattr(remote_read, "serve_remote_read", boom("remote_read"))
+    monkeypatch.setattr(otlp, "ingest_otlp", boom("otlp"))
+    srv = serve(port=0)
+    port = srv.server_address[1]
+    try:
+        for path, name in (
+            ("/api/v1/write", "remote_write"),
+            ("/api/v1/read", "remote_read"),
+            ("/v1/metrics", "otlp"),
+        ):
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{port}{path}?path={quote(db)}",
+                data=b"payload", method="POST",
+            )
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                urllib.request.urlopen(req)
+            assert (ei.value.code, json.load(ei.value)) == (
+                500, {"error": f"{name}: injected"}
+            ), path
+    finally:
+        srv.shutdown()
+
+
+def test_receiver_malformed_body_is_400(tmp_path, spark):
+    """A body the decoders cannot read is the client's fault whatever
+    the decoder raises on it (invalid UTF-8 in a label, a body that is
+    not gzip or is cut short): 400, never a 5xx a sender would retry."""
+    from urllib.parse import quote
+
+    import tachyon_spark.server as srv_mod
+    from tachyon_spark.connection import Connection
+    from tests.test_ingest_pipeline import MALFORMED
+
+    db = str(tmp_path / "malformed_db")
+    srv_mod._connections[db] = Connection(db, spark)
+    srv = serve(port=0)
+    port = srv.server_address[1]
+    path = {"remote_write": "/api/v1/write", "otlp": "/v1/metrics"}
+    try:
+        for fmt, body, kwargs in MALFORMED:
+            headers = {"Content-Encoding": kwargs.get("encoding", "")}
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{port}{path[fmt]}?path={quote(db)}"
+                "&ts_unit=ns",
+                data=body, method="POST",
+                headers={k: v for k, v in headers.items() if v},
+            )
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                urllib.request.urlopen(req)
+            assert ei.value.code == 400, (fmt, kwargs)
+            assert json.load(ei.value)["error"].startswith(
+                f"{fmt}: malformed payload: "
+            )
+    finally:
+        srv.shutdown()
+
+
+def test_json_body_int_params(tmp_path, spark):
+    """A JSON body's `time` (/api/v1/query) and `start`/`end`
+    (/api/v1/query_exemplars) are taken as ints, as in a query string:
+    a string or a float is converted, not passed on."""
+    from tachyon_spark.connection import Connection
+
+    db = str(tmp_path / "json_int_db")
+    conn = Connection(db, spark)
+    conn.create_stream('ji{h="a"}', "f64")
+    ins = conn.prepare_insert('ji{h="a"}')
+    ins.insert(20, 1.5)
+    ins.flush()
+    srv = serve(port=0)
+    port = srv.server_address[1]
+
+    def post(path, payload):
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{port}{path}",
+            data=json.dumps(payload).encode(),
+            headers={"Content-Type": "application/json"},
+        )
+        with urllib.request.urlopen(req) as r:
+            return json.load(r)
+
+    try:
+        for t in ("25", 25.9):
+            out = post("/api/v1/query", {
+                "path": db, "query": 'ji{h="a"}', "time": t,
+                "ns_clock": False,
+            })
+            assert out["status"] == "success", t
+            assert out["data"]["result"][0]["value"] == [25, "1.5"], t
+        out = post("/api/v1/query_exemplars", {
+            "path": db, "query": "ji", "start": "0", "end": "100",
+        })
+        assert out == {"status": "success", "data": []}
+    finally:
+        srv.shutdown()
+
+
+# every (method, path) the HTTP shell serves; /api/v1/label/job/values
+# stands for the /api/v1/label/<name>/values pattern
+SERVED = {
+    *(("GET", p) for p in (
+        "/health", "/metrics", "/federate", "/api/v1/labels",
+        "/api/v1/label/job/values", "/api/v1/series", "/api/v1/status/tsdb",
+        "/api/v1/status/buildinfo",
+    )),
+    *(("POST", p) for p in (
+        "/query", "/query_range", "/record", "/alerts",
+        "/api/v1/admin/tsdb/delete_series", "/api/v1/admin/tsdb/snapshot",
+        "/api/v1/write", "/api/v1/read", "/v1/metrics",
+    )),
+    *((m, p) for m in ("GET", "POST") for p in (
+        "/labels", "/label_values", "/series", "/api/v1/query",
+        "/api/v1/query_range", "/api/v1/query_exemplars",
+    )),
+}
+NO_DB = {"/health", "/api/v1/status/buildinfo"}
+
+
+@pytest.fixture(scope="module")
+def bare_port():
+    srv = serve(port=0)
+    yield srv.server_address[1]
+    srv.shutdown()
+
+
+@pytest.mark.parametrize("method,path", [
+    (m, p)
+    for p in sorted({p for _, p in SERVED} | {"/", "/nope", "/api/v1/nope"})
+    for m in ("GET", "POST")
+])
+def test_route_table(bare_port, method, path):
+    """A served (method, path) without a `path` param is a malformed
+    request (400), except the two that need no db (200); any other
+    method or path is 404. Pins the route table against a dropped or
+    an extra route."""
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{bare_port}{path}",
+        data=b"{}" if method == "POST" else None, method=method,
+    )
+    try:
+        with urllib.request.urlopen(req) as r:
+            code, body = r.status, json.load(r)
+    except urllib.error.HTTPError as e:
+        code, body = e.code, json.load(e)
+    if (method, path) not in SERVED:
+        assert (code, body) == (404, {"error": "not found"})
+    elif path in NO_DB:
+        assert code == 200
+    else:
+        assert code == 400 and body["error"]

@@ -261,3 +261,43 @@ def test_serve_remote_read_ns_native_big_timestamps(db):
     assert resp == [
         [({"__name__": "rr_big"}, [(1_700_000_000_001, 1.5)])]
     ]
+
+
+@pytest.mark.parametrize("max_points", ["-4", "0", "-1"])
+def test_http_max_points_must_be_positive(read_db, max_points):
+    """/api/v1/read and /api/v1/query_exemplars check a client's
+    max_points like /api/v1/query does: 0 or negative is a malformed
+    request (400), not a 422 over a cap of 0 or a Spark error on a
+    negative LIMIT."""
+    import json
+    from urllib.error import HTTPError
+    from urllib.parse import quote
+    from urllib.request import Request, urlopen
+
+    from tachyon_spark import server as srv
+
+    path = quote(read_db.db_dir)
+    srv._connections[read_db.db_dir] = read_db
+    httpd = srv.serve(port=0)
+    base = f"http://127.0.0.1:{httpd.server_address[1]}"
+    try:
+        read = Request(
+            f"{base}/api/v1/read?path={path}&ts_unit=ns"
+            f"&max_points={max_points}",
+            data=_request([(0, 1000, [(0, "__name__", "rr_cpu")])]),
+            method="POST",
+        )
+        with pytest.raises(HTTPError) as ei:
+            urlopen(read, timeout=120)
+        assert ei.value.code == 400
+        assert "max_points" in json.load(ei.value)["error"]
+        with pytest.raises(HTTPError) as ei:
+            urlopen(
+                f"{base}/api/v1/query_exemplars?path={path}&query=rr_cpu"
+                f"&start=0&end=1000&max_points={max_points}",
+                timeout=120,
+            )
+        assert ei.value.code == 400
+        assert json.load(ei.value)["errorType"] == "bad_data"
+    finally:
+        httpd.shutdown()

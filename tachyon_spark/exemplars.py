@@ -119,48 +119,24 @@ def _resolve_and_store(conn, raw: DataFrame) -> int:
     return store_exemplars(conn, resolved)
 
 
-def extract_remote_write_exemplars(
-    conn,
-    blobs: DataFrame | bytes,
-    ts_unit: str = "ms",
-    compressed: bool = True,
-    proto: str = "1",
-    payload_col: str = "content",
-) -> int:
-    """Decode + store exemplars from remote_write payload(s); call
-    AFTER ingest_remote_write so the sample pass has registered the
-    series. Returns exemplars stored."""
-    from tachyon_spark.sources.remote_write import (
-        _series_key,
-        _UNIT_NS,
-        decode_write_request_exemplars,
-        decode_write_request_exemplars_v2,
-        snappy_decompress,
-    )
+def _extract(conn, blobs, ts_unit: str, series_exemplars) -> int:
+    """Decode + store the exemplars of wire payload(s): `blobs` is one
+    request body (bytes), a path/glob of blob files or a frame with a
+    binary `content` column; `series_exemplars(body)` is the format's
+    decoder, yielding (series name, series labels, [(exemplar labels,
+    ts, value)]) per body. Returns exemplars stored."""
+    from tachyon_spark.sources.remote_write import _series_key, _UNIT_NS
+    from tachyon_spark.sources.series_resolve import _read_blobs
 
-    if isinstance(blobs, (bytes, bytearray)):
-        blobs = conn.spark.createDataFrame(
-            [(bytes(blobs),)], "content binary"
-        )
     mult = _UNIT_NS[ts_unit]
-    decoder = (
-        decode_write_request_exemplars
-        if proto == "1"
-        else decode_write_request_exemplars_v2
-    )
 
     def kernel(batches):
         import pandas as pd
 
         for pdf in batches:
             rows = []
-            for blob in pdf[payload_col]:
-                raw = bytes(blob)
-                if compressed:
-                    raw = snappy_decompress(raw)
-                for labels, exemplars in decoder(raw):
-                    labels = dict(labels)
-                    name = labels.pop("__name__", "")
+            for blob in pdf["content"]:
+                for name, labels, exemplars in series_exemplars(bytes(blob)):
                     key = _series_key(name, labels)
                     for ex_labels, ts, val in exemplars:
                         ek = sorted(ex_labels)
@@ -174,10 +150,35 @@ def extract_remote_write_exemplars(
                 rows, columns=[f.name for f in _RAW_SCHEMA.fields]
             )
 
-    raw = blobs.select(F.col(payload_col)).mapInPandas(
+    raw = _read_blobs(conn, blobs).select("content").mapInPandas(
         kernel, _RAW_SCHEMA
     )
     return _resolve_and_store(conn, raw)
+
+
+def extract_remote_write_exemplars(
+    conn,
+    blobs: DataFrame | bytes,
+    ts_unit: str = "ms",
+    compressed: bool = True,
+    proto: str = "1",
+) -> int:
+    """Decode + store exemplars from remote_write payload(s); call
+    AFTER ingest_remote_write so the sample pass has registered the
+    series. Returns exemplars stored."""
+    from tachyon_spark.sources.remote_write import (
+        decode_write_request,
+        snappy_decompress,
+    )
+
+    def series_exemplars(body: bytes):
+        if compressed:
+            body = snappy_decompress(body)
+        for labels, _, _, exemplars in decode_write_request(body, proto):
+            if exemplars:
+                yield labels.pop("__name__", ""), labels, exemplars
+
+    return _extract(conn, blobs, ts_unit, series_exemplars)
 
 
 def extract_otlp_exemplars(
@@ -185,51 +186,17 @@ def extract_otlp_exemplars(
     blobs: DataFrame | bytes,
     ts_unit: str = "ns",
     encoding: str = "auto",
-    payload_col: str = "content",
 ) -> int:
     """Decode + store exemplars from OTLP payload(s); call AFTER
     ingest_otlp. Series association uses the same Prometheus
     translation the sample pass applied (number points -> the metric's
     series; histogram points -> the le-bucket the value falls in)."""
-    from tachyon_spark.sources.otlp import (
-        _unwrap,
-        decode_export_metric_exemplars,
+    from tachyon_spark.sources.otlp import _unwrap, decode_export_metrics
+
+    return _extract(
+        conn, blobs, ts_unit,
+        lambda body: decode_export_metrics(_unwrap(body, encoding))[1],
     )
-    from tachyon_spark.sources.remote_write import _series_key, _UNIT_NS
-
-    if isinstance(blobs, (bytes, bytearray)):
-        blobs = conn.spark.createDataFrame(
-            [(bytes(blobs),)], "content binary"
-        )
-    mult = _UNIT_NS[ts_unit]
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for blob in pdf[payload_col]:
-                raw = _unwrap(bytes(blob), encoding)
-                for name, labels, exemplars in (
-                    decode_export_metric_exemplars(raw)
-                ):
-                    key = _series_key(name, labels)
-                    for ex_labels, ts, val in exemplars:
-                        ek = sorted(ex_labels)
-                        rows.append(
-                            (
-                                key, ts * mult, val,
-                                ek, [ex_labels[k] for k in ek],
-                            )
-                        )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _RAW_SCHEMA.fields]
-            )
-
-    raw = blobs.select(F.col(payload_col)).mapInPandas(
-        kernel, _RAW_SCHEMA
-    )
-    return _resolve_and_store(conn, raw)
 
 
 def query_exemplars(

@@ -459,8 +459,9 @@ class _Handler(BaseHTTPRequestHandler):
                 )
             except Exception:
                 ex_written = 0
-        # 2.0 REQUIRES written-stats headers (samples-only receiver:
-        # histograms are always 0)
+        # 2.0 REQUIRES written-stats headers. Native histograms are
+        # stored as classic _bucket/_sum/_count series and counted in
+        # Samples-Written, so Histograms-Written is 0 by design
         stats = [
             ("X-Prometheus-Remote-Write-Samples-Written", str(n)),
             ("X-Prometheus-Remote-Write-Histograms-Written", "0"),

@@ -35,9 +35,12 @@ _uvarint); only the message tree differs:
     AnyValue{ oneof: string=1, bool=2, int=3, double=4, array=5,
               kvlist=6, bytes=7 }
 
-Unknown fields at every level skip by wire type (exemplars, flags, a
-newer sender's additions — forward compatibility, same contract as the
-remote_write decoder). Exponential histograms (Metric field 10,
+One walk of the message yields the translated samples and the
+exemplars of number and histogram points (tachyon_spark/exemplars.py
+stores the latter); a new message field goes into that walk. Unknown
+fields at every level skip by wire type (flags, a newer sender's
+additions — forward compatibility, same contract as the remote_write
+decoder). Exponential histograms (Metric field 10,
 base-2 buckets with zigzag sint32 scale/offsets and packed-uvarint
 counts) DECODE and translate to classic cumulative `le` series in
 ascending-upper-bound order (negative buckets, zero bucket at the
@@ -64,11 +67,10 @@ spec's data-model half):
 - non-string attribute values render as canonical strings (bool →
   `true`/`false`, int → decimal, double → repr) — Prometheus labels
   are strings.
-- aggregation temporality is decoded and surfaced per-sample; DELTA
+- aggregation temporality does not change stored values; DELTA
   sums store their per-interval values verbatim (a batch receiver has
   no cross-request state to cumulate; analysis-side `sum_over_time`
-  recovers the cumulative view). Monotonicity/temporality do not
-  change stored values.
+  recovers the cumulative view). Monotonicity does not either.
 
 Scale shape: decode runs DISTRIBUTED — `parse_otlp_metrics` is an
 Arrow-batched `mapInPandas` over binary payload rows (one row per
@@ -84,17 +86,23 @@ only).
 from __future__ import annotations
 
 import struct
+from itertools import accumulate
 
 from pyspark.sql import DataFrame, functions as F
 
 from pyspark.sql import types as T
 
 from tachyon_spark.sources.remote_write import (
+    _exp_ladder,
     _fields,
+    _int64,
+    _packed64,
+    _packed_varints,
+    _put_ld,
     _put_uvarint,
     _series_key,
     _UNIT_NS,
-    _uvarint,
+    _zigzag64,
 )
 from tachyon_spark.sources.series_resolve import (
     _ingest_parsed,
@@ -139,7 +147,7 @@ def _any_value(buf: bytes) -> str:
         if fno == 2 and wt == 0:  # bool_value
             return "true" if pay else "false"
         if fno == 3 and wt == 0:  # int_value (two's complement varint)
-            return str(pay - (1 << 64) if pay >= 1 << 63 else pay)
+            return str(_int64(pay))
         if fno == 4 and wt == 1:  # double_value
             return repr(struct.unpack("<d", pay)[0])
         if fno == 7 and wt == 2:  # bytes_value
@@ -154,7 +162,7 @@ def _any_value(buf: bytes) -> str:
             return "[" + ",".join(inner) + "]"
         if fno == 6 and wt == 2:
             return "{" + ",".join(
-                f"{k}={v}" for k, v in _attributes(pay).items()
+                f"{k}={v}" for k, v in _kv_attrs(pay, 1).items()
             ) + "}"
     return ""
 
@@ -172,330 +180,15 @@ def _keyvalue(pay: bytes) -> tuple[str, str]:
     return key, val
 
 
-def _attributes(buf: bytes) -> dict[str, str]:
-    """repeated KeyValue (the whole message body) -> {key: str value}."""
-    return {
-        k: v
-        for fno, wt, pay in _fields(buf)
-        if fno == 1 and wt == 2
-        for k, v in (_keyvalue(pay),)
-    }
-
-
 def _kv_attrs(buf: bytes, field_no: int) -> dict[str, str]:
     """Collect `repeated KeyValue attributes = field_no` off a data
-    point / resource message."""
+    point / resource / kvlist message."""
     return {
         k: v
         for fno, wt, pay in _fields(buf)
         if fno == field_no and wt == 2
         for k, v in (_keyvalue(pay),)
     }
-
-
-def _packed_fixed64(pay: bytes, wt: int) -> list[int]:
-    """bucket_counts: packed (wt 2) per proto3, but a conforming decoder
-    must also accept the unpacked encoding (one fixed64 per element)."""
-    if wt == 2:
-        if len(pay) % 8:
-            raise ValueError("otlp: ragged packed fixed64")
-        return [
-            struct.unpack_from("<Q", pay, i)[0]
-            for i in range(0, len(pay), 8)
-        ]
-    return [struct.unpack("<Q", pay)[0]]  # unpacked single element
-
-
-def _packed_double(pay: bytes, wt: int) -> list[float]:
-    if wt == 2:
-        if len(pay) % 8:
-            raise ValueError("otlp: ragged packed double")
-        return [
-            struct.unpack_from("<d", pay, i)[0]
-            for i in range(0, len(pay), 8)
-        ]
-    return [struct.unpack("<d", pay)[0]]  # unpacked single element
-
-
-def _number_point(
-    pay: bytes,
-) -> tuple[dict[str, str], int, float | None, int | None]:
-    """NumberDataPoint -> (attrs, ts_ns, double_or_None, int_or_None).
-    The as_double/as_int oneof is preserved so int64 exactness survives
-    past 2^53 (ingest stores the int channel in value_int)."""
-    attrs: dict[str, str] = {}
-    ts = 0
-    vd: float | None = None
-    vi: int | None = None
-    for fno, wt, p in _fields(pay):
-        if fno == 3 and wt == 1:  # time_unix_nano
-            ts = struct.unpack("<Q", p)[0]
-        elif fno == 4 and wt == 1:  # as_double
-            vd = struct.unpack("<d", p)[0]
-        elif fno == 6 and wt == 1:  # as_int (sfixed64)
-            vi = struct.unpack("<q", p)[0]
-        elif fno == 7 and wt == 2:  # attributes
-            key, val = _keyvalue(p)
-            attrs[key] = val
-        # start_time (2), exemplars (5), flags (8) skip
-    return attrs, ts, vd, vi
-
-
-_TEMPORALITY = {0: "unspecified", 1: "delta", 2: "cumulative"}
-
-
-def _zigzag(n: int) -> int:
-    """sint32/sint64 zigzag varint -> signed int."""
-    return (n >> 1) ^ -(n & 1)
-
-
-def _packed_uvarints(pay: bytes) -> list[int]:
-    """repeated uint64 (varint) in packed form."""
-    out, i = [], 0
-    while i < len(pay):
-        v, i = _uvarint(pay, i)
-        out.append(v)
-    return out
-
-
-def _exp_buckets(pay: bytes) -> tuple[int, list[int]]:
-    """ExponentialHistogramDataPoint.Buckets{ sint32 offset = 1,
-    repeated uint64 bucket_counts = 2 } -> (offset, counts)."""
-    offset, counts = 0, []
-    for fno, wt, p in _fields(pay):
-        if fno == 1 and wt == 0:
-            offset = _zigzag(p)
-        elif fno == 2 and wt == 2:
-            counts += _packed_uvarints(p)
-        elif fno == 2 and wt == 0:
-            counts.append(p)
-    return offset, counts
-
-
-def decode_export_metrics(
-    data: bytes,
-) -> list[tuple[str, dict[str, str], int, float | None, int | None]]:
-    """Uncompressed ExportMetricsServiceRequest bytes -> flat
-    Prometheus-translated samples
-    [(series name, labels, ts_ns, value f64 | None, value int | None)].
-    Exactly ONE of the two value channels is set per sample (histogram /
-    summary component series use the f64 channel for sums and the int
-    channel for counts/bucket counts)."""
-    out: list[
-        tuple[str, dict[str, str], int, float | None, int | None]
-    ] = []
-    for fno, wt, rm in _fields(data):
-        if fno != 1 or wt != 2:
-            continue  # ResourceMetrics only
-        job = instance = namespace = None
-        scope_bufs: list[bytes] = []
-        for rfno, rwt, rpay in _fields(rm):
-            if rfno == 1 and rwt == 2:  # Resource
-                res = _kv_attrs(rpay, 1)
-                job = res.get("service.name")
-                instance = res.get("service.instance.id")
-                namespace = res.get("service.namespace")
-            elif rfno == 2 and rwt == 2:  # ScopeMetrics
-                scope_bufs.append(rpay)
-        base: dict[str, str] = {}
-        if job is not None:
-            base["job"] = f"{namespace}/{job}" if namespace else job
-        if instance is not None:
-            base["instance"] = instance
-
-        def emit(name, attrs, ts, vd, vi):
-            labels = dict(base)
-            labels.update(attrs)  # point attributes win on collision
-            out.append((name, labels, ts, vd, vi))
-
-        for sm in scope_bufs:
-            for sfno, swt, metric in _fields(sm):
-                if sfno != 2 or swt != 2:
-                    continue  # Metric only (scope 1 / schema_url 3 skip)
-                name = ""
-                gauge_pts: list[bytes] = []
-                hist_pts: list[bytes] = []
-                exp_pts: list[bytes] = []
-                summ_pts: list[bytes] = []
-                for mfno, mwt, mpay in _fields(metric):
-                    if mfno == 1 and mwt == 2:
-                        name = mpay.decode("utf-8")
-                    elif mfno in (5, 7) and mwt == 2:  # Gauge | Sum
-                        for dfno, dwt, dpay in _fields(mpay):
-                            if dfno == 1 and dwt == 2:
-                                gauge_pts.append(dpay)
-                            # temporality (2) / is_monotonic (3) decoded
-                            # fine as varints but do not change values
-                    elif mfno == 9 and mwt == 2:  # Histogram
-                        for dfno, dwt, dpay in _fields(mpay):
-                            if dfno == 1 and dwt == 2:
-                                hist_pts.append(dpay)
-                    elif mfno == 10 and mwt == 2:  # ExponentialHistogram
-                        for dfno, dwt, dpay in _fields(mpay):
-                            if dfno == 1 and dwt == 2:
-                                exp_pts.append(dpay)
-                    elif mfno == 11 and mwt == 2:  # Summary
-                        for dfno, dwt, dpay in _fields(mpay):
-                            if dfno == 1 and dwt == 2:
-                                summ_pts.append(dpay)
-                    # description/unit (2/3) skip
-                if not name:
-                    raise ValueError("otlp: metric without a name")
-                for dpay in gauge_pts:
-                    attrs, ts, vd, vi = _number_point(dpay)
-                    if vd is None and vi is None:
-                        continue  # no-value point (e.g. staleness flag)
-                    emit(name, attrs, ts, vd, vi)
-                for dpay in hist_pts:
-                    attrs: dict[str, str] = {}
-                    ts = count = 0
-                    hsum: float | None = None
-                    bounds: list[float] = []
-                    bcounts: list[int] = []
-                    for pfno, pwt, ppay in _fields(dpay):
-                        if pfno == 3 and pwt == 1:
-                            ts = struct.unpack("<Q", ppay)[0]
-                        elif pfno == 4 and pwt == 1:
-                            count = struct.unpack("<Q", ppay)[0]
-                        elif pfno == 5 and pwt == 1:
-                            hsum = struct.unpack("<d", ppay)[0]
-                        elif pfno == 6 and pwt in (1, 2):
-                            bcounts += _packed_fixed64(ppay, pwt)
-                        elif pfno == 7 and pwt in (1, 2):
-                            bounds += _packed_double(ppay, pwt)
-                        elif pfno == 9 and pwt == 2:
-                            key, val = _keyvalue(ppay)
-                            attrs[key] = val
-                    if bcounts and len(bcounts) != len(bounds) + 1:
-                        raise ValueError(
-                            "otlp: histogram bucket_counts/"
-                            "explicit_bounds length mismatch "
-                            f"({len(bcounts)} vs {len(bounds)})"
-                        )
-                    cum = 0
-                    for b, c in zip(bounds, bcounts):
-                        cum += c
-                        emit(
-                            f"{name}_bucket",
-                            {**attrs, "le": repr(float(b))},
-                            ts, None, cum,
-                        )
-                    emit(
-                        f"{name}_bucket",
-                        {**attrs, "le": "+Inf"},
-                        ts, None, count,
-                    )
-                    if hsum is not None:
-                        emit(f"{name}_sum", dict(attrs), ts, hsum, None)
-                    emit(f"{name}_count", dict(attrs), ts, None, count)
-                for dpay in exp_pts:
-                    # exponential histogram -> classic cumulative `le`
-                    # series. Base-2 exponential buckets (base =
-                    # 2^(2^-scale)): positive bucket at index i covers
-                    # (base^i, base^(i+1)] so its le is base^(i+1);
-                    # negative bucket at index i covers
-                    # [-base^(i+1), -base^i) so its le is -base^i; the
-                    # zero bucket's le is the zero_threshold. Buckets
-                    # emit in ascending-le order (negatives from the
-                    # most negative index down, zero, positives up),
-                    # cumulated — histogram_quantile over the resulting
-                    # le series works unchanged. (Prometheus's own OTLP
-                    # endpoint converts these to native histograms; a
-                    # classic-series engine keeps the classic shape.)
-                    attrs = {}
-                    ts = count = zero_count = 0
-                    scale = 0
-                    hsum = None
-                    zero_thr = 0.0
-                    pos = neg = (0, [])
-                    for pfno, pwt, ppay in _fields(dpay):
-                        if pfno == 3 and pwt == 1:
-                            ts = struct.unpack("<Q", ppay)[0]
-                        elif pfno == 4 and pwt == 1:
-                            count = struct.unpack("<Q", ppay)[0]
-                        elif pfno == 5 and pwt == 1:
-                            hsum = struct.unpack("<d", ppay)[0]
-                        elif pfno == 6 and pwt == 0:
-                            scale = _zigzag(ppay)
-                        elif pfno == 7 and pwt == 1:
-                            zero_count = struct.unpack("<Q", ppay)[0]
-                        elif pfno == 8 and pwt == 2:
-                            pos = _exp_buckets(ppay)
-                        elif pfno == 9 and pwt == 2:
-                            neg = _exp_buckets(ppay)
-                        elif pfno == 14 and pwt == 1:
-                            zero_thr = struct.unpack("<d", ppay)[0]
-                        elif pfno == 1 and pwt == 2:
-                            key, val = _keyvalue(ppay)
-                            attrs[key] = val
-                    inv_scale = 2.0 ** (-scale)
-
-                    def ub(index):  # base^index = 2^(index * 2^-scale)
-                        return 2.0 ** (index * inv_scale)
-
-                    ladder = []  # (le, count) ascending le
-                    n_off, n_counts = neg
-                    for i in range(len(n_counts) - 1, -1, -1):
-                        if n_counts[i]:
-                            ladder.append(
-                                (-ub(n_off + i), n_counts[i])
-                            )
-                    if zero_count:
-                        ladder.append((zero_thr, zero_count))
-                    p_off, p_counts = pos
-                    for i in range(len(p_counts)):
-                        if p_counts[i]:
-                            ladder.append(
-                                (ub(p_off + i + 1), p_counts[i])
-                            )
-                    cum = 0
-                    for le, c in ladder:
-                        cum += c
-                        emit(
-                            f"{name}_bucket",
-                            {**attrs, "le": repr(float(le))},
-                            ts, None, cum,
-                        )
-                    emit(
-                        f"{name}_bucket",
-                        {**attrs, "le": "+Inf"},
-                        ts, None, count,
-                    )
-                    if hsum is not None:
-                        emit(f"{name}_sum", dict(attrs), ts, hsum, None)
-                    emit(f"{name}_count", dict(attrs), ts, None, count)
-                for dpay in summ_pts:
-                    attrs = {}
-                    ts = count = 0
-                    ssum = 0.0
-                    quants: list[tuple[float, float]] = []
-                    for pfno, pwt, ppay in _fields(dpay):
-                        if pfno == 3 and pwt == 1:
-                            ts = struct.unpack("<Q", ppay)[0]
-                        elif pfno == 4 and pwt == 1:
-                            count = struct.unpack("<Q", ppay)[0]
-                        elif pfno == 5 and pwt == 1:
-                            ssum = struct.unpack("<d", ppay)[0]
-                        elif pfno == 6 and pwt == 2:
-                            q = v = 0.0
-                            for qf, qw, qp in _fields(ppay):
-                                if qf == 1 and qw == 1:
-                                    q = struct.unpack("<d", qp)[0]
-                                elif qf == 2 and qw == 1:
-                                    v = struct.unpack("<d", qp)[0]
-                            quants.append((q, v))
-                        elif pfno == 7 and pwt == 2:
-                            key, val = _keyvalue(ppay)
-                            attrs[key] = val
-                    for q, v in quants:
-                        emit(
-                            name,
-                            {**attrs, "quantile": repr(float(q))},
-                            ts, v, None,
-                        )
-                    emit(f"{name}_sum", dict(attrs), ts, ssum, None)
-                    emit(f"{name}_count", dict(attrs), ts, None, count)
-    return out
 
 
 def _exemplar(pay: bytes) -> tuple[dict[str, str], int, float]:
@@ -522,97 +215,252 @@ def _exemplar(pay: bytes) -> tuple[dict[str, str], int, float]:
     return labels, ts, val
 
 
-def decode_export_metric_exemplars(
-    data: bytes,
-) -> list[tuple[str, dict[str, str], list[tuple[dict[str, str], int, float]]]]:
-    """ExportMetricsServiceRequest bytes -> [(series name, series
-    labels, [(exemplar labels incl trace_id/span_id, ts_ns, value)])]
-    for data points that carry exemplars. Number points attach to the
-    metric's own series; histogram points attach to the
-    `<name>_bucket` series whose `le` bound admits the exemplar value
-    (the classic-histogram convention Grafana's trace links expect).
-    Exponential-histogram exemplars are not extracted (their le ladder
-    is value-dependent; documented limitation)."""
-    out = []
+def _number_point(pay: bytes):
+    """NumberDataPoint -> (attrs, ts_ns, double_or_None, int_or_None,
+    exemplars). The as_double/as_int oneof is preserved so int64
+    exactness survives past 2^53 (ingest stores the int channel in
+    value_int)."""
+    attrs: dict[str, str] = {}
+    ts = 0
+    vd: float | None = None
+    vi: int | None = None
+    exs = []
+    for fno, wt, p in _fields(pay):
+        if fno == 3 and wt == 1:  # time_unix_nano
+            ts = struct.unpack("<Q", p)[0]
+        elif fno == 4 and wt == 1:  # as_double
+            vd = struct.unpack("<d", p)[0]
+        elif fno == 6 and wt == 1:  # as_int (sfixed64)
+            vi = struct.unpack("<q", p)[0]
+        elif fno == 5 and wt == 2:
+            exs.append(_exemplar(p))
+        elif fno == 7 and wt == 2:  # attributes
+            key, val = _keyvalue(p)
+            attrs[key] = val
+        # start_time (2), flags (8) skip
+    return attrs, ts, vd, vi, exs
+
+
+def _histogram_point(pay: bytes):
+    """HistogramDataPoint -> (attrs, ts_ns, count, sum | None,
+    cumulative ladder [(bound, cum)], [(le, exemplar)]): an exemplar
+    goes to the `le` bucket that admits its value (the
+    classic-histogram convention Grafana's trace links expect)."""
+    attrs: dict[str, str] = {}
+    ts = count = 0
+    hsum: float | None = None
+    bounds: list[float] = []
+    bcounts: list[int] = []
+    exs = []
+    for fno, wt, p in _fields(pay):
+        if fno == 3 and wt == 1:
+            ts = struct.unpack("<Q", p)[0]
+        elif fno == 4 and wt == 1:
+            count = struct.unpack("<Q", p)[0]
+        elif fno == 5 and wt == 1:
+            hsum = struct.unpack("<d", p)[0]
+        elif fno == 6 and wt in (1, 2):
+            bcounts += _packed64(p, wt, "<Q")
+        elif fno == 7 and wt in (1, 2):
+            bounds += _packed64(p, wt)
+        elif fno == 8 and wt == 2:
+            exs.append(_exemplar(p))
+        elif fno == 9 and wt == 2:
+            key, val = _keyvalue(p)
+            attrs[key] = val
+    if bcounts and len(bcounts) != len(bounds) + 1:
+        raise ValueError(
+            "otlp: histogram bucket_counts/explicit_bounds length "
+            f"mismatch ({len(bcounts)} vs {len(bounds)})"
+        )
+    exs = [
+        (next((repr(float(b)) for b in bounds if ex[2] <= b), "+Inf"), ex)
+        for ex in exs
+    ]
+    ladder = list(zip(bounds, accumulate(bcounts)))
+    return attrs, ts, count, hsum, ladder, exs
+
+
+def _exp_buckets(pay: bytes, shift: int) -> list[tuple[int, int]]:
+    """ExponentialHistogramDataPoint.Buckets{ sint32 offset = 1,
+    repeated uint64 bucket_counts = 2 } -> [(offset + k + shift,
+    count_k)]."""
+    offset, counts = 0, []
+    for fno, wt, p in _fields(pay):
+        if fno == 1 and wt == 0:
+            offset = _zigzag64(p)
+        elif fno == 2 and wt == 2:
+            counts += _packed_varints(p)
+        elif fno == 2 and wt == 0:
+            counts.append(p)
+    return [(offset + k + shift, c) for k, c in enumerate(counts)]
+
+
+def _exp_histogram_point(pay: bytes):
+    """ExponentialHistogramDataPoint -> (attrs, ts_ns, count, sum |
+    None, cumulative ladder [(le, cum)], no exemplars). Base-2
+    exponential buckets (base = 2^(2^-scale)): positive bucket at index
+    i covers (base^i, base^(i+1)] so its le is base^(i+1); negative
+    bucket at index i covers [-base^(i+1), -base^i) so its le is
+    -base^i; the zero bucket's le is the zero_threshold. (Prometheus's
+    own OTLP endpoint converts these to native histograms; a
+    classic-series engine keeps the classic shape.) Exemplars are not
+    extracted: the ladder is value-dependent."""
+    attrs: dict[str, str] = {}
+    ts = count = zero_count = scale = 0
+    hsum: float | None = None
+    zero_thr = 0.0
+    pos = neg = []
+    for fno, wt, p in _fields(pay):
+        if fno == 3 and wt == 1:
+            ts = struct.unpack("<Q", p)[0]
+        elif fno == 4 and wt == 1:
+            count = struct.unpack("<Q", p)[0]
+        elif fno == 5 and wt == 1:
+            hsum = struct.unpack("<d", p)[0]
+        elif fno == 6 and wt == 0:
+            scale = _zigzag64(p)
+        elif fno == 7 and wt == 1:
+            zero_count = struct.unpack("<Q", p)[0]
+        elif fno == 8 and wt == 2:
+            pos = _exp_buckets(p, 1)
+        elif fno == 9 and wt == 2:
+            neg = _exp_buckets(p, 0)
+        elif fno == 14 and wt == 1:
+            zero_thr = struct.unpack("<d", p)[0]
+        elif fno == 1 and wt == 2:
+            key, val = _keyvalue(p)
+            attrs[key] = val
+    if not -10 <= scale <= 20:
+        raise ValueError(
+            f"otlp: exponential histogram scale {scale} outside [-10, 20]"
+        )
+    ladder = _exp_ladder(scale, neg, zero_thr, zero_count, pos)
+    return attrs, ts, count, hsum, ladder, []
+
+
+def _summary_point(pay: bytes):
+    """SummaryDataPoint -> (attrs, ts_ns, count, sum, [(quantile,
+    value)])."""
+    attrs: dict[str, str] = {}
+    ts = count = 0
+    ssum = 0.0
+    quants: list[tuple[float, float]] = []
+    for fno, wt, p in _fields(pay):
+        if fno == 3 and wt == 1:
+            ts = struct.unpack("<Q", p)[0]
+        elif fno == 4 and wt == 1:
+            count = struct.unpack("<Q", p)[0]
+        elif fno == 5 and wt == 1:
+            ssum = struct.unpack("<d", p)[0]
+        elif fno == 6 and wt == 2:
+            q = v = 0.0
+            for qf, qw, qp in _fields(p):
+                if qf == 1 and qw == 1:
+                    q = struct.unpack("<d", qp)[0]
+                elif qf == 2 and qw == 1:
+                    v = struct.unpack("<d", qp)[0]
+            quants.append((q, v))
+        elif fno == 7 and wt == 2:
+            key, val = _keyvalue(p)
+            attrs[key] = val
+    return attrs, ts, count, ssum, quants
+
+
+def _metric(buf: bytes, base: dict[str, str], samples: list,
+            exemplars: list) -> None:
+    """One Metric -> its translated samples and exemplars, appended.
+    Points go kind by kind: number (Gauge 5 | Sum 7), Histogram 9,
+    ExponentialHistogram 10, Summary 11."""
+    name = ""
+    points: dict[int, list[bytes]] = {5: [], 9: [], 10: [], 11: []}
+    for fno, wt, pay in _fields(buf):
+        if fno == 1 and wt == 2:
+            name = pay.decode("utf-8")
+        elif fno in (5, 7, 9, 10, 11) and wt == 2:
+            # a Sum's temporality (2) / is_monotonic (3) do not change
+            # values
+            points[5 if fno == 7 else fno] += [
+                p for f, w, p in _fields(pay) if f == 1 and w == 2
+            ]
+        # description/unit (2/3) skip
+    if not name:
+        raise ValueError("otlp: metric without a name")
+
+    def emit(series, attrs, ts, vd, vi):
+        # point attributes win on collision
+        samples.append((series, {**base, **attrs}, ts, vd, vi))
+
+    for pay in points[5]:
+        attrs, ts, vd, vi, exs = _number_point(pay)
+        if vd is not None or vi is not None:  # else a no-value point
+            emit(name, attrs, ts, vd, vi)
+        if exs:
+            exemplars.append((name, {**base, **attrs}, exs))
+    bucket = f"{name}_bucket"
+    for attrs, ts, count, hsum, ladder, exs in [
+        *map(_histogram_point, points[9]),
+        *map(_exp_histogram_point, points[10]),
+    ]:
+        for le, cum in ladder:
+            emit(bucket, {**attrs, "le": repr(float(le))}, ts, None, cum)
+        emit(bucket, {**attrs, "le": "+Inf"}, ts, None, count)
+        if hsum is not None:
+            emit(f"{name}_sum", attrs, ts, hsum, None)
+        emit(f"{name}_count", attrs, ts, None, count)
+        for le, ex in exs:
+            exemplars.append((bucket, {**base, **attrs, "le": le}, [ex]))
+    for pay in points[11]:
+        attrs, ts, count, ssum, quants = _summary_point(pay)
+        for q, v in quants:
+            emit(name, {**attrs, "quantile": repr(float(q))}, ts, v, None)
+        emit(f"{name}_sum", attrs, ts, ssum, None)
+        emit(f"{name}_count", attrs, ts, None, count)
+
+
+def decode_export_metrics(data: bytes) -> tuple[list, list]:
+    """Uncompressed ExportMetricsServiceRequest bytes -> (samples,
+    exemplars), from one walk of the message.
+
+    samples: the flat Prometheus-translated
+    [(series name, labels, ts_ns, value f64 | None, value int | None)].
+    Exactly ONE of the two value channels is set per sample (histogram /
+    summary component series use the f64 channel for sums and the int
+    channel for counts/bucket counts).
+
+    exemplars: [(series name, series labels, [(exemplar labels incl
+    trace_id/span_id, ts_ns, value)])] for the number and histogram
+    points that carry them. Number points attach to the metric's own
+    series, histogram points to the `<name>_bucket` series whose `le`
+    bound admits the exemplar value."""
+    samples: list = []
+    exemplars: list = []
     for fno, wt, rm in _fields(data):
         if fno != 1 or wt != 2:
-            continue
-        job = instance = namespace = None
-        scope_bufs: list[bytes] = []
+            continue  # ResourceMetrics only
+        res: dict[str, str] = {}
+        scopes: list[bytes] = []
         for rfno, rwt, rpay in _fields(rm):
-            if rfno == 1 and rwt == 2:
+            if rfno == 1 and rwt == 2:  # Resource
                 res = _kv_attrs(rpay, 1)
-                job = res.get("service.name")
-                instance = res.get("service.instance.id")
-                namespace = res.get("service.namespace")
-            elif rfno == 2 and rwt == 2:
-                scope_bufs.append(rpay)
+            elif rfno == 2 and rwt == 2:  # ScopeMetrics
+                scopes.append(rpay)
         base: dict[str, str] = {}
+        job = res.get("service.name")
+        namespace = res.get("service.namespace")
         if job is not None:
             base["job"] = f"{namespace}/{job}" if namespace else job
-        if instance is not None:
-            base["instance"] = instance
-        for sm in scope_bufs:
+        if "service.instance.id" in res:
+            base["instance"] = res["service.instance.id"]
+        for sm in scopes:
+            # Metric only (scope 1 / schema_url 3 skip)
             for sfno, swt, metric in _fields(sm):
-                if sfno != 2 or swt != 2:
-                    continue
-                name = ""
-                number_pts: list[bytes] = []
-                hist_pts: list[bytes] = []
-                for mfno, mwt, mpay in _fields(metric):
-                    if mfno == 1 and mwt == 2:
-                        name = mpay.decode("utf-8")
-                    elif mfno in (5, 7) and mwt == 2:
-                        for dfno, dwt, dpay in _fields(mpay):
-                            if dfno == 1 and dwt == 2:
-                                number_pts.append(dpay)
-                    elif mfno == 9 and mwt == 2:
-                        for dfno, dwt, dpay in _fields(mpay):
-                            if dfno == 1 and dwt == 2:
-                                hist_pts.append(dpay)
-                for dpay in number_pts:
-                    attrs, _, _, _ = _number_point(dpay)
-                    exs = [
-                        _exemplar(p)
-                        for pf, pw, p in _fields(dpay)
-                        if pf == 5 and pw == 2
-                    ]
-                    if exs:
-                        out.append((name, {**base, **attrs}, exs))
-                for dpay in hist_pts:
-                    attrs: dict[str, str] = {}
-                    bounds: list[float] = []
-                    exs = []
-                    for pf, pw, p in _fields(dpay):
-                        if pf == 7 and pw in (1, 2):
-                            bounds += _packed_double(p, pw)
-                        elif pf == 8 and pw == 2:
-                            exs.append(_exemplar(p))
-                        elif pf == 9 and pw == 2:
-                            key, v = _keyvalue(p)
-                            attrs[key] = v
-                    for ex_labels, ts, val in exs:
-                        le = next(
-                            (repr(float(b)) for b in bounds if val <= b),
-                            "+Inf",
-                        )
-                        out.append(
-                            (
-                                f"{name}_bucket",
-                                {**base, **attrs, "le": le},
-                                [(ex_labels, ts, val)],
-                            )
-                        )
-    return out
+                if sfno == 2 and swt == 2:
+                    _metric(metric, base, samples, exemplars)
+    return samples, exemplars
 
 
 # ------------------------------------------------------------- encode
-
-def _ld(out: bytearray, fno: int, body: bytes) -> None:
-    _put_uvarint(out, (fno << 3) | 2)
-    _put_uvarint(out, len(body))
-    out += body
-
 
 def _fixed64(out: bytearray, fno: int, raw: bytes) -> None:
     _put_uvarint(out, (fno << 3) | 1)
@@ -623,11 +471,11 @@ def _enc_attrs(attrs: dict[str, str], field_no: int) -> bytes:
     out = bytearray()
     for k in sorted(attrs):
         kv = bytearray()
-        _ld(kv, 1, k.encode("utf-8"))
+        _put_ld(kv, 1, k.encode("utf-8"))
         av = bytearray()
-        _ld(av, 1, attrs[k].encode("utf-8"))  # string_value
-        _ld(kv, 2, bytes(av))
-        _ld(out, field_no, bytes(kv))
+        _put_ld(av, 1, attrs[k].encode("utf-8"))  # string_value
+        _put_ld(kv, 2, bytes(av))
+        _put_ld(out, field_no, bytes(kv))
     return bytes(out)
 
 
@@ -673,11 +521,11 @@ def encode_export_metrics(
     for res_attrs, metrics in resources:
         rm = bytearray()
         if res_attrs:
-            _ld(rm, 1, _enc_attrs(res_attrs, 1))  # Resource
+            _put_ld(rm, 1, _enc_attrs(res_attrs, 1))  # Resource
         sm = bytearray()
         for name, kind, points in metrics:
             m = bytearray()
-            _ld(m, 1, name.encode("utf-8"))
+            _put_ld(m, 1, name.encode("utf-8"))
             if kind in ("gauge", "sum"):
                 body = bytearray()
                 for attrs, ts_ns, value in points:
@@ -689,13 +537,13 @@ def encode_export_metrics(
                         pt = _enc_number_point(
                             attrs, ts_ns, float(value), None
                         )
-                    _ld(body, 1, pt)
+                    _put_ld(body, 1, pt)
                 if kind == "sum":
                     _put_uvarint(body, (2 << 3) | 0)  # temporality
                     _put_uvarint(body, 2)  # CUMULATIVE
                     _put_uvarint(body, (3 << 3) | 0)  # is_monotonic
                     _put_uvarint(body, 1)
-                _ld(m, 5 if kind == "gauge" else 7, bytes(body))
+                _put_ld(m, 5 if kind == "gauge" else 7, bytes(body))
             elif kind == "histogram":
                 body = bytearray()
                 for attrs, ts_ns, count, hsum, bounds, bcounts in points:
@@ -703,19 +551,19 @@ def encode_export_metrics(
                     _fixed64(p, 3, struct.pack("<Q", ts_ns))
                     _fixed64(p, 4, struct.pack("<Q", count))
                     _fixed64(p, 5, struct.pack("<d", hsum))
-                    _ld(
+                    _put_ld(
                         p, 6,
                         b"".join(struct.pack("<Q", c) for c in bcounts),
                     )
-                    _ld(
+                    _put_ld(
                         p, 7,
                         b"".join(struct.pack("<d", b) for b in bounds),
                     )
                     p += _enc_attrs(attrs, 9)
-                    _ld(body, 1, bytes(p))
+                    _put_ld(body, 1, bytes(p))
                 _put_uvarint(body, (2 << 3) | 0)
                 _put_uvarint(body, 2)  # CUMULATIVE
-                _ld(m, 9, bytes(body))
+                _put_ld(m, 9, bytes(body))
             elif kind == "exponential_histogram":
                 body = bytearray()
                 for (attrs, ts_ns, count, hsum, scale, zero_count,
@@ -742,13 +590,13 @@ def encode_export_metrics(
                         packed = bytearray()
                         for c in counts:
                             _put_uvarint(packed, c)
-                        _ld(b, 2, bytes(packed))
-                        _ld(p, fno, bytes(b))
+                        _put_ld(b, 2, bytes(packed))
+                        _put_ld(p, fno, bytes(b))
                     _fixed64(p, 14, struct.pack("<d", zero_thr))
-                    _ld(body, 1, bytes(p))
+                    _put_ld(body, 1, bytes(p))
                 _put_uvarint(body, (2 << 3) | 0)
                 _put_uvarint(body, 2)  # CUMULATIVE
-                _ld(m, 10, bytes(body))
+                _put_ld(m, 10, bytes(body))
             elif kind == "summary":
                 body = bytearray()
                 for attrs, ts_ns, count, ssum, quants in points:
@@ -760,15 +608,15 @@ def encode_export_metrics(
                         qv = bytearray()
                         _fixed64(qv, 1, struct.pack("<d", q))
                         _fixed64(qv, 2, struct.pack("<d", v))
-                        _ld(p, 6, bytes(qv))
+                        _put_ld(p, 6, bytes(qv))
                     p += _enc_attrs(attrs, 7)
-                    _ld(body, 1, bytes(p))
-                _ld(m, 11, bytes(body))
+                    _put_ld(body, 1, bytes(p))
+                _put_ld(m, 11, bytes(body))
             else:
                 raise ValueError(f"otlp: unknown metric kind {kind!r}")
-            _ld(sm, 2, bytes(m))  # ScopeMetrics.metrics
-        _ld(rm, 2, bytes(sm))  # ResourceMetrics.scope_metrics
-        _ld(req, 1, bytes(rm))
+            _put_ld(sm, 2, bytes(m))  # ScopeMetrics.metrics
+        _put_ld(rm, 2, bytes(sm))  # ResourceMetrics.scope_metrics
+        _put_ld(req, 1, bytes(rm))
     return bytes(req)
 
 
@@ -787,11 +635,10 @@ def _unwrap(raw: bytes, encoding: str) -> bytes:
 def parse_otlp_metrics(
     blobs: DataFrame,
     ts_unit: str = "ns",
-    payload_col: str = "content",
     encoding: str = "auto",
 ) -> DataFrame:
     """Distributed ExportMetricsServiceRequest decode: `blobs` holds one
-    request body per row in `payload_col` (binary; gzip bodies
+    request body per row in `content` (binary; gzip bodies
     self-identify by magic under encoding="auto"). Output one row per
     Prometheus-translated sample — parse_remote_write's schema plus an
     exact `value_int` channel: as_int points and bucket/observation
@@ -815,11 +662,11 @@ def parse_otlp_metrics(
 
         for pdf in batches:
             rows = []
-            for blob in pdf[payload_col]:
+            for blob in pdf["content"]:
                 with malformed_payload("otlp"):
                     raw = _unwrap(bytes(blob), encoding)
-                    decoded = decode_export_metrics(raw)
-                for name, labels, ts, vd, vi in decoded:
+                    samples, _ = decode_export_metrics(raw)
+                for name, labels, ts, vd, vi in samples:
                     if vi is not None and vi >= 1 << 63:
                         raise ValueError(
                             "otlp: uint64 count exceeds int64 storage"
@@ -847,7 +694,7 @@ def parse_otlp_metrics(
             yield pdf
 
     return (
-        blobs.select(F.col(payload_col))
+        blobs.select("content")
         .mapInPandas(kernel, OTLP_PARSED_SCHEMA)
         .select(
             "name",

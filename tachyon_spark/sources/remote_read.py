@@ -44,8 +44,9 @@ from pyspark.sql import functions as F
 
 from tachyon_spark.sources.remote_write import (
     _fields,
-    _put_uvarint,
-    _uvarint,
+    _int64,
+    _packed_varints,
+    _put_ld,
     decode_write_request,
     encode_write_request,
     snappy_compress,
@@ -75,18 +76,15 @@ def decode_read_request(
         if fno == 2 and wt == 0:
             accepted.append(pay)
         elif fno == 2 and wt == 2:  # packed enum form
-            i = 0
-            while i < len(pay):
-                v, i = _uvarint(pay, i)  # guarded: truncation raises
-                accepted.append(v)
+            accepted += _packed_varints(pay)
         elif fno == 1 and wt == 2:  # Query
             start = end = 0
             matchers: list[tuple[str, str, str]] = []
             for qfno, qwt, qpay in _fields(pay):
                 if qfno == 1 and qwt == 0:
-                    start = qpay - (1 << 64) if qpay >= 1 << 63 else qpay
+                    start = _int64(qpay)
                 elif qfno == 2 and qwt == 0:
-                    end = qpay - (1 << 64) if qpay >= 1 << 63 else qpay
+                    end = _int64(qpay)
                 elif qfno == 3 and qwt == 2:  # LabelMatcher
                     mtype, mname, mval = 0, "", ""
                     for mfno, mwt, mpay in _fields(qpay):
@@ -121,10 +119,7 @@ def encode_read_response(
     encode_write_request's output (shared TimeSeries shape)."""
     out = bytearray()
     for series in results:
-        body = encode_write_request(series)
-        _put_uvarint(out, (1 << 3) | 2)
-        _put_uvarint(out, len(body))
-        out += body
+        _put_ld(out, 1, encode_write_request(series))
     return bytes(out)
 
 
@@ -134,7 +129,8 @@ def decode_read_response(
     """Client-side inverse (round-trip tests + acting as a remote_read
     CLIENT against another Prometheus-compatible server)."""
     return [
-        decode_write_request(pay)
+        [(labels, samples) for labels, samples, _, _ in
+         decode_write_request(pay)]
         for fno, wt, pay in _fields(data)
         if fno == 1 and wt == 2
     ]

@@ -2,11 +2,11 @@
 
 remote_write is the *push* wire protocol most real Prometheus
 deployments emit: an HTTP POST of a snappy-compressed protobuf
-`WriteRequest` (Prometheus remote-write specification 1.0;
-prometheus/prompb/remote.proto + types.proto — both public). This
-module hand-rolls the two codecs in the repo's established
-dependency-free style (functions/codecs.py does the same for
-PNG/APNG/WAV):
+`WriteRequest` (Prometheus remote-write specification 1.0, or the 2.0
+`io.prometheus.write.v2.Request` with symbol-interned labels;
+prometheus/prompb — public). This module hand-rolls the two codecs in
+the repo's established dependency-free style (functions/codecs.py does
+the same for PNG/APNG/WAV):
 
 - **snappy block format** (google/snappy format_description.txt):
   varint uncompressed-length preamble, then a stream of literal /
@@ -14,13 +14,17 @@ PNG/APNG/WAV):
   (offset < length → byte-at-a-time replication). The encoder here is
   a greedy 4-byte hash matcher — real compression, and every decoder
   path (including overlap) is exercised by round-trip tests.
-- **protobuf wire walk** for exactly the WriteRequest message tree:
-  WriteRequest{ repeated TimeSeries timeseries = 1 },
-  TimeSeries{ repeated Label labels = 1, repeated Sample samples = 2 },
-  Label{ string name = 1, string value = 2 },
-  Sample{ double value = 1 (fixed64), int64 timestamp = 2 (ms) }.
-  Unknown fields skip by wire type (forward compatibility — a 2.0
-  sender's metadata/exemplar fields must not break ingest).
+- **protobuf wire walk**: one decoder, `decode_write_request`, walks
+  each TimeSeries once for both protos and returns its labels,
+  samples, native histograms and exemplars (the message tree is in the
+  comment above it; a new message field goes into that walk). Unknown
+  fields skip by wire type.
+
+The receiver stores samples and native histograms, the latter
+translated to classic `<name>_bucket{le}`/`_sum`/`_count` series (the
+OTLP receiver's exponential-histogram translation, sharing its bucket
+ladder); Prometheus staleness markers drop. Exemplars are stored by
+tachyon_spark/exemplars.py from the same decode.
 
 Scale shape: decode runs DISTRIBUTED — `parse_remote_write` is an
 Arrow-batched `mapInPandas` over binary payload rows (one row per
@@ -37,8 +41,13 @@ line_protocol.py and openmetrics.py.
 
 from __future__ import annotations
 
+import struct
+from functools import partial
+from itertools import accumulate
+
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from tachyon_spark.promapi import _escape_label
 from tachyon_spark.sources.series_resolve import (
     _ingest_parsed,
     _read_blobs,
@@ -47,10 +56,7 @@ from tachyon_spark.sources.series_resolve import (
 
 __all__ = [
     "decode_write_request",
-    "decode_write_request_histograms",
-    "decode_write_request_v2",
     "encode_write_request",
-    "encode_write_request_v2",
     "ingest_remote_write",
     "parse_remote_write",
     "render_remote_write",
@@ -84,6 +90,13 @@ def _put_uvarint(out: bytearray, val: int) -> None:
         out.append((val & 0x7F) | 0x80)
         val >>= 7
     out.append(val)
+
+
+def _put_ld(out: bytearray, fno: int, body: bytes) -> None:
+    """Append field `fno` as a length-delimited (wire type 2) field."""
+    _put_uvarint(out, (fno << 3) | 2)
+    _put_uvarint(out, len(body))
+    out += body
 
 
 def snappy_decompress(data: bytes) -> bytes:
@@ -198,19 +211,30 @@ def snappy_compress(data: bytes) -> bytes:
 
 
 # ------------------------------------------------------------- protobuf
-
-def _skip_field(buf: bytes, i: int, wt: int) -> int:
-    if wt == 0:
-        return _uvarint(buf, i)[1]
-    if wt == 1:
-        return i + 8
-    if wt == 2:
-        ln, i = _uvarint(buf, i)
-        return i + ln
-    if wt == 5:
-        return i + 4
-    raise ValueError(f"remote_write: unsupported wire type {wt}")
-
+#
+# The two message trees, remote-write 1.0 (prompb.WriteRequest,
+# prometheus/prompb remote.proto + types.proto) and 2.0
+# (io.prometheus.write.v2.Request, prometheus/prompb/io/prometheus/
+# write/v2/types.proto; a sender selects it with `Content-Type:
+# application/x-protobuf;proto=io.prometheus.write.v2.Request`):
+#
+#   WriteRequest{ repeated TimeSeries timeseries = 1 }               v1
+#   Request{ repeated string symbols = 4 (symbols[0] MUST be ""),
+#            repeated TimeSeries timeseries = 5 }                    v2
+#   TimeSeries{ labels = 1, repeated Sample samples = 2,
+#               v1: repeated Exemplar exemplars = 3,
+#                   repeated Histogram histograms = 4;
+#               v2: histograms = 3, exemplars = 4, metadata = 5,
+#                   created_timestamp = 6 }
+#   labels   v1: repeated Label{ string name = 1, string value = 2 }
+#            v2: repeated uint32 labels_refs (packed; pairs of symbol
+#                refs: name, value)
+#   Sample{ double value = 1 (fixed64), int64 timestamp = 2 (ms) }
+#   Exemplar{ labels = 1 (as the series'), double value = 2,
+#             int64 timestamp = 3 (ms) }
+#
+# Unknown fields skip by wire type at every level (forward
+# compatibility: a newer sender's fields must not break ingest).
 
 def _fields(buf: bytes):
     """Yield (field_number, wire_type, payload) triples; payload is the
@@ -244,75 +268,198 @@ def _fields(buf: bytes):
             raise ValueError(f"remote_write: unsupported wire type {wt}")
 
 
-def decode_write_request(
-    data: bytes,
-) -> list[tuple[dict[str, str], list[tuple[int, float]]]]:
-    """Uncompressed WriteRequest bytes ->
-    [(labels incl __name__, [(timestamp_ms, value), ...]), ...].
-    int64 timestamps decode signed (two's complement 10-byte varints);
-    unknown fields at every level skip cleanly."""
-    import struct
+def _int64(u: int) -> int:
+    """An int64 varint (two's complement, 10 bytes when negative)."""
+    return u - (1 << 64) if u >= 1 << 63 else u
 
-    series = []
-    for fno, wt, payload in _fields(data):
-        if fno != 1 or wt != 2:
-            continue  # metadata (field 3) and future fields skip
-        labels: dict[str, str] = {}
-        samples: list[tuple[int, float]] = []
-        for sfno, swt, spay in _fields(payload):
-            if sfno == 1 and swt == 2:  # Label
-                name = value = ""
-                for lfno, lwt, lpay in _fields(spay):
-                    if lfno == 1 and lwt == 2:
-                        name = lpay.decode("utf-8")
-                    elif lfno == 2 and lwt == 2:
-                        value = lpay.decode("utf-8")
-                labels[name] = value
-            elif sfno == 2 and swt == 2:  # Sample
-                val, ts = 0.0, 0
-                for pfno, pwt, ppay in _fields(spay):
-                    if pfno == 1 and pwt == 1:
-                        val = struct.unpack("<d", ppay)[0]
-                    elif pfno == 2 and pwt == 0:
-                        ts = ppay - (1 << 64) if ppay >= 1 << 63 else ppay
-                samples.append((ts, val))
-            # exemplars (3) / histograms (4) skip — samples-only receiver
-        series.append((labels, samples))
-    return series
+
+def _zigzag64(n: int) -> int:
+    """A sint32/sint64 (zigzag) varint."""
+    return (n >> 1) ^ -(n & 1)
+
+
+def _packed_varints(pay: bytes) -> list[int]:
+    """A packed repeated varint field."""
+    out, i = [], 0
+    while i < len(pay):
+        v, i = _uvarint(pay, i)
+        out.append(v)
+    return out
+
+
+def _packed64(pay: bytes, wt: int, fmt: str = "<d") -> list:
+    """A repeated double (or fixed64, `fmt` "<Q") field: packed (wt 2)
+    per proto3, or one unpacked element (wt 1), which a conforming
+    decoder must also accept."""
+    if wt != 2:
+        return [struct.unpack(fmt, pay)[0]]
+    if len(pay) % 8:
+        raise ValueError("protobuf: ragged packed 64-bit field")
+    return [v for (v,) in struct.iter_unpack(fmt, pay)]
+
+
+def _v1_labels(items: list[tuple[int, bytes]]) -> dict[str, str]:
+    """The field-1 entries (wire type, payload) of a v1 TimeSeries or
+    Exemplar, each a Label message -> {name: value}."""
+    labels = {}
+    for wt, pay in items:
+        if wt == 2:
+            name = value = ""
+            for fno, lwt, p in _fields(pay):
+                if fno == 1 and lwt == 2:
+                    name = p.decode("utf-8")
+                elif fno == 2 and lwt == 2:
+                    value = p.decode("utf-8")
+            labels[name] = value
+    return labels
+
+
+def _v2_labels(
+    symbols: list[str], items: list[tuple[int, bytes]]
+) -> dict[str, str]:
+    """The field-1 entries of a v2 TimeSeries or Exemplar, symbol refs
+    packed (wt 2) or one per entry (wt 0) -> {name: value}."""
+    refs = []
+    for wt, pay in items:
+        if wt == 2:
+            refs += _packed_varints(pay)
+        elif wt == 0:
+            refs.append(pay)
+    if len(refs) % 2:
+        raise ValueError(
+            "remote_write v2: labels_refs must hold (name, value) "
+            f"pairs, got {len(refs)} refs"
+        )
+    labels = {}
+    for n, v in zip(refs[::2], refs[1::2]):
+        if n >= len(symbols) or v >= len(symbols):
+            raise ValueError(
+                "remote_write v2: symbol ref out of range "
+                f"({max(n, v)} >= {len(symbols)})"
+            )
+        labels[symbols[n]] = symbols[v]
+    return labels
+
+
+def _sample(pay: bytes) -> tuple[int, float]:
+    val, ts = 0.0, 0
+    for fno, wt, p in _fields(pay):
+        if fno == 1 and wt == 1:
+            val = struct.unpack("<d", p)[0]
+        elif fno == 2 and wt == 0:
+            ts = _int64(p)
+    return ts, val
+
+
+def _exemplar(pay: bytes, labels_of) -> tuple[dict[str, str], int, float]:
+    lab, val, ts = [], 0.0, 0
+    for fno, wt, p in _fields(pay):
+        if fno == 1:
+            lab.append((wt, p))
+        elif fno == 2 and wt == 1:
+            val = struct.unpack("<d", p)[0]
+        elif fno == 3 and wt == 0:
+            ts = _int64(p)
+    return labels_of(lab), ts, val
+
+
+# per proto: the request's TimeSeries field, then a TimeSeries'
+# histograms and exemplars fields
+_FIELDS = {"1": (1, 4, 3), "2": (5, 3, 4)}
+
+
+def decode_write_request(
+    data: bytes, proto: str = "1"
+) -> list[tuple[dict[str, str], list, list, list]]:
+    """Uncompressed WriteRequest (`proto` "1") or v2 Request ("2")
+    bytes -> one (labels incl __name__, samples, histograms, exemplars)
+    per TimeSeries, in wire order:
+
+    - samples [(timestamp_ms, value)];
+    - native histograms [(ts_ms, count, sum, ladder)], see
+      _decode_native_histogram;
+    - exemplars [(exemplar labels, timestamp_ms, value)] (the trace
+      breadcrumbs Grafana links from; labels are typically
+      trace_id/span_id).
+
+    The proto picks only the field numbers and the label decoder. v2
+    raises on a non-empty symbol 0, an odd labels_refs arity or an
+    out-of-range ref: each a spec violation a receiver must reject
+    rather than misattribute samples to the wrong series."""
+    series_f, hist_f, ex_f = _FIELDS[proto]
+    symbols: list[str] = []
+    series: list[bytes] = []
+    for fno, wt, pay in _fields(data):
+        if fno == series_f and wt == 2:
+            series.append(pay)
+        elif proto == "2" and fno == 4 and wt == 2:
+            symbols.append(pay.decode("utf-8"))
+    labels_of = _v1_labels
+    if proto == "2":
+        if series and (not symbols or symbols[0] != ""):
+            raise ValueError(
+                "remote_write v2: symbols[0] must be the empty string"
+            )
+        labels_of = partial(_v2_labels, symbols)
+    out = []
+    for ts_pay in series:
+        lab, samples, hists, exemplars = [], [], [], []
+        for fno, wt, pay in _fields(ts_pay):
+            if fno == 1:
+                lab.append((wt, pay))
+            elif wt != 2:
+                continue
+            elif fno == 2:
+                samples.append(_sample(pay))
+            elif fno == hist_f:
+                hists.append(_decode_native_histogram(pay))
+            elif fno == ex_f:
+                exemplars.append(_exemplar(pay, labels_of))
+        out.append((labels_of(lab), samples, hists, exemplars))
+    return out
 
 
 def encode_write_request(
     series: list[tuple[dict[str, str], list[tuple[int, float]]]],
+    proto: str = "1",
 ) -> bytes:
-    """Inverse of decode_write_request (uncompressed). Labels encode in
-    sorted order (the spec requires sorted, de-duplicated label names)."""
-    import struct
-
-    def ld(out: bytearray, fno: int, body: bytes) -> None:
-        _put_uvarint(out, (fno << 3) | 2)
-        _put_uvarint(out, len(body))
-        out += body
-
+    """Inverse of decode_write_request for [(labels incl __name__,
+    [(timestamp_ms, value), ...])] (uncompressed). Labels encode in
+    sorted order (the spec requires sorted, de-duplicated label names);
+    v2 interns them in the symbol table (symbols[0] = "" per spec, then
+    first-use order) and writes packed labels_refs pairs."""
+    interned = {"": 0}  # v2 symbol -> ref; insertion order is ref order
     req = bytearray()
     for labels, samples in series:
         ts_msg = bytearray()
-        for k in sorted(labels):
-            lab = bytearray()
-            ld(lab, 1, k.encode("utf-8"))
-            ld(lab, 2, labels[k].encode("utf-8"))
-            ld(ts_msg, 1, bytes(lab))
+        if proto == "1":
+            for k in sorted(labels):
+                lab = bytearray()
+                _put_ld(lab, 1, k.encode("utf-8"))
+                _put_ld(lab, 2, labels[k].encode("utf-8"))
+                _put_ld(ts_msg, 1, lab)
+        else:
+            refs = bytearray()
+            for k in sorted(labels):
+                for s in (k, labels[k]):
+                    _put_uvarint(refs, interned.setdefault(s, len(interned)))
+            _put_ld(ts_msg, 1, refs)
         for ts, val in samples:
-            smp = bytearray()
-            _put_uvarint(smp, (1 << 3) | 1)
+            smp = bytearray(b"\x09")  # value: field 1, fixed64
             smp += struct.pack("<d", val)
-            _put_uvarint(smp, (2 << 3) | 0)
+            smp.append(0x10)  # timestamp: field 2, varint
             _put_uvarint(smp, ts & 0xFFFFFFFFFFFFFFFF)
-            ld(ts_msg, 2, bytes(smp))
-        ld(req, 1, bytes(ts_msg))
+            _put_ld(ts_msg, 2, smp)
+        _put_ld(req, _FIELDS[proto][0], ts_msg)
+    if proto == "2":
+        symbols = bytearray()
+        for s in interned:
+            _put_ld(symbols, 4, s.encode("utf-8"))
+        req[:0] = symbols
     return bytes(req)
 
 
-# ----------------------------------------- native histograms (r15)
+# ----------------------------------------------------- native histograms
 #
 # prompb.Histogram (types.proto) — Prometheus's sparse
 # exponential-bucket "native histogram", carried on TimeSeries field 4
@@ -340,94 +487,72 @@ def encode_write_request(
 # delta_k); float histograms carry absolute counts. The decoder
 # flattens spans+counts to (absolute index, count) pairs and
 # translates to the classic ascending-le cumulative ladder the engine
-# stores (same shape as the OTLP exponential translation).
+# stores (_exp_ladder, shared with the OTLP exponential translation).
+# Schemas outside [-4, 8] are rejected, among them the custom-bucket
+# schema -53, whose buckets are not exponential.
 
-def _zigzag64(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
-def _packed_varints(pay: bytes) -> list[int]:
-    out, i = [], 0
-    while i < len(pay):
-        v, i = _uvarint(pay, i)
-        out.append(v)
-    return out
-
-
-def _bucket_spans(items: list[bytes]) -> list[tuple[int, int]]:
-    spans = []
-    for pay in items:
+def _span_buckets(
+    spans: list[bytes], deltas: list[int], floats: list[float]
+) -> list[tuple[int, float]]:
+    """BucketSpan messages + (delta-encoded int counts | absolute float
+    counts) -> [(absolute bucket index, count)], counts as floats."""
+    counts = floats or [float(c) for c in accumulate(deltas)]
+    offs_lens = []
+    for pay in spans:
         off = ln = 0
         for fno, wt, p in _fields(pay):
             if fno == 1 and wt == 0:
                 off = _zigzag64(p)
             elif fno == 2 and wt == 0:
                 ln = p
-        spans.append((off, ln))
-    return spans
-
-
-def _span_buckets(
-    spans: list[tuple[int, int]],
-    deltas: list[int],
-    floats: list[float],
-) -> list[tuple[int, float]]:
-    """spans + (delta-encoded int counts | absolute float counts) ->
-    [(absolute bucket index, count)]."""
-    counts: list[float]
-    if floats:
-        counts = floats
-    else:
-        counts, run = [], 0
-        for d in deltas:
-            run += d
-            counts.append(run)
-    out = []
-    idx = 0
-    k = 0
-    first = True
-    for off, ln in spans:
-        idx = off if first else idx + off
-        first = False
-        for _ in range(ln):
-            if k < len(counts):
-                out.append((idx, counts[k]))
-            k += 1
-            idx += 1
-    if k != len(counts):
+        offs_lens.append((off, ln))
+    total = sum(ln for _, ln in offs_lens)
+    if total != len(counts):
         raise ValueError(
             "remote_write: histogram span lengths disagree with "
-            f"bucket count ({k} vs {len(counts)})"
+            f"bucket count ({total} vs {len(counts)})"
         )
+    out: list[tuple[int, float]] = []
+    idx = k = 0
+    for n, (off, ln) in enumerate(offs_lens):
+        idx = off if n == 0 else idx + off
+        out += zip(range(idx, idx + ln), counts[k : k + ln])
+        idx += ln
+        k += ln
+    return out
+
+
+def _exp_ladder(scale: int, neg: list, zero_thr: float, zero_count,
+                pos: list) -> list[tuple[float, object]]:
+    """Base-2 exponential buckets (base = 2^(2^-scale)) -> the classic
+    ascending-le cumulative ladder [(le, cumulative count)]. `neg` and
+    `pos` hold (index, count) pairs indexed so that a bucket's le is
+    -base^index (negative side) or base^index (positive side); each
+    caller shifts its own convention to that. Empty buckets drop; the
+    zero bucket's le is `zero_thr`."""
+    inv = 2.0 ** -scale
+    ladder = [
+        (-(2.0 ** (i * inv)), c)
+        for i, c in sorted(neg, key=lambda t: -t[0]) if c
+    ]
+    if zero_count:
+        ladder.append((zero_thr, zero_count))
+    ladder += [(2.0 ** (i * inv), c) for i, c in sorted(pos) if c]
+    cum, out = 0, []
+    for le, c in ladder:
+        cum += c
+        out.append((le, cum))
     return out
 
 
 def _decode_native_histogram(pay: bytes):
     """Histogram message -> (ts_ms, count, sum, ladder) where ladder is
-    the classic ascending-le cumulative [(le_float_or_inf, cum_count)]."""
-    import struct
-
-    count = 0.0
-    hsum = 0.0
-    schema = 0
-    zero_thr = 0.0
-    zero_count = 0.0
-    ts = 0
-    neg_spans_raw: list[bytes] = []
-    pos_spans_raw: list[bytes] = []
-    neg_deltas: list[int] = []
-    pos_deltas: list[int] = []
-    neg_floats: list[float] = []
-    pos_floats: list[float] = []
-
-    def _doubles(p: bytes, wt: int) -> list[float]:
-        if wt == 2:
-            return [
-                struct.unpack_from("<d", p, i)[0]
-                for i in range(0, len(p), 8)
-            ]
-        return [struct.unpack("<d", p)[0]]
-
+    the classic ascending-le cumulative [(le_float, cum_count)]."""
+    count = hsum = zero_thr = zero_count = 0.0
+    schema = ts = 0
+    # spans, int deltas, float counts: fields 8-10 for the negative
+    # buckets, 11-13 for the positive ones
+    side: dict[int, list] = {f: [] for f in range(8, 14)}
     for fno, wt, p in _fields(pay):
         if fno == 1 and wt == 0:
             count = float(p)
@@ -443,381 +568,37 @@ def _decode_native_histogram(pay: bytes):
             zero_count = float(p)
         elif fno == 7 and wt == 1:
             zero_count = struct.unpack("<d", p)[0]
-        elif fno == 8 and wt == 2:
-            neg_spans_raw.append(p)
-        elif fno == 9 and wt in (0, 2):
-            neg_deltas += [
-                _zigzag64(v)
-                for v in (_packed_varints(p) if wt == 2 else [p])
-            ]
-        elif fno == 10 and wt in (1, 2):
-            neg_floats += _doubles(p, wt)
-        elif fno == 11 and wt == 2:
-            pos_spans_raw.append(p)
-        elif fno == 12 and wt in (0, 2):
-            pos_deltas += [
-                _zigzag64(v)
-                for v in (_packed_varints(p) if wt == 2 else [p])
-            ]
-        elif fno == 13 and wt in (1, 2):
-            pos_floats += _doubles(p, wt)
+        elif fno in (8, 11) and wt == 2:
+            side[fno].append(p)
+        elif fno in (9, 12) and wt in (0, 2):
+            side[fno] += map(
+                _zigzag64, _packed_varints(p) if wt == 2 else [p]
+            )
+        elif fno in (10, 13) and wt in (1, 2):
+            side[fno] += _packed64(p, wt)
         elif fno == 15 and wt == 0:
-            ts = p - (1 << 64) if p >= 1 << 63 else p
+            ts = _int64(p)
         # reset_hint (14) and future fields skip
-    inv = 2.0 ** (-schema)
-
-    def ub(index: int) -> float:  # base^index
-        return 2.0 ** (index * inv)
-
-    neg = _span_buckets(
-        _bucket_spans(neg_spans_raw), neg_deltas, neg_floats
-    )
-    pos = _span_buckets(
-        _bucket_spans(pos_spans_raw), pos_deltas, pos_floats
-    )
-    ladder: list[tuple[float, float]] = []
-    # negative bucket index i covers [-base^i, -base^(i-1)) -> its le
-    # (largest admitted value) is -base^(i-1); ascending le = most
-    # negative (largest index) first
-    for idx, c in sorted(neg, key=lambda t: -t[0]):
-        if c:
-            ladder.append((-ub(idx - 1), c))
-    if zero_count:
-        ladder.append((zero_thr, zero_count))
-    # positive bucket index i covers (base^(i-1), base^i] -> le base^i
-    for idx, c in sorted(pos):
-        if c:
-            ladder.append((ub(idx), c))
-    cum = 0.0
-    out_ladder = []
-    for le, c in ladder:
-        cum += c
-        out_ladder.append((le, cum))
-    return ts, count, hsum, out_ladder
-
-
-def decode_write_request_histograms(
-    data: bytes, proto: str = "1"
-) -> list[
-    tuple[dict[str, str], list[tuple[int, float, float, list]]]
-]:
-    """WriteRequest/v2-Request bytes -> [(series labels incl __name__,
-    [(ts_ms, count, sum, ladder), ...])] for series carrying NATIVE
-    histograms (TimeSeries field 4 in v1, field 3 in v2). Series
-    without histograms are omitted. The ladder is the classic
-    ascending-le cumulative bucket list ready for `_bucket`/`_sum`/
-    `_count` series emission."""
-    if proto == "1":
-        series_iter = (
-            (payload, 4)
-            for fno, wt, payload in _fields(data)
-            if fno == 1 and wt == 2
-        )
-        out = []
-        for ts_pay, hist_field in series_iter:
-            labels: dict[str, str] = {}
-            hists = []
-            for sfno, swt, spay in _fields(ts_pay):
-                if sfno == 1 and swt == 2:
-                    name = value = ""
-                    for lfno, lwt, lpay in _fields(spay):
-                        if lfno == 1 and lwt == 2:
-                            name = lpay.decode("utf-8")
-                        elif lfno == 2 and lwt == 2:
-                            value = lpay.decode("utf-8")
-                    labels[name] = value
-                elif sfno == hist_field and swt == 2:
-                    hists.append(_decode_native_histogram(spay))
-            if hists:
-                out.append((labels, hists))
-        return out
-    # v2: symbol-table labels, histograms on field 3
-    symbols: list[str] = []
-    series_raw: list[bytes] = []
-    for fno, wt, payload in _fields(data):
-        if fno == 4 and wt == 2:
-            symbols.append(payload.decode("utf-8"))
-        elif fno == 5 and wt == 2:
-            series_raw.append(payload)
-    out = []
-    for ts_pay in series_raw:
-        refs: list[int] = []
-        hists = []
-        for sfno, swt, spay in _fields(ts_pay):
-            if sfno == 1 and swt == 2:
-                i = 0
-                while i < len(spay):
-                    v, i = _uvarint(spay, i)
-                    refs.append(v)
-            elif sfno == 1 and swt == 0:
-                refs.append(spay)
-            elif sfno == 3 and swt == 2:
-                hists.append(_decode_native_histogram(spay))
-        if hists:
-            if len(refs) % 2:
-                raise ValueError(
-                    "remote_write v2: labels_refs must hold pairs"
-                )
-            labels = {}
-            for j in range(0, len(refs), 2):
-                n, v = refs[j], refs[j + 1]
-                if n >= len(symbols) or v >= len(symbols):
-                    raise ValueError(
-                        "remote_write v2: symbol ref out of range"
-                    )
-                labels[symbols[n]] = symbols[v]
-            out.append((labels, hists))
-    return out
-
-
-# ------------------------------------------------------- exemplars
-
-def decode_write_request_exemplars(
-    data: bytes,
-) -> list[tuple[dict[str, str], list[tuple[dict[str, str], int, float]]]]:
-    """WriteRequest bytes -> [(series labels incl __name__,
-    [(exemplar labels, timestamp_ms, value), ...])] for series that
-    carry exemplars (prompb.Exemplar: TimeSeries field 3 — the trace
-    breadcrumbs Grafana links from; labels are typically
-    trace_id/span_id). Series without exemplars are omitted."""
-    import struct
-
-    out = []
-    for fno, wt, payload in _fields(data):
-        if fno != 1 or wt != 2:
-            continue
-        labels: dict[str, str] = {}
-        exemplars: list[tuple[dict[str, str], int, float]] = []
-        for sfno, swt, spay in _fields(payload):
-            if sfno == 1 and swt == 2:  # Label
-                name = value = ""
-                for lfno, lwt, lpay in _fields(spay):
-                    if lfno == 1 and lwt == 2:
-                        name = lpay.decode("utf-8")
-                    elif lfno == 2 and lwt == 2:
-                        value = lpay.decode("utf-8")
-                labels[name] = value
-            elif sfno == 3 and swt == 2:  # Exemplar
-                ex_labels: dict[str, str] = {}
-                val, ts = 0.0, 0
-                for efno, ewt, epay in _fields(spay):
-                    if efno == 1 and ewt == 2:
-                        k = v = ""
-                        for lfno, lwt, lpay in _fields(epay):
-                            if lfno == 1 and lwt == 2:
-                                k = lpay.decode("utf-8")
-                            elif lfno == 2 and lwt == 2:
-                                v = lpay.decode("utf-8")
-                        ex_labels[k] = v
-                    elif efno == 2 and ewt == 1:
-                        val = struct.unpack("<d", epay)[0]
-                    elif efno == 3 and ewt == 0:
-                        ts = epay - (1 << 64) if epay >= 1 << 63 else epay
-                exemplars.append((ex_labels, ts, val))
-        if exemplars:
-            out.append((labels, exemplars))
-    return out
-
-
-def decode_write_request_exemplars_v2(
-    data: bytes,
-) -> list[tuple[dict[str, str], list[tuple[dict[str, str], int, float]]]]:
-    """v2 Request exemplars (TimeSeries field 4; labels are symbol-ref
-    pairs like the series labels). Same output shape as the v1 walk."""
-    import struct
-
-    symbols: list[str] = []
-    series_raw: list[bytes] = []
-    for fno, wt, payload in _fields(data):
-        if fno == 4 and wt == 2:
-            symbols.append(payload.decode("utf-8"))
-        elif fno == 5 and wt == 2:
-            series_raw.append(payload)
-
-    def refs_to_labels(refs: list[int]) -> dict[str, str]:
-        if len(refs) % 2:
-            raise ValueError(
-                "remote_write v2: labels_refs must hold pairs"
-            )
-        d = {}
-        for j in range(0, len(refs), 2):
-            n, v = refs[j], refs[j + 1]
-            if n >= len(symbols) or v >= len(symbols):
-                raise ValueError(
-                    "remote_write v2: symbol ref out of range"
-                )
-            d[symbols[n]] = symbols[v]
-        return d
-
-    def packed_refs(spay: bytes) -> list[int]:
-        refs, i = [], 0
-        while i < len(spay):
-            v, i = _uvarint(spay, i)
-            refs.append(v)
-        return refs
-
-    out = []
-    for ts_pay in series_raw:
-        refs: list[int] = []
-        exemplars: list[tuple[dict[str, str], int, float]] = []
-        for sfno, swt, spay in _fields(ts_pay):
-            if sfno == 1 and swt == 2:
-                refs += packed_refs(spay)
-            elif sfno == 1 and swt == 0:
-                refs.append(spay)
-            elif sfno == 4 and swt == 2:  # v2 Exemplar
-                ex_refs: list[int] = []
-                val, ts = 0.0, 0
-                for efno, ewt, epay in _fields(spay):
-                    if efno == 1 and ewt == 2:
-                        ex_refs += packed_refs(epay)
-                    elif efno == 1 and ewt == 0:
-                        ex_refs.append(epay)
-                    elif efno == 2 and ewt == 1:
-                        val = struct.unpack("<d", epay)[0]
-                    elif efno == 3 and ewt == 0:
-                        ts = epay - (1 << 64) if epay >= 1 << 63 else epay
-                exemplars.append((refs_to_labels(ex_refs), ts, val))
-        if exemplars:
-            out.append((refs_to_labels(refs), exemplars))
-    return out
-
-
-# ------------------------------------------- remote-write 2.0 (v2)
-#
-# io.prometheus.write.v2.Request (remote-write specification 2.0,
-# prometheus/prompb/io/prometheus/write/v2/types.proto — public): the
-# successor wire format Prometheus negotiates via
-# `Content-Type: application/x-protobuf;proto=io.prometheus.write.v2.Request`.
-# Label strings are INTERNED in a request-wide symbol table and series
-# carry pairs of uint32 refs instead of Label submessages:
-#
-#   Request{ repeated string symbols = 4 (symbols[0] MUST be ""),
-#            repeated TimeSeries timeseries = 5 }
-#   TimeSeries{ repeated uint32 labels_refs = 1 (packed, pairs:
-#               name ref, value ref), repeated Sample samples = 2,
-#               histograms = 3, exemplars = 4, Metadata metadata = 5,
-#               int64 created_timestamp = 6 }
-#   Sample{ double value = 1, int64 timestamp = 2 (ms) }  (same as 1.0)
-#
-# Histograms/exemplars/metadata skip (samples-only receiver, like the
-# 1.0 path); unknown fields skip by wire type.
-
-def decode_write_request_v2(
-    data: bytes,
-) -> list[tuple[dict[str, str], list[tuple[int, float]]]]:
-    """v2 Request bytes -> the same shape decode_write_request returns.
-    Raises on out-of-range symbol refs, odd labels_refs arity, or a
-    non-empty symbol 0 (each a spec violation a receiver must reject
-    rather than misattribute samples to the wrong series)."""
-    import struct
-
-    symbols: list[str] = []
-    series_raw: list[bytes] = []
-    for fno, wt, payload in _fields(data):
-        if fno == 4 and wt == 2:
-            symbols.append(payload.decode("utf-8"))
-        elif fno == 5 and wt == 2:
-            series_raw.append(payload)
-    if series_raw and (not symbols or symbols[0] != ""):
+    if not -4 <= schema <= 8:
         raise ValueError(
-            "remote_write v2: symbols[0] must be the empty string"
+            f"remote_write: native histogram schema {schema} outside "
+            "[-4, 8]"
         )
-    out = []
-    for ts_pay in series_raw:
-        refs: list[int] = []
-        samples: list[tuple[int, float]] = []
-        for sfno, swt, spay in _fields(ts_pay):
-            if sfno == 1 and swt == 2:  # packed uint32 labels_refs
-                i = 0
-                while i < len(spay):
-                    v, i = _uvarint(spay, i)
-                    refs.append(v)
-            elif sfno == 1 and swt == 0:  # unpacked element
-                refs.append(spay)
-            elif sfno == 2 and swt == 2:  # Sample
-                val, ts = 0.0, 0
-                for pfno, pwt, ppay in _fields(spay):
-                    if pfno == 1 and pwt == 1:
-                        val = struct.unpack("<d", ppay)[0]
-                    elif pfno == 2 and pwt == 0:
-                        ts = ppay - (1 << 64) if ppay >= 1 << 63 else ppay
-                samples.append((ts, val))
-            # histograms (3) / exemplars (4) / metadata (5) /
-            # created_timestamp (6) skip
-        if len(refs) % 2:
-            raise ValueError(
-                "remote_write v2: labels_refs must hold (name, value) "
-                f"pairs, got {len(refs)} refs"
-            )
-        labels: dict[str, str] = {}
-        for j in range(0, len(refs), 2):
-            n, v = refs[j], refs[j + 1]
-            if n >= len(symbols) or v >= len(symbols):
-                raise ValueError(
-                    "remote_write v2: symbol ref out of range "
-                    f"({max(n, v)} >= {len(symbols)})"
-                )
-            labels[symbols[n]] = symbols[v]
-        out.append((labels, samples))
-    return out
-
-
-def encode_write_request_v2(
-    series: list[tuple[dict[str, str], list[tuple[int, float]]]],
-) -> bytes:
-    """Inverse of decode_write_request_v2: builds the interned symbol
-    table (symbols[0] = "" per spec, then first-use order) and packed
-    labels_refs pairs. The exporter half of the v2 fixtures."""
-    import struct
-
-    def ld(out: bytearray, fno: int, body: bytes) -> None:
-        _put_uvarint(out, (fno << 3) | 2)
-        _put_uvarint(out, len(body))
-        out += body
-
-    symbols: list[str] = [""]
-    interned: dict[str, int] = {"": 0}
-
-    def ref(s: str) -> int:
-        if s not in interned:
-            interned[s] = len(symbols)
-            symbols.append(s)
-        return interned[s]
-
-    ts_msgs = []
-    for labels, samples in series:
-        ts_msg = bytearray()
-        packed = bytearray()
-        for k in sorted(labels):
-            _put_uvarint(packed, ref(k))
-            _put_uvarint(packed, ref(labels[k]))
-        ld(ts_msg, 1, bytes(packed))
-        for ts, val in samples:
-            smp = bytearray()
-            _put_uvarint(smp, (1 << 3) | 1)
-            smp += struct.pack("<d", val)
-            _put_uvarint(smp, (2 << 3) | 0)
-            _put_uvarint(smp, ts & 0xFFFFFFFFFFFFFFFF)
-            ld(ts_msg, 2, bytes(smp))
-        ts_msgs.append(bytes(ts_msg))
-    req = bytearray()
-    for s in symbols:
-        ld(req, 4, s.encode("utf-8"))
-    for m in ts_msgs:
-        ld(req, 5, m)
-    return bytes(req)
+    neg = _span_buckets(side[8], side[9], side[10])
+    pos = _span_buckets(side[11], side[12], side[13])
+    # negative bucket i covers [-base^i, -base^(i-1)): its le (largest
+    # admitted value) is -base^(i-1)
+    ladder = _exp_ladder(
+        schema, [(i - 1, c) for i, c in neg], zero_thr, zero_count, pos
+    )
+    return ts, count, hsum, ladder
 
 
 # ------------------------------------------------------- spark surface
 
-def _escape_label(v: str) -> str:
-    # promapi._escape_label — byte-identical to the column form the
-    # catalog join keys on (series_resolve.escape_label_col)
-    return v.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
-
-
 def _series_key(name: str, labels: dict[str, str]) -> str:
+    # promapi._escape_label is byte-identical to the column form the
+    # catalog join keys on (series_resolve.escape_label_col)
     body = ",".join(
         f'{k}="{_escape_label(v)}"' for k, v in sorted(labels.items())
     )
@@ -841,19 +622,21 @@ PARSED_SCHEMA = T.StructType(
 # semantically "series ended here", NOT a sample. Distinguishable from
 # real NaN data (0/0 arithmetic) only by exact bits.
 STALE_NAN_BITS = 0x7FF0000000000002
+_STALE_NAN = struct.pack("<Q", STALE_NAN_BITS)
+
+
+def _is_stale(v: float) -> bool:
+    return v != v and struct.pack("<d", v) == _STALE_NAN
 
 
 def parse_remote_write(
     blobs: DataFrame,
     ts_unit: str = "ms",
-    payload_col: str = "content",
     compressed: bool = True,
     proto: str = "1",
-    stale_markers: str = "drop",
-    native_histograms: str = "classic",
 ) -> DataFrame:
     """Distributed WriteRequest decode: `blobs` holds one snappy+proto
-    payload per row in `payload_col` (binary). Output one row per
+    payload per row in `content` (binary). Output one row per
     sample: (name, labels map, series_key, value double, ts long scaled
     to native units by `ts_unit` — "ms" is the wire unit the 1.0 spec
     mandates; unitless test clocks pass "ns"). A series without the
@@ -863,122 +646,71 @@ def parse_remote_write(
     spec negotiates via Content-Type, never by sniffing, so there is
     deliberately no "auto".
 
-    `stale_markers`: Prometheus writes the StaleNaN bit pattern when a
-    scraped series disappears — a liveness delimiter, not data. "drop"
-    (default) removes them at decode (so queries never surface a NaN
-    that means "ended"; real NaN data like 0/0 passes through — the
-    distinction is the exact bit pattern); "keep" stores them verbatim
-    for stores that track liveness downstream.
-
-    `native_histograms`: "classic" (default) translates native
-    (sparse exponential-bucket) histograms on the series into classic
+    Staleness markers (the StaleNaN bit pattern Prometheus writes when
+    a scraped series disappears) are a liveness delimiter, not data:
+    they drop, while real NaN data like 0/0 passes through (the
+    distinction is the exact bit pattern). Native (sparse
+    exponential-bucket) histograms translate into classic
     `<name>_bucket{le=...}`/`_sum`/`_count` rows — the same
     ascending-le cumulative translation the OTLP receiver applies, so
     a native-histogram sender's data stays queryable with
-    histogram_quantile; "skip" ignores them (the pre-r15 behavior)."""
-    import struct as _struct
-
+    histogram_quantile."""
     if ts_unit not in _UNIT_NS:
         raise ValueError(
             f"ts_unit must be one of {sorted(_UNIT_NS)}, got {ts_unit!r}"
         )
-    if proto not in ("1", "2"):
+    if proto not in _FIELDS:
         raise ValueError(f"proto must be '1' or '2', got {proto!r}")
-    if stale_markers not in ("drop", "keep"):
-        raise ValueError(
-            f"stale_markers must be drop|keep, got {stale_markers!r}"
-        )
-    if native_histograms not in ("classic", "skip"):
-        raise ValueError(
-            "native_histograms must be classic|skip, got "
-            f"{native_histograms!r}"
-        )
     mult = _UNIT_NS[ts_unit]
-    decoder = (
-        decode_write_request if proto == "1" else decode_write_request_v2
-    )
-    drop_stale = stale_markers == "drop"
-
-    def _is_stale(v: float) -> bool:
-        return (
-            v != v
-            and _struct.unpack("<Q", _struct.pack("<d", v))[0]
-            == STALE_NAN_BITS
-        )
 
     def kernel(batches):
         import pandas as pd
 
         for pdf in batches:
             rows = []
-            for blob in pdf[payload_col]:
+            for blob in pdf["content"]:
                 with malformed_payload("remote_write"):
                     raw = bytes(blob)
                     if compressed:
                         raw = snappy_decompress(raw)
-                    decoded = decoder(raw)
-                    hist_series = (
-                        decode_write_request_histograms(raw, proto)
-                        if native_histograms == "classic" else ()
-                    )
-                for labels, samples in decoded:
+                    decoded = decode_write_request(raw, proto)
+                for labels, samples, hists, _ in decoded:
                     name = labels.pop("__name__", None)
                     if name is None:
                         raise ValueError(
                             "remote_write: series without __name__ "
                             f"label (labels: {sorted(labels)[:5]})"
                         )
-                    if drop_stale:
-                        samples = [
-                            (ts, v) for ts, v in samples
-                            if not _is_stale(v)
-                        ]
                     key = _series_key(name, labels)
                     lk = sorted(labels)
                     lv = [labels[k] for k in lk]
-                    for ts, val in samples:
-                        rows.append(
-                            (name, lk, lv, key, val, ts * mult)
-                        )
-                for labels, hists in hist_series:
-                    labels = dict(labels)
-                    name = labels.pop("__name__", None)
-                    if name is None:
-                        raise ValueError(
-                            "remote_write: histogram series "
-                            "without __name__ label"
-                        )
-
-                    def emit(n, extra, ts, v):
-                        lbs = dict(labels)
-                        lbs.update(extra)
-                        k2 = sorted(lbs)
-                        rows.append(
-                            (
+                    rows += [
+                        (name, lk, lv, key, val, ts * mult)
+                        for ts, val in samples if not _is_stale(val)
+                    ]
+                    for ts, count, hsum, ladder in hists:
+                        series = [
+                            (f"{name}_bucket", {"le": repr(float(le))}, cum)
+                            for le, cum in ladder
+                        ]
+                        series += [
+                            (f"{name}_bucket", {"le": "+Inf"}, count),
+                            (f"{name}_sum", {}, hsum),
+                            (f"{name}_count", {}, count),
+                        ]
+                        for n, extra, v in series:
+                            lbs = {**labels, **extra}
+                            k2 = sorted(lbs)
+                            rows.append((
                                 n, k2, [lbs[x] for x in k2],
                                 _series_key(n, lbs), v, ts * mult,
-                            )
-                        )
-
-                    for ts, count, hsum, ladder in hists:
-                        for le, cum in ladder:
-                            emit(
-                                f"{name}_bucket",
-                                {"le": repr(float(le))},
-                                ts, cum,
-                            )
-                        emit(
-                            f"{name}_bucket", {"le": "+Inf"},
-                            ts, count,
-                        )
-                        emit(f"{name}_sum", {}, ts, hsum)
-                        emit(f"{name}_count", {}, ts, count)
+                            ))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in PARSED_SCHEMA.fields]
             )
 
     return (
-        blobs.select(F.col(payload_col))
+        blobs.select("content")
         .mapInPandas(kernel, PARSED_SCHEMA)
         .select(
             "name",
@@ -997,7 +729,6 @@ def ingest_remote_write(
     value_type: str = "f64",
     compressed: bool = True,
     proto: str = "1",
-    stale_markers: str = "drop",
 ) -> int:
     """Ingest remote_write payload(s) into `conn`. `source` is a single
     request body (bytes — the HTTP POST shape), a path/glob of blob
@@ -1016,7 +747,7 @@ def ingest_remote_write(
     negotiates it from Content-Type)."""
     parsed = parse_remote_write(
         _read_blobs(conn, source), ts_unit=ts_unit,
-        compressed=compressed, proto=proto, stale_markers=stale_markers,
+        compressed=compressed, proto=proto,
     )
     return _ingest_parsed(conn, parsed, value_type)
 
@@ -1046,11 +777,8 @@ def render_remote_write(
         raise ValueError(
             f"ts_unit must be one of {sorted(_UNIT_NS)}, got {ts_unit!r}"
         )
-    if proto not in ("1", "2"):
+    if proto not in _FIELDS:
         raise ValueError(f"proto must be '1' or '2', got {proto!r}")
-    encoder = (
-        encode_write_request if proto == "1" else encode_write_request_v2
-    )
     div = _UNIT_NS[ts_unit]
     cols = [
         F.col(name_col).alias("__n"),
@@ -1086,8 +814,9 @@ def render_remote_write(
                 per.setdefault(tuple(sorted(labels.items())), []).append(
                     (int(t), float(v))
                 )
-            body = encoder(
-                [(dict(k), sorted(v)) for k, v in sorted(per.items())]
+            body = encode_write_request(
+                [(dict(k), sorted(v)) for k, v in sorted(per.items())],
+                proto,
             )
             if compress:
                 body = snappy_compress(body)

@@ -204,8 +204,12 @@ def _read_blobs(conn, source) -> DataFrame:
 # what a malformed body can raise in a binary decoder besides a plain
 # ValueError: invalid UTF-8 in a label (a ValueError subclass, but named
 # as its own class in the worker's traceback), a short struct, a body
-# that is not gzip or is cut short
-_MALFORMED = (UnicodeDecodeError, struct.error, EOFError, OSError, zlib.error)
+# that is not gzip or is cut short, a histogram bucket index whose
+# upper bound overflows a double
+_MALFORMED = (
+    UnicodeDecodeError, struct.error, EOFError, OSError, zlib.error,
+    OverflowError,
+)
 
 
 @contextmanager

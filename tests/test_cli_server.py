@@ -1316,20 +1316,27 @@ def test_receiver_error_classification(tmp_path, spark, monkeypatch):
 def test_receiver_malformed_body_is_400(tmp_path, spark):
     """A body the decoders cannot read is the client's fault whatever
     the decoder raises on it (invalid UTF-8 in a label, a body that is
-    not gzip or is cut short): 400, never a 5xx a sender would retry."""
+    not gzip or is cut short, a native histogram schema out of range):
+    400, never a 5xx a sender would retry."""
     from urllib.parse import quote
 
     import tachyon_spark.server as srv_mod
     from tachyon_spark.connection import Connection
-    from tests.test_ingest_pipeline import MALFORMED
+    from tests.test_ingest_pipeline import MALFORMED, OUT_OF_RANGE
 
     db = str(tmp_path / "malformed_db")
     srv_mod._connections[db] = Connection(db, spark)
     srv = serve(port=0)
     port = srv.server_address[1]
     path = {"remote_write": "/api/v1/write", "otlp": "/v1/metrics"}
+    cases = [
+        (fmt, body, kwargs, f"{fmt}: malformed payload: ")
+        for fmt, body, kwargs in MALFORMED
+    ]
+    fmt, body, _ = OUT_OF_RANGE[0]  # the schema -53 native histogram
+    cases.append((fmt, body, {}, "remote_write: native histogram schema"))
     try:
-        for fmt, body, kwargs in MALFORMED:
+        for fmt, body, kwargs, error in cases:
             headers = {"Content-Encoding": kwargs.get("encoding", "")}
             req = urllib.request.Request(
                 f"http://127.0.0.1:{port}{path[fmt]}?path={quote(db)}"
@@ -1340,9 +1347,7 @@ def test_receiver_malformed_body_is_400(tmp_path, spark):
             with pytest.raises(urllib.error.HTTPError) as ei:
                 urllib.request.urlopen(req)
             assert ei.value.code == 400, (fmt, kwargs)
-            assert json.load(ei.value)["error"].startswith(
-                f"{fmt}: malformed payload: "
-            )
+            assert json.load(ei.value)["error"].startswith(error)
     finally:
         srv.shutdown()
 

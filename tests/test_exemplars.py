@@ -13,8 +13,7 @@ from tachyon_spark.exemplars import (
     query_exemplars,
 )
 from tachyon_spark.sources.remote_write import (
-    decode_write_request_exemplars,
-    decode_write_request_exemplars_v2,
+    decode_write_request,
     encode_write_request,
     ingest_remote_write,
     snappy_compress,
@@ -51,14 +50,20 @@ def _v1_with_exemplar() -> bytes:
     return _ld(1, ts_msg)
 
 
+def _exemplars(decoded):
+    """The (labels, exemplars) of decode_write_request's series that
+    carry exemplars."""
+    return [(labels, exs) for labels, _, _, exs in decoded if exs]
+
+
 def test_decode_v1_exemplars():
-    assert decode_write_request_exemplars(_v1_with_exemplar()) == [
+    assert _exemplars(decode_write_request(_v1_with_exemplar())) == [
         ({"__name__": "up", "job": "api"},
          [({"trace_id": "abc"}, 42, 7.5)])
     ]
     # series without exemplars are omitted entirely
     plain = encode_write_request([({"__name__": "m"}, [(1, 1.0)])])
-    assert decode_write_request_exemplars(plain) == []
+    assert _exemplars(decode_write_request(plain)) == []
 
 
 def test_decode_v2_exemplars():
@@ -74,13 +79,13 @@ def test_decode_v2_exemplars():
     )
     ts_msg = _ld(1, bytes([1, 2])) + _ld(4, ex)
     req += _ld(5, ts_msg)
-    assert decode_write_request_exemplars_v2(req) == [
+    assert _exemplars(decode_write_request(req, proto="2")) == [
         ({"__name__": "up"}, [({"trace_id": "abc"}, 9, 2.5)])
     ]
 
 
 def test_decode_otlp_exemplars_number_and_histogram():
-    from tachyon_spark.sources.otlp import decode_export_metric_exemplars
+    from tachyon_spark.sources.otlp import decode_export_metrics
 
     # gauge point with an exemplar carrying trace/span ids
     ex = (
@@ -110,7 +115,7 @@ def test_decode_otlp_exemplars_number_and_histogram():
     )
     hmetric = _ld(1, b"lat") + _ld(9, _ld(1, hpt))
     req = _ld(1, _ld(2, _ld(2, metric) + _ld(2, hmetric)))
-    out = decode_export_metric_exemplars(req)
+    _, out = decode_export_metrics(req)
     assert ("g", {"h": "a"},
             [({"span_id": "0102030405060708", "trace_id": "aa" * 16},
               5, 0.42)]) in out

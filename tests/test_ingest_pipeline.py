@@ -91,6 +91,9 @@ def test_malformed_blob_is_value_error(db):
     for fmt, body, kwargs in MALFORMED:
         with pytest.raises(ValueError, match=f"^{fmt}: malformed payload: "):
             INGEST[fmt](db, body, **kwargs)
+    for fmt, body, msg in OUT_OF_RANGE:
+        with pytest.raises(ValueError, match=f"^{msg}"):
+            INGEST[fmt](db, body)
     assert sorted(s.name for s in db.catalog.all_streams()) == before
 
 
@@ -113,6 +116,36 @@ MALFORMED = [
     ("otlp", _bad_utf8(_OTLP_BODY), {}),
     ("otlp", _OTLP_BODY, {"encoding": "gzip"}),  # not gzip
     ("otlp", gzip.compress(_OTLP_BODY, mtime=0)[:-4], {}),  # cut short
+    # scale 0 is in range, but bucket 2000's upper bound 2^2001
+    # overflows a double
+    ("otlp", encode_export_metrics([({}, [(
+        "eh", "exponential_histogram",
+        [({}, 1, 1, 1.0, 0, 0, 0.0, (2000, [1]), (0, []))],
+    )])]), {}),
+]
+
+
+def _ld(fno: int, body: bytes) -> bytes:
+    return bytes([fno << 3 | 2, len(body)]) + body
+
+
+# (format, body, error) of a histogram whose bucket scale is out of
+# range: Prometheus 3's custom-bucket schema -53 on a native histogram
+# (count 1, one positive bucket at index 1), and an OTLP exponential
+# histogram at scale -100; base^index overflows a double for both
+_SCHEMA_53 = (
+    bytes([1 << 3 | 0, 1, 4 << 3 | 0, 105])  # count 1, zigzag(-53)
+    + _ld(11, bytes([1 << 3 | 0, 2, 2 << 3 | 0, 1]))  # span offset 1, len 1
+    + _ld(12, bytes([2]))  # delta 1
+)
+OUT_OF_RANGE = [
+    ("remote_write", snappy_compress(_ld(1, (
+        _ld(1, _ld(1, b"__name__") + _ld(2, b"nh")) + _ld(4, _SCHEMA_53)
+    ))), "remote_write: native histogram schema -53 outside \\[-4, 8\\]"),
+    ("otlp", encode_export_metrics([({}, [(
+        "eh", "exponential_histogram",
+        [({}, 1, 1, 1.0, -100, 0, 0.0, (0, [1]), (0, []))],
+    )])]), "otlp: exponential histogram scale -100 outside \\[-10, 20\\]"),
 ]
 
 

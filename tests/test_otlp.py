@@ -54,7 +54,7 @@ def _hand_request() -> bytes:
 
 
 def test_decode_hand_built_request():
-    out = decode_export_metrics(_hand_request())
+    out, _ = decode_export_metrics(_hand_request())
     assert out == [
         ("up", {"job": "api", "env": "prod"}, 1000, 1.5, None),
         ("up", {"job": "api"}, 2000, None, -7),
@@ -80,7 +80,7 @@ def test_decode_skips_unknown_fields():
         + _ld(3, b"https://schema")
     )
     req = bytes([7 << 3 | 0, 42]) + _ld(1, rm)
-    out = decode_export_metrics(req)
+    out, _ = decode_export_metrics(req)
     assert out == [("m", {"job": "v"}, 10, 2.0, None)]
 
 
@@ -102,7 +102,7 @@ def test_round_trip_all_kinds():
             )
         ]
     )
-    out = decode_export_metrics(req)
+    out, _ = decode_export_metrics(req)
     base = {"job": "prod/api", "instance": "i-1"}
     assert ("cpu", {**base, "core": "0"}, 1000, 0.5, None) in out
     # int64 sums stay exact past 2^53
@@ -125,7 +125,7 @@ def test_point_attrs_win_over_resource():
         [({"service.name": "svc"},
           [("m", "gauge", [({"job": "override"}, 1, 2.0)])])]
     )
-    assert decode_export_metrics(req) == [
+    assert decode_export_metrics(req)[0] == [
         ("m", {"job": "override"}, 1, 2.0, None)
     ]
 
@@ -152,7 +152,7 @@ def test_any_value_kinds():
         pt += _ld(7, kv)
     metric = _ld(1, b"m") + _ld(5, _ld(1, pt))
     req = _ld(1, _ld(2, _ld(2, metric)))
-    (sample,) = decode_export_metrics(req)
+    (sample,), _ = decode_export_metrics(req)
     assert sample[1] == {
         "b": "true", "i": "42", "d": "2.5", "y": "dead", "a": "[x,7]"
     }
@@ -413,7 +413,7 @@ def test_exponential_histogram_translation():
                 [({"r": "/x"}, 100, 11, 25.5, 0, 4, 1e-9,
                   (1, [3, 2]), (0, [1, 1]))])])]
     )
-    out = decode_export_metrics(req)
+    out, _ = decode_export_metrics(req)
     buckets = [(s[1]["le"], s[4]) for s in out if s[0] == "eh_bucket"]
     # ascending le: most-negative first, zero bucket, positives, +Inf
     assert buckets == [
@@ -432,7 +432,7 @@ def test_exponential_histogram_negative_scale_and_offset():
                 [({}, 5, 7, 1.0, -1, 0, 0.0,
                   (-2, [5, 0, 2]), (0, []))])])]
     )
-    out = decode_export_metrics(req)
+    out, _ = decode_export_metrics(req)
     buckets = [(s[1]["le"], s[4]) for s in out if s[0] == "eh2_bucket"]
     assert buckets == [("0.25", 5), ("4.0", 7), ("+Inf", 7)]
 

@@ -688,20 +688,21 @@ def test_remote_write_v1_codec_roundtrip(series):
 
     blob = snappy_compress(encode_write_request(series))
     got = decode_write_request(snappy_decompress(blob))
-    assert got == [(labels, pts) for labels, pts in series]
+    assert [(labels, pts) for labels, pts, _, _ in got] == [
+        (labels, pts) for labels, pts in series
+    ]
 
 
 @settings(deadline=None, max_examples=60)
 @given(series=wire_series)
 def test_remote_write_v2_codec_roundtrip(series):
     from tachyon_spark.sources.remote_write import (
-        decode_write_request_v2,
-        encode_write_request_v2,
+        decode_write_request,
+        encode_write_request,
     )
 
-    assert decode_write_request_v2(
-        encode_write_request_v2(series)
-    ) == series
+    got = decode_write_request(encode_write_request(series, "2"), "2")
+    assert [(labels, pts) for labels, pts, _, _ in got] == series
 
 
 @settings(deadline=None, max_examples=60)
@@ -728,7 +729,7 @@ def test_otlp_gauge_codec_roundtrip(series):
         )
         for labels, pts in series
     ]
-    out = decode_export_metrics(encode_export_metrics([({}, metrics)]))
+    out, _ = decode_export_metrics(encode_export_metrics([({}, metrics)]))
     expect = [
         (name, attrs, ts, None if isinstance(v, int) else v,
          v if isinstance(v, int) else None)

@@ -104,8 +104,13 @@ def _hand_write_request() -> bytes:
     return ld(1, ts_msg)
 
 
+def _samples(decoded):
+    """The (labels, samples) halves of decode_write_request's series."""
+    return [(labels, samples) for labels, samples, _, _ in decoded]
+
+
 def test_decode_hand_built_write_request():
-    series = decode_write_request(_hand_write_request())
+    series = _samples(decode_write_request(_hand_write_request()))
     assert len(series) == 1
     labels, samples = series[0]
     assert labels == {"__name__": "up", "job": "api"}
@@ -125,7 +130,9 @@ def test_proto_round_trip_signed_timestamps():
         ({"__name__": "m", "dc": "x"}, [(-1234567890123, 3.5), (0, -0.0)]),
         ({"__name__": "n"}, [(1 << 40, 7.0)]),
     ]
-    assert decode_write_request(encode_write_request(series)) == series
+    assert _samples(decode_write_request(encode_write_request(series))) == (
+        series
+    )
 
 
 # --------------------------------------------------------- spark parse
@@ -371,69 +378,56 @@ def _hand_v2_request() -> bytes:
 
 
 def test_decode_v2_hand_built():
-    from tachyon_spark.sources.remote_write import decode_write_request_v2
-
-    assert decode_write_request_v2(_hand_v2_request()) == [
+    assert _samples(decode_write_request(_hand_v2_request(), "2")) == [
         ({"__name__": "up", "job": "api"}, [(7, 1.5)])
     ]
 
 
 def test_v2_round_trip():
-    from tachyon_spark.sources.remote_write import (
-        decode_write_request_v2,
-        encode_write_request_v2,
-    )
-
     series = [
         ({"__name__": "m", "dc": "x"}, [(-12345, 3.5), (0, -0.0)]),
         ({"__name__": "m", "dc": "y"}, [(1 << 40, 7.0)]),  # dc interned once
         ({"__name__": "n"}, [(5, 2.0)]),
     ]
-    enc = encode_write_request_v2(series)
-    assert decode_write_request_v2(enc) == series
+    enc = encode_write_request(series, proto="2")
+    assert _samples(decode_write_request(enc, proto="2")) == series
     # interning actually dedups: "dc" and "m" appear once in the wire
     assert enc.count(b"dc") == 1 and enc.count(b"\x01m") == 1
 
 
 def test_v2_spec_violations_raise():
-    from tachyon_spark.sources.remote_write import (
-        decode_write_request_v2,
-        encode_write_request_v2,
-    )
-
     def ld(fno, body):
         return bytes([fno << 3 | 2, len(body)]) + body
 
     # symbols[0] not empty
     bad0 = ld(4, b"x") + ld(5, ld(1, bytes([0, 0])))
     with pytest.raises(ValueError, match="symbols\\[0\\]"):
-        decode_write_request_v2(bad0)
+        decode_write_request(bad0, proto="2")
     # odd labels_refs arity
     odd = ld(4, b"") + ld(4, b"a") + ld(5, ld(1, bytes([1])))
     with pytest.raises(ValueError, match="pairs"):
-        decode_write_request_v2(odd)
+        decode_write_request(odd, proto="2")
     # ref out of range
     oor = ld(4, b"") + ld(5, ld(1, bytes([0, 9])))
     with pytest.raises(ValueError, match="out of range"):
-        decode_write_request_v2(oor)
+        decode_write_request(oor, proto="2")
     # the 1.0 decoder is NOT an acceptable fallback for v2 bytes (the
     # spec forbids sniffing): v2 payloads simply decode to zero series
     # under the 1.0 walk, and parse_remote_write(proto=...) selects
     assert decode_write_request(
-        encode_write_request_v2([({"__name__": "m"}, [(1, 1.0)])])
+        encode_write_request([({"__name__": "m"}, [(1, 1.0)])], proto="2")
     ) == []
 
 
 def test_ingest_v2_end_to_end(db):
-    from tachyon_spark.sources.remote_write import encode_write_request_v2
-
     body = snappy_compress(
-        encode_write_request_v2(
+        encode_write_request(
             [
                 ({"__name__": "rw2_cpu", "host": "a"},
                  [(10, 0.5), (20, 0.7)]),
                 ({"__name__": "rw2_cpu", "host": "b"}, [(10, 1.0)]),
-            ]
+            ],
+            proto="2",
         )
     )
     n = ingest_remote_write(db, body, ts_unit="ns", proto="2")
@@ -448,7 +442,6 @@ def test_http_v2_content_type_negotiation(spark, tmp_path):
 
     from tachyon_spark.connection import Connection
     from tachyon_spark import server as srv
-    from tachyon_spark.sources.remote_write import encode_write_request_v2
 
     conn = Connection(str(tmp_path / "rw2db"), spark)
     httpd = srv.serve(port=0)
@@ -457,8 +450,9 @@ def test_http_v2_content_type_negotiation(spark, tmp_path):
         t = threading.Thread(target=httpd.serve_forever, daemon=True)
         t.start()
         body = snappy_compress(
-            encode_write_request_v2(
-                [({"__name__": "http_rw2"}, [(100, 3.5), (200, 4.5)])]
+            encode_write_request(
+                [({"__name__": "http_rw2"}, [(100, 3.5), (200, 4.5)])],
+                proto="2",
             )
         )
         req = Request(
@@ -511,18 +505,6 @@ def test_stale_markers_dropped_by_default(db):
     # a number", and crucially the ROW is present where the marker's is
     # not)
     assert v is None or v != v
-    # keep mode stores the marker verbatim
-    n2 = ingest_remote_write(
-        db,
-        snappy_compress(
-            encode_write_request(
-                [({"__name__": "rw_stale2"}, [(5, stale)])]
-            )
-        ),
-        ts_unit="ns",
-        stale_markers="keep",
-    )
-    assert n2 == 1
 
 
 def test_render_parse_round_trip_v2(spark):
@@ -544,33 +526,42 @@ def test_render_parse_round_trip_v2(spark):
 
 # ------------------------------------------------- native histograms
 
-def _native_histogram_ts() -> bytes:
+def _ld(fno, body):
+    return bytes([fno << 3 | 2, len(body)]) + body
+
+
+def _native_histogram(schema: int = 0) -> bytes:
+    """A native Histogram message: count=9, sum=5.5, zero_count=2
+    (thr 0), positive span offset 0 len 2 with int deltas [3, 1]
+    (counts 3, 4) @ ts=7; `schema` 0 is base 2."""
+    zz = (schema << 1) ^ (schema >> 31)  # sint32 zigzag
+    return (
+        bytes([1 << 3 | 0, 9])
+        + bytes([3 << 3 | 1]) + struct.pack("<d", 5.5)
+        + bytes([4 << 3 | 0, zz])
+        + bytes([6 << 3 | 0, 2])
+        + _ld(11, bytes([1 << 3 | 0, 0, 2 << 3 | 0, 2]))  # the span
+        + _ld(12, bytes([6, 2]))  # zigzag(3)=6, zigzag(1)=2
+        + bytes([15 << 3 | 0, 7])
+    )
+
+
+def _native_histogram_ts(schema: int = 0) -> bytes:
     """TimeSeries{__name__=nh} with ONE native histogram: schema 0
     (base 2), count=9, sum=5.5, zero_count=2 (thr 0), positive span
     offset 0 len 2 with int deltas [3, 1] (counts 3, 4) @ ts=7."""
-    def ld(fno, body):
-        return bytes([fno << 3 | 2, len(body)]) + body
+    lab = _ld(1, _ld(1, b"__name__") + _ld(2, b"nh"))
+    return _ld(1, lab + _ld(4, _native_histogram(schema)))
 
-    span = ld(11, bytes([1 << 3 | 0, 0, 2 << 3 | 0, 2]))
-    hist = (
-        bytes([1 << 3 | 0, 9])
-        + bytes([3 << 3 | 1]) + struct.pack("<d", 5.5)
-        + bytes([4 << 3 | 0, 0])
-        + bytes([6 << 3 | 0, 2])
-        + span
-        + ld(12, bytes([6, 2]))  # zigzag(3)=6, zigzag(1)=2
-        + bytes([15 << 3 | 0, 7])
-    )
-    lab = ld(1, ld(1, b"__name__") + ld(2, b"nh"))
-    return ld(1, lab + ld(4, hist))
+
+def _histograms(decoded):
+    """The (labels, histograms) of decode_write_request's series that
+    carry native histograms."""
+    return [(labels, hists) for labels, _, hists, _ in decoded if hists]
 
 
 def test_decode_native_histograms():
-    from tachyon_spark.sources.remote_write import (
-        decode_write_request_histograms,
-    )
-
-    out = decode_write_request_histograms(_native_histogram_ts())
+    out = _histograms(decode_write_request(_native_histogram_ts()))
     assert out == [
         ({"__name__": "nh"},
          # ladder: zero bucket (le=0.0, cum 2), idx0 -> le base^0=1.0
@@ -590,24 +581,9 @@ def test_ingest_native_histograms_classic(db):
     # histogram_quantile works over the translated ladder
     assert len(db.query(
         "histogram_quantile(0.5, nh_bucket)", 0, 100).rows()) == 1
-    # skip mode: nothing but the (absent) plain samples
-    import tempfile, os
-    from tachyon_spark.connection import Connection
-
-    c2 = Connection(os.path.join(tempfile.mkdtemp(), "db"), db.spark)
-    from tachyon_spark.sources.remote_write import parse_remote_write
-
-    blobs = db.spark.createDataFrame([(body,)], "content binary")
-    assert parse_remote_write(
-        blobs, ts_unit="ns", native_histograms="skip"
-    ).count() == 0
 
 
 def test_decode_native_histograms_v2():
-    from tachyon_spark.sources.remote_write import (
-        decode_write_request_histograms,
-    )
-
     def ld(fno, body):
         return bytes([fno << 3 | 2, len(body)]) + body
 
@@ -622,8 +598,90 @@ def test_decode_native_histograms_v2():
         ld(4, b"") + ld(4, b"__name__") + ld(4, b"nh2")
         + ld(5, ld(1, bytes([1, 2])) + ld(3, hist))
     )
-    out = decode_write_request_histograms(req, proto="2")
+    out = _histograms(decode_write_request(req, proto="2"))
     assert out == [
         ({"__name__": "nh2"},
          [(7, 9.0, 5.5, [(0.0, 2.0), (1.0, 5.0), (2.0, 9.0)])])
     ]
+
+
+# ------------------------------------------- one series, all three kinds
+
+_SAMPLE = bytes([0x09]) + struct.pack("<d", 0.5) + bytes([0x10, 7])
+# an Exemplar's value (2) and timestamp (3); its labels (1) go first
+_EXEMPLAR_VALUE_TS = bytes([0x11]) + struct.pack("<d", 3.0) + bytes([0x18, 7])
+ALL_KINDS = [(
+    {"__name__": "nhx"},
+    [(7, 0.5)],
+    [(7, 9.0, 5.5, [(0.0, 2.0), (1.0, 5.0), (2.0, 9.0)])],
+    [({"trace_id": "t1"}, 7, 3.0)],
+)]
+
+
+def _all_kinds_v1() -> bytes:
+    """v1 WriteRequest: one TimeSeries{__name__=nhx} carrying a sample
+    (field 2), a native histogram (4) and an exemplar (3), the exemplar
+    last on the wire."""
+    ex = _ld(1, _ld(1, b"trace_id") + _ld(2, b"t1")) + _EXEMPLAR_VALUE_TS
+    ts = (
+        _ld(1, _ld(1, b"__name__") + _ld(2, b"nhx"))
+        + _ld(2, _SAMPLE) + _ld(4, _native_histogram()) + _ld(3, ex)
+    )
+    return _ld(1, ts)
+
+
+def _all_kinds_v2() -> bytes:
+    """The same series as a v2 Request (symbols 4, series 5; histograms
+    3, exemplars 4; labels as symbol-ref pairs)."""
+    syms = b"".join(
+        _ld(4, s) for s in (b"", b"__name__", b"nhx", b"trace_id", b"t1")
+    )
+    ex = _ld(1, bytes([3, 4])) + _EXEMPLAR_VALUE_TS
+    ts = (
+        _ld(1, bytes([1, 2])) + _ld(2, _SAMPLE)
+        + _ld(3, _native_histogram()) + _ld(4, ex)
+    )
+    return syms + _ld(5, ts)
+
+
+def test_decode_series_with_all_three_kinds():
+    assert decode_write_request(_all_kinds_v1()) == ALL_KINDS
+    assert decode_write_request(_all_kinds_v2(), proto="2") == ALL_KINDS
+
+
+@pytest.mark.parametrize("proto", ["1", "2"])
+def test_parse_series_with_all_three_kinds(spark, proto):
+    body = _all_kinds_v1() if proto == "1" else _all_kinds_v2()
+    blobs = spark.createDataFrame([(snappy_compress(body),)], "content binary")
+    rows = parse_remote_write(blobs, ts_unit="ns", proto=proto).collect()
+    # the sample, then the histogram's 3 ladder buckets, +Inf, sum, count
+    got = sorted(
+        (r.name, r.labels.get("le", ""), r.ts, r.value) for r in rows
+    )
+    assert got == [
+        ("nhx", "", 7, 0.5),
+        ("nhx_bucket", "+Inf", 7, 9.0),
+        ("nhx_bucket", "0.0", 7, 2.0),
+        ("nhx_bucket", "1.0", 7, 5.0),
+        ("nhx_bucket", "2.0", 7, 9.0),
+        ("nhx_count", "", 7, 9.0),
+        ("nhx_sum", "", 7, 5.5),
+    ]
+
+
+def test_histogram_schema_out_of_range_raises():
+    # -53 is the custom-bucket schema Prometheus 3 sends; its buckets
+    # are not exponential
+    for schema in (-53, -5, 9):
+        with pytest.raises(ValueError, match="schema .* outside"):
+            decode_write_request(_native_histogram_ts(schema))
+
+
+def test_histogram_span_lengths_checked_before_expansion():
+    # a span claiming 2^40 buckets with no counts is refused at once,
+    # not expanded bucket by bucket
+    span = _ld(11, bytes([1 << 3 | 0, 0, 2 << 3 | 0]) + bytes(
+        [0x80, 0x80, 0x80, 0x80, 0x80, 0x20]))  # length 2^40 (varint)
+    ts = _ld(1, _ld(1, b"__name__") + _ld(2, b"nh")) + _ld(4, span)
+    with pytest.raises(ValueError, match="span lengths disagree"):
+        decode_write_request(_ld(1, ts))
